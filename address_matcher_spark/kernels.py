@@ -12,9 +12,10 @@ kernel importable inside Arrow-batched pandas UDFs.
 
 Design notes for scale:
   * no per-call allocation beyond small dicts; bit-parallel LCS is O(n*m/64)
-  * batch entry points (`token_set_ratio_batch`, ...) deduplicate repeated
-    strings within an Arrow batch (blocks repeat the same reference rows
-    many times), so the per-unique-pair kernel runs once per distinct pair.
+  * batch entry points (`ratio_batch`, `jaro_winkler_batch`) deduplicate
+    repeated strings within an Arrow batch (blocks repeat the same
+    reference rows many times), so the per-unique-pair kernel runs once
+    per distinct pair.
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ __all__ = [
     "levenshtein_grid",
     "levenshtein_sim_grid",
     "ratio_batch",
-    "token_set_ratio_batch",
     "jaro_winkler_batch",
 ]
 
@@ -237,42 +237,6 @@ def _batch_apply(left, right, fn) -> np.ndarray:
 
 def ratio_batch(left, right) -> np.ndarray:
     return _batch_apply(left, right, ratio)
-
-
-def _tsr_pair(ta: frozenset, tb: frozenset, cutoff: float | None) -> float:
-    """token_set_ratio over pre-split token sets, with an upper-bound prune
-    that skips the O(n*m/64) LCS whenever no branch can reach the cutoff."""
-    if not ta or not tb:
-        return 0.0
-    intersect = ta & tb
-    diff_ab = ta - tb
-    diff_ba = tb - ta
-    if intersect and (not diff_ab or not diff_ba):
-        return 100.0
-    diff_ab_joined = " ".join(sorted(diff_ab))
-    diff_ba_joined = " ".join(sorted(diff_ba))
-    ab_len = len(diff_ab_joined)
-    ba_len = len(diff_ba_joined)
-    sect_len = len(" ".join(intersect))
-    one = 1 if sect_len else 0
-    sect_ab_len = sect_len + one + ab_len
-    sect_ba_len = sect_len + one + ba_len
-    sect_ab_ratio = (1.0 - (one + ab_len) / (sect_len + sect_ab_len)) * 100.0
-    sect_ba_ratio = (1.0 - (one + ba_len) / (sect_len + sect_ba_len)) * 100.0
-    best_sect = sect_ab_ratio if sect_ab_ratio >= sect_ba_ratio else sect_ba_ratio
-    if cutoff is not None:
-        # indel similarity of the diffs is at most 2*min/(len_a+len_b)
-        lensum = ab_len + ba_len
-        bound = (
-            200.0 * (ab_len if ab_len < ba_len else ba_len) / lensum
-            if lensum else 100.0
-        )
-        if best_sect < cutoff and bound < cutoff:
-            return 0.0
-        if best_sect >= cutoff and bound <= best_sect:
-            return best_sect
-    r = ratio(diff_ab_joined, diff_ba_joined)
-    return r if r > best_sect else best_sect
 
 
 def tsr_presplit(ta: frozenset, tb: frozenset, chars_a: int, chars_b: int,
@@ -737,35 +701,6 @@ def cross_token_set_scores(
     keep = score >= cutoff
     il, jr = np.nonzero(keep)
     return il, jr, score[il, jr]
-
-
-def token_set_ratio_batch(left, right, cutoff: float | None = None) -> np.ndarray:
-    """Batched token_set_ratio: tokenization cached per unique string,
-    scores cached per unique pair, LCS pruned via cutoff bounds.
-    None/NaN score as '' — normalized BEFORE factorize (see
-    _norm_str_array; factorize's -1 missing code otherwise corrupts the
-    pair-key indexing)."""
-    import pandas as pd
-
-    left = _norm_str_array(left)
-    right = _norm_str_array(right)
-    n = len(left)
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    lcodes, luniq = pd.factorize(left)
-    rcodes, runiq = pd.factorize(right)
-    ltoks = [frozenset(s.split()) for s in luniq]
-    rtoks = [frozenset(s.split()) for s in runiq]
-    width = len(runiq) if len(runiq) else 1
-    key = lcodes.astype(np.int64) * width + rcodes
-    pair_codes, pair_keys = pd.factorize(key)
-    uniq = np.empty(len(pair_keys), dtype=np.float64)
-    for k, pk in enumerate(pair_keys):
-        s = _tsr_pair(ltoks[int(pk) // width], rtoks[int(pk) % width], cutoff)
-        if cutoff is not None and s < cutoff:
-            s = 0.0
-        uniq[k] = s
-    return uniq[pair_codes]
 
 
 def jaro_winkler_batch(left, right) -> np.ndarray:

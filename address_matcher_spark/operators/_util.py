@@ -77,9 +77,10 @@ def should_broadcast(df: DataFrame, max_bytes: int, n_rows: int | None = None) -
 
 
 def scoring_npart(spark, residue_rows: int | None = None) -> int:
-    """Partition count for the cogrouped fuzzy scoring stage: flat
-    defaultParallelism, RE-MEASURED after the round-5 exact matrix char
-    bound made the kernel ~10× faster per pair.
+    """Partition count for the cogrouped scoring stage of both scorers
+    (blocked.candidates): flat defaultParallelism, RE-MEASURED after the
+    round-5 exact matrix char bound made the fuzzy kernel ~10× faster per
+    pair.
 
     History: with the old kernel the stage was kernel-dominated and the
     last-wave straggler tail (∝ 1/(npart/dp) waves) was ~10% of the

@@ -19,6 +19,8 @@ Replaces the reference's per-postcode Python loop + greedy batch packer
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,63 +47,13 @@ def salt_target_pairs_for(spark, cfg) -> int:
     measures the target flat within noise from 62.5k to 1M at both
     local[8] and local[32], with 250k the consistent best at both
     widths and at 324M pairs (47M pairs/s).  250k also keeps the
-    replicated-ref salt factor small (choose_salt_cross caps the heavy
-    block's product per group, so ref replication ∝ pairs/target)."""
+    grid salting's replication small (salt_for_cogroup_adaptive splits
+    a heavy block into ~pairs/target groups, and each side is replicated
+    across that group grid)."""
     explicit = getattr(cfg, "salt_target_pairs", None)
     if explicit is not None:
         return explicit
     return 250_000
-
-
-def choose_salt(search: DataFrame, key: str, target_block_rows: int = 5000,
-                max_salt: int = 64) -> int:
-    """Pick the salt factor from the measured block-key histogram: enough
-    to split the heaviest block to ~target_block_rows rows per task."""
-    top = (
-        search.groupBy(key).count()
-        .agg(F.max("count").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    if top is None:
-        return 1
-    salt = int((top + target_block_rows - 1) // target_block_rows)
-    return max(1, min(salt, max_salt))
-
-
-def choose_salt_cross(search: DataFrame, ref: DataFrame, key: str,
-                      target_pairs: int = 1_000_000,
-                      max_salt: int = 256) -> int:
-    """Salt factor for cogrouped cross-scoring: measured from the largest
-    block's CROSS-PRODUCT size (search_rows × ref_rows), since the scoring
-    cost per group is the product, not the row count.  Splitting the
-    search side S ways caps each salt-group at ~max_product/S comparisons."""
-    sh = search.groupBy(key).count().withColumnRenamed("count", "sc")
-    rh = ref.groupBy(key).count().withColumnRenamed("count", "rc")
-    mx = (
-        sh.join(rh, key)
-        .agg(F.max(F.col("sc") * F.col("rc")).alias("mx"))
-        .collect()[0]["mx"]
-    )
-    if not mx:
-        return 1
-    return max(1, min(int((mx + target_pairs - 1) // target_pairs), max_salt))
-
-
-def salt_for_cogroup(search: DataFrame, ref: DataFrame, salt: int,
-                     salt_id_col: str = "record_id"):
-    """Uniform salting: split the search side into salt groups and
-    replicate the ref side into every group (the cogroup analogue of the
-    salted join).  Prefer salt_for_cogroup_adaptive, which only salts the
-    blocks that need it."""
-    if salt <= 1:
-        return search, ref, []
-    s = search.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_id_col)), F.lit(salt)).cast("int")
-    )
-    r = ref.withColumn(
-        "__salt", F.explode(F.array([F.lit(i) for i in range(salt)]))
-    )
-    return s, r, ["__salt"]
 
 
 def salt_for_cogroup_adaptive(
@@ -194,8 +146,8 @@ def pack_groups(
     whenever blocks are small, which is the normal shape for postcode
     blocking at any scale.  Bucketing blocks by hash turns ~#blocks
     invocations into ~n_groups, and the scorer sub-groups by the block
-    column INSIDE the UDF with one factorize + argsort (numpy, amortised
-    over the whole bucket) — the reference's greedy batch packer
+    column INSIDE the UDF (block_slices: one factorize + argsort,
+    amortised over the whole bucket) — the reference's greedy batch packer
     (tools/matcher_funcs.py:894-986) re-expressed as a hash pack.
 
     Correctness: a (block, si, sj) group lands in exactly one
@@ -211,6 +163,28 @@ def pack_groups(
         ref.withColumn("__gb", gb),
         ["__gb", *extra],
     )
+
+
+def block_slices(left_blocks: pd.Series, right_blocks: pd.Series):
+    """Inside a cogrouped scorer: split one packed bucket (pack_groups)
+    back into its blocks.  Yields (li, ri), the row positions of one
+    block on each side, for every block present on BOTH sides of the
+    group (a block can sit on one side only in a given salt cell).  One
+    factorize + argsort per bucket, amortised over all its blocks."""
+    lb = left_blocks.to_numpy(dtype=object)
+    rb = right_blocks.to_numpy(dtype=object)
+    codes, uniq = pd.factorize(np.concatenate([lb, rb]))
+    lc, rc = codes[: len(lb)], codes[len(lb):]
+    lo = np.argsort(lc, kind="stable")
+    ro = np.argsort(rc, kind="stable")
+    edges = np.arange(len(uniq) + 1)
+    lsplit = np.searchsorted(lc[lo], edges)
+    rsplit = np.searchsorted(rc[ro], edges)
+    for u in range(len(uniq)):
+        li = lo[lsplit[u]:lsplit[u + 1]]
+        ri = ro[rsplit[u]:rsplit[u + 1]]
+        if len(li) and len(ri):
+            yield li, ri
 
 
 def block_join(

@@ -18,10 +18,12 @@ per tools/constants.py:231-233 (D8).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from address_matcher_spark.operators import _util, blocking, select, verify
+from address_matcher_spark.operators import blocked, blocking
 
 # tools/constants.py:238-268
 MATCHING_VARIABLES = [
@@ -77,7 +79,7 @@ def field_cross_score(
     search: DataFrame,
     ref: DataFrame,
     key_cols: list[str],
-    block_col: str | None = None,
+    block_col: str,
 ) -> DataFrame:
     """The field-wise analogue of scoring.block_cross_score: cogroup both
     sides by (block, salt) and compute the FULL weighted per-field score
@@ -225,45 +227,20 @@ def field_cross_score(
             il, jr = np.nonzero(pct == mx[:, None])
             return lids_all[li][il], rids_all[ri][jr], pct[il, jr]
 
-        if block_col is None:
-            ids, rids, sc = score_block(np.arange(len(left)),
-                                        np.arange(len(right)))
-            return pd.DataFrame(
-                {"record_id": ids, "ref_id": rids, "fuzzy_score": sc})
-        # packed buckets (blocking.pack_groups): sub-group by the block
-        # column — one factorize + argsort per bucket, one score_block per
+        # packed buckets (blocking.pack_groups): one score_block per
         # block.  Per-record max stays PER BLOCK (a record belongs to one
         # block, so its per-block max rows are its per-group max rows from
         # the unpacked plan; the caller's keep_max_score window restores
-        # global semantics across salt shards exactly as before).
-        lb = left[block_col].to_numpy(dtype=object)
-        rb = right[block_col].to_numpy(dtype=object)
-        codes, uniq = pd.factorize(np.concatenate([lb, rb]))
-        lc, rc = codes[: len(lb)], codes[len(lb):]
-        lo = np.argsort(lc, kind="stable")
-        ro = np.argsort(rc, kind="stable")
-        edges = np.arange(len(uniq) + 1)
-        lsplit = np.searchsorted(lc[lo], edges)
-        rsplit = np.searchsorted(rc[ro], edges)
-        id_parts: list[np.ndarray] = []
-        rid_parts: list[np.ndarray] = []
-        sc_parts: list[np.ndarray] = []
-        for u in range(len(uniq)):
-            li = lo[lsplit[u]:lsplit[u + 1]]
-            ri = ro[rsplit[u]:rsplit[u + 1]]
-            if len(li) == 0 or len(ri) == 0:
-                continue  # block present on one side only in this salt
-            ids, rids, sc = score_block(li, ri)
-            if len(ids):
-                id_parts.append(ids)
-                rid_parts.append(rids)
-                sc_parts.append(sc)
-        if not id_parts:
+        # global semantics across salt shards).
+        parts = [score_block(li, ri) for li, ri in
+                 blocking.block_slices(left[block_col], right[block_col])]
+        parts = [p for p in parts if len(p[0])]
+        if not parts:
             return empty
         return pd.DataFrame({
-            "record_id": np.concatenate(id_parts),
-            "ref_id": np.concatenate(rid_parts),
-            "fuzzy_score": np.concatenate(sc_parts),
+            "record_id": np.concatenate([p[0] for p in parts]),
+            "ref_id": np.concatenate([p[1] for p in parts]),
+            "fuzzy_score": np.concatenate([p[2] for p in parts]),
         })
 
     return (
@@ -273,119 +250,22 @@ def field_cross_score(
     )
 
 
-def field_candidates(
-    search_std: DataFrame,
-    ref_std: DataFrame,
-    blocker: str,
-    cfg,
-    residue_rows: int | None = None,
-    ref_prepped: DataFrame | None = None,
-    ref_rows: int | None = None,
-    ref_hist: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate stage of the field pass: block → per-block grid salting →
-    cogrouped Arrow field score (field_cross_score) → global per-record
-    max (ties kept).  Returns (record_id, ref_id, fuzzy_score).
+# zero-weight fields (PostTown) never ship into the cogroup
+_USED = [c for c in MATCHING_VARIABLES if WEIGHTS[c] != 0.0]
 
-    residue_rows is accepted for interface parity with fuzzy_pass but
-    does not change the partition count — see the npart comment below
-    (flat dp measured faster than any residue-scaled dp..dp*8 value for
-    this rank-1-dominated scorer)."""
-    key = "postcode_search" if blocker == "Postcode" else "street_key"
+FIELD = blocked.Scorer(
+    prep_search=predict_lpi_fields,
+    search_cols=tuple(f"p_{c}" for c in _USED),
+    ref_cols=tuple(REF_COL.get(c, c) for c in _USED),
+    cross_score=lambda s, r, keys, bk, cfg: field_cross_score(s, r, keys, bk),
+    # D8: the street-blocked pass uses the raised 99.5 cutoff
+    # (tools/recordlinkage_funcs.py:264-267)
+    verify_limit=lambda cfg, blocker: (
+        cfg.score_cut_off_street if blocker == "Street" else cfg.score_cut_off
+    ),
+    wratio_tiebreak=False,
+)
 
-    s = predict_lpi_fields(search_std).filter(F.col(key) != "")
-    s = s.withColumnRenamed(key, "__bk").drop(
-        *({"postcode_search", "street_key"} - {key})
-    )
-    if ref_prepped is not None:
-        # the filtered/renamed/dedup'd variant, materialised once per
-        # (level, blocker) by run_waterfall — shared with the fuzzy pass
-        # on the same block key (pipeline.prep_ref_for_block)
-        r = ref_prepped
-    else:
-        r = ref_std.filter(F.col(key) != "").withColumnRenamed(key, "__bk")
-        r = r.drop(*({"postcode_search", "street_key"} - {key}))
-        r = r.dropDuplicates(["__bk", "reference_mod_address"])
-    r = blocking.prefilter_ref(r, s, "__bk")
-
-    used = [c for c in MATCHING_VARIABLES if WEIGHTS[c] != 0.0]
-    p_cols = [f"p_{c}" for c in used]
-    r_cols = [REF_COL.get(c, c) for c in used]
-    s_salted, r_salted, extra = blocking.salt_for_cogroup_adaptive(
-        s.select("record_id", "__bk", *p_cols),
-        r.select("ref_id", "__bk", *r_cols),
-        "__bk", blocking.salt_target_pairs_for(s.sparkSession, cfg),
-        ref_hist=ref_hist,
-    )
-    # flat defaultParallelism, NOT the fuzzy passes' dp*8 over-
-    # decomposition: the field scorer's rank-1 accumulation makes
-    # per-pair work so light that per-partition scheduling overhead
-    # dominates — measured A/B at sf0.1 local[32]: dp 6.6s vs dp*8 8.8s
-    # for the full-corpus postcode field pass.  (The fuzzy kernel is the
-    # opposite: heavy per-pair work + skewed salt groups make the 8×
-    # decomposition win there — scoring_npart.)  Residue scaling can only
-    # raise the count above dp, so it does not apply here either.
-    npart = s.sparkSession.sparkContext.defaultParallelism
-    # pack blocks into ~4·npart buckets: per-group Arrow/pandas dispatch
-    # is the dominant fixed cost for small blocks (see
-    # blocking.pack_groups); the UDF sub-groups by __bk internally
-    n_groups = _util.pack_group_count(s.sparkSession, npart, residue_rows,
-                                      ref_rows=ref_rows)
-    s_salted, r_salted, keys = blocking.pack_groups(
-        s_salted, r_salted, "__bk", extra, n_groups
-    )
-    s_salted = s_salted.repartition(npart, *[F.col(k) for k in keys])
-    r_salted = r_salted.repartition(npart, *[F.col(k) for k in keys])
-    cand = field_cross_score(s_salted, r_salted, keys, block_col="__bk")
-    return select.keep_max_score(cand, "record_id")
-
-
-def field_pass(
-    search_std: DataFrame,
-    ref_std: DataFrame,
-    blocker: str,
-    cfg,
-    pass_name: str,
-    broadcast_ref: bool | None = None,
-    residue_rows: int | None = None,
-    ref_prepped: DataFrame | None = None,
-    ref_rows: int | None = None,
-    ref_hist: DataFrame | None = None,
-) -> DataFrame:
-    """J4 block → J5 per-field compare → P6 weighted sum → A2 max → D8 →
-    D4-D7 verify → W5 best-per-record.  Output schema matches fuzzy_pass
-    (score_perc carried as fuzzy_score, per the reference's rename at
-    tools/recordlinkage_funcs.py:219-221).
-
-    Shaped like fuzzy_pass: per-block grid salting, cogrouped Arrow
-    cross-score (field_cross_score, O(rows) transfer), window shortlist,
-    join-back, verify."""
-    cutoff = cfg.score_cut_off_street if blocker == "Street" else cfg.score_cut_off
-    # same resolution order as fuzzy_pass: the waterfall threads its
-    # once-measured byte decision in; a direct caller falls back to cfg,
-    # then to a fresh byte measurement — never an unconditional broadcast
-    # (round 4 force-broadcast the full ref side here whenever
-    # cfg.broadcast_ref was None: executor OOM above broadcast_max_bytes)
-    if broadcast_ref is None:
-        broadcast_ref = cfg.broadcast_ref
-    if broadcast_ref is None:
-        broadcast_ref = _util.should_broadcast(ref_std, cfg.broadcast_max_bytes)
-    shortlist = field_candidates(search_std, ref_std, blocker, cfg,
-                                 residue_rows, ref_prepped, ref_rows,
-                                 ref_hist)
-    shortlist = shortlist.join(
-        search_std.drop("street_key", "postcode_search"), "record_id"
-    )
-    ref_back = ref_std.drop("postcode_search", "street_key")
-    shortlist = shortlist.join(
-        F.broadcast(ref_back) if broadcast_ref else ref_back,
-        "ref_id",
-    )
-    shortlist = verify.add_decisions(
-        shortlist, blocker,
-        fuzzy_match_limit=cutoff,
-        no_number_fuzzy_match_limit=cfg.no_number_fuzzy_match_limit,
-    )
-    shortlist = shortlist.withColumn("wratio_score", F.lit(None).cast("double"))
-    best = select.best_match(shortlist, "record_id")
-    return best.withColumn("match_method", F.lit(pass_name))
+# J4 block → J5 per-field compare → P6 weighted sum → A2 max → D8 →
+# D4-D7 verify → W5 best-per-record (operators/blocked.py)
+field_pass = functools.partial(blocked.blocked_pass, FIELD)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from address_matcher_spark import kernels as K
+from address_matcher_spark.operators.blocking import block_slices
 
 FUZZY_MATCH_LIMIT = 85.0  # tools/constants.py:39
 NO_NUMBER_FUZZY_MATCH_LIMIT = 100.0  # tools/constants.py:235
@@ -33,15 +34,13 @@ def block_cross_score(
     search: "DataFrame",
     ref: "DataFrame",
     key_cols: list[str],
+    block_col: str,
     cutoff: float = FUZZY_MATCH_LIMIT,
-    search_id: str = "record_id",
-    ref_id: str = "ref_id",
-    search_addr: str = "search_mod_address",
-    ref_addr: str = "reference_mod_address",
-    block_col: str | None = None,
 ):
     """J1, the cdist shape: cogroup both sides by the block key and score
     the full cross product INSIDE the UDF (tools/fuzzy_match.py:88-94).
+    Search side: record_id + search_mod_address; ref side: ref_id +
+    reference_mod_address.
 
     Arrow transfer is O(block rows), not O(pairs): each side's strings
     cross the JVM↔Python boundary once per block, tokenisation happens
@@ -51,15 +50,16 @@ def block_cross_score(
     and replicating the ref side, which splits a heavy block's cross
     product across salt groups.
 
-    block_col: when the caller packed many blocks into one cogroup key
-    (blocking.pack_groups), the real block key arrives as a DATA column
-    of this name; the UDF sub-groups by it (one factorize + argsort per
-    bucket) and scores each block's cross product separately — identical
-    pair set, ~#buckets UDF dispatches instead of ~#blocks.
+    block_col: the caller packs many blocks into one cogroup key
+    (blocking.pack_groups), so the real block key arrives as a DATA
+    column of this name; the UDF splits the bucket back into blocks
+    (blocking.block_slices) and scores each block's cross product
+    separately — identical pair set, ~#buckets UDF dispatches instead of
+    ~#blocks.
     """
     import numpy as np
 
-    out_schema = f"{search_id} long, {ref_id} long, fuzzy_score double"
+    out_schema = "record_id long, ref_id long, fuzzy_score double"
 
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         import os
@@ -68,57 +68,30 @@ def block_cross_score(
         prof_dir = os.environ.get("SPARK_GRAFT_PROF_DIR")
         t0 = time.perf_counter() if prof_dir else 0.0
         c0 = time.process_time() if prof_dir else 0.0
+        empty = pd.DataFrame({"record_id": [], "ref_id": [], "fuzzy_score": []})
         if left.empty or right.empty:
-            return pd.DataFrame({search_id: [], ref_id: [], "fuzzy_score": []})
-        lids = left[search_id].to_numpy()
-        rids = right[ref_id].to_numpy()
-        ltoks = [("" if s is None else s).split() for s in left[search_addr]]
-        rtoks = [("" if s is None else s).split() for s in right[ref_addr]]
+            return empty
+        lids = left["record_id"].to_numpy()
+        rids = right["ref_id"].to_numpy()
+        ltoks = [("" if s is None else s).split()
+                 for s in left["search_mod_address"]]
+        rtoks = [("" if s is None else s).split()
+                 for s in right["reference_mod_address"]]
         tk = time.perf_counter() if prof_dir else 0.0
         pairs = 0
-        if block_col is None:
-            pairs = len(lids) * len(rids)
-            il, jr, sc = K.cross_token_set_scores(ltoks, rtoks, cutoff)
-            out = pd.DataFrame({
-                search_id: lids[il],
-                ref_id: rids[jr],
-                "fuzzy_score": sc,
-            })
-        else:
-            lb = left[block_col].to_numpy(dtype=object)
-            rb = right[block_col].to_numpy(dtype=object)
-            codes, uniq = pd.factorize(np.concatenate([lb, rb]))
-            lc, rc = codes[: len(lb)], codes[len(lb):]
-            lo = np.argsort(lc, kind="stable")
-            ro = np.argsort(rc, kind="stable")
-            edges = np.arange(len(uniq) + 1)
-            lsplit = np.searchsorted(lc[lo], edges)
-            rsplit = np.searchsorted(rc[ro], edges)
-            id_parts: list[np.ndarray] = []
-            rid_parts: list[np.ndarray] = []
-            sc_parts: list[np.ndarray] = []
-            for u in range(len(uniq)):
-                li = lo[lsplit[u]:lsplit[u + 1]]
-                ri = ro[rsplit[u]:rsplit[u + 1]]
-                if len(li) == 0 or len(ri) == 0:
-                    continue  # block present on one side only in this salt
-                pairs += len(li) * len(ri)
-                il, jr, sc = K.cross_token_set_scores(
-                    [ltoks[i] for i in li], [rtoks[j] for j in ri], cutoff
-                )
-                if len(il):
-                    id_parts.append(lids[li][il])
-                    rid_parts.append(rids[ri][jr])
-                    sc_parts.append(sc)
-            if id_parts:
-                out = pd.DataFrame({
-                    search_id: np.concatenate(id_parts),
-                    ref_id: np.concatenate(rid_parts),
-                    "fuzzy_score": np.concatenate(sc_parts),
-                })
-            else:
-                out = pd.DataFrame(
-                    {search_id: [], ref_id: [], "fuzzy_score": []})
+        parts = []
+        for li, ri in block_slices(left[block_col], right[block_col]):
+            pairs += len(li) * len(ri)
+            il, jr, sc = K.cross_token_set_scores(
+                [ltoks[i] for i in li], [rtoks[j] for j in ri], cutoff
+            )
+            if len(il):
+                parts.append((lids[li][il], rids[ri][jr], sc))
+        out = pd.DataFrame({
+            "record_id": np.concatenate([p[0] for p in parts]),
+            "ref_id": np.concatenate([p[1] for p in parts]),
+            "fuzzy_score": np.concatenate([p[2] for p in parts]),
+        }) if parts else empty
         if prof_dir:
             # scaling-residue instrumentation (scripts/profile_block_score
             # .py): per-group (start, call wall s, kernel wall s, pairs,

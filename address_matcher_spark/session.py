@@ -40,7 +40,7 @@ def get_spark(
         # It sizes partitions by BYTES, which is the wrong model for the
         # compute-bound scoring stage — that stage is therefore pinned
         # with an explicit numbered repartition (exempt from coalescing)
-        # in fuzzy_pass/field_pass rather than disabling coalescing
+        # in blocked.candidates rather than disabling coalescing
         # globally.
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

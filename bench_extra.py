@@ -7,7 +7,7 @@ optimization round's own instrumentation.  Usage:
   python bench_extra.py [query ...]            # time queries (noop sink)
   BX_PLANS_DIR=plans/r08 BX_SUFFIX=_before python bench_extra.py --plans q...
                                                # capture plans only
-  BX_REPS=3 (default)     reps after the discarded warm-up rep
+  BX_REPS=3 (default)     reps after the discarded warm-up rep (min 1)
   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS        same contract as bench.py
 
 Prints one JSON line: {"queries": {name: min_sec}, "reps": {...}}.
@@ -48,7 +48,8 @@ DEFAULT_QUERIES = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    reps = int(os.environ.get("BX_REPS", "3"))
+    # at least one timed rep: min() below needs a sample
+    reps = max(1, int(os.environ.get("BX_REPS", "3")))
     plans_dir = os.environ.get("BX_PLANS_DIR")
     suffix = os.environ.get("BX_SUFFIX", "")
     args = [a for a in sys.argv[1:] if not a.startswith("--")]

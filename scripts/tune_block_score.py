@@ -66,14 +66,12 @@ def main() -> None:
             return max(dp, min(dp * mult, residue_rows // 64))
 
         _util.scoring_npart = npart
-        P.scoring_npart = npart
         t0 = time.perf_counter()
         out = P.fuzzy_pass(sides["smin"], sides["rmin"], "Postcode", cfg,
                            "tune", broadcast_ref=bc)
         n = out.count()
         w = time.perf_counter() - t0
         _util.scoring_npart = orig_npart
-        P.scoring_npart = orig_npart
         return w, n
 
     leg(*combos[0])  # warmup, discarded

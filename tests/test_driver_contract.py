@@ -84,3 +84,21 @@ def test_entry_smoke(spark):
     rows = df.count()
     assert rows > 0
     assert df.filter("full_match").count() > 0
+
+
+def test_frozen_harness_entry_points_resolve():
+    """bench.py and perfbench/run.py call these pipeline entry points with
+    fixed argument orders; each must still bind to them."""
+    import inspect
+
+    from address_matcher_spark.operators import fieldmatch
+    from address_matcher_spark.plans import pipeline as P
+
+    cfg = P.MatchConfig()
+    s, r = object(), object()
+    inspect.signature(P.fuzzy_pass).bind(
+        s, r, "Postcode", cfg, "bench", broadcast_ref=True)
+    inspect.signature(fieldmatch.field_pass).bind(
+        s, r, "Postcode", cfg, "bench", broadcast_ref=True)
+    inspect.signature(P.should_broadcast).bind(r, cfg.broadcast_max_bytes)
+    inspect.signature(P.prep_ref_for_block).bind(r, "Postcode")

@@ -1,17 +1,23 @@
-"""Field-pass cogroup parity: the Arrow cogrouped field scorer
-(fieldmatch.field_cross_score, O(rows) transfer) must select exactly the
-same per-record max-score candidates as the round-2 formula it replaced —
-an explicit pair join scored with JVM/pandas-UDF column expressions
-(reference semantics tools/recordlinkage_funcs.py:15-278)."""
+"""Candidate-stage parity for both scorers of operators/blocked.py: the
+cogrouped Arrow scorers (O(rows) transfer, packed buckets, per-block grid
+salting) must select exactly the same per-record max-score candidates as
+an explicit block join scored independently —
+  * field scorer: the round-2 formula it replaced, JVM/pandas-UDF column
+    expressions (reference semantics tools/recordlinkage_funcs.py:15-278);
+  * fuzzy scorer: the scalar token_set_ratio kernel on every block pair,
+    kept at or above fuzzy_match_limit (tools/fuzzy_match.py:88-94).
+Both at the default salting and at a forced multi-way split."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from address_matcher_spark import datagen
+from address_matcher_spark import kernels as K
+from address_matcher_spark.operators import blocked, scoring, select
 from address_matcher_spark.operators import fieldmatch as FM
-from address_matcher_spark.operators import scoring, select
 from address_matcher_spark.plans import pipeline as P
 
 
@@ -31,8 +37,8 @@ def sides(spark):
     return smin.localCheckpoint(), rmin.localCheckpoint(), cfg
 
 
-def _expected_candidates(s_std, r_std, blocker):
-    """Round-2 path: explicit block join + column-expression weighted sum."""
+def _block_pairs(s_std, r_std, blocker):
+    """Explicit block equi-join of the two sides."""
     key = "postcode_search" if blocker == "Postcode" else "street_key"
     other = ({"postcode_search", "street_key"} - {key}).pop()
     s = (
@@ -44,7 +50,26 @@ def _expected_candidates(s_std, r_std, blocker):
         .withColumnRenamed(key, "__bk").drop(other)
     )
     r = r.dropDuplicates(["__bk", "reference_mod_address"])
-    pairs = s.join(r, "__bk")
+    return s.join(r, "__bk")
+
+
+def _expected_fuzzy(s_std, r_std, blocker, cfg):
+    """Scalar token_set_ratio on every block pair, cutoff, then the
+    per-record max (ties kept)."""
+    tsr = F.udf(lambda a, b: K.token_set_ratio(a or "", b or ""),
+                DoubleType())
+    pairs = _block_pairs(s_std, r_std, blocker).withColumn(
+        "fuzzy_score",
+        tsr(F.col("search_mod_address"), F.col("reference_mod_address")),
+    ).filter(F.col("fuzzy_score") >= cfg.fuzzy_match_limit)
+    return select.keep_max_score(pairs, "record_id").select(
+        "record_id", "ref_id", "fuzzy_score"
+    )
+
+
+def _expected_field(s_std, r_std, blocker, cfg):
+    """Round-2 path: explicit block join + column-expression weighted sum."""
+    pairs = _block_pairs(s_std, r_std, blocker)
 
     def txt(c):
         x = F.lower(F.coalesce(c.cast("string"), F.lit("")))
@@ -74,31 +99,29 @@ def _expected_candidates(s_std, r_std, blocker):
     )
 
 
+SCORERS = {
+    "fuzzy": (P.FUZZY, _expected_fuzzy),
+    "field": (FM.FIELD, _expected_field),
+}
+
+
+@pytest.mark.parametrize("salt_target_pairs", [None, 50],
+                         ids=["default", "salted"])
 @pytest.mark.parametrize("blocker", ["Postcode", "Street"])
-def test_field_candidates_parity(sides, blocker):
-    smin, rmin, cfg = sides
+@pytest.mark.parametrize("scorer", sorted(SCORERS))
+def test_candidates_parity(sides, scorer, blocker, salt_target_pairs):
+    """salt_target_pairs=50 forces every block above 50 pairs into a
+    multi-way grid split: the per-group maxima plus the keep_max_score
+    window must still give the global per-record max."""
+    smin, rmin, _ = sides
+    cfg = P.MatchConfig(salt_target_pairs=salt_target_pairs)
+    spec, expected = SCORERS[scorer]
     got = {
         (r["record_id"], r["ref_id"], r["fuzzy_score"])
-        for r in FM.field_candidates(smin, rmin, blocker, cfg).collect()
+        for r in blocked.candidates(spec, smin, rmin, blocker, cfg).collect()
     }
     want = {
         (r["record_id"], r["ref_id"], r["fuzzy_score"])
-        for r in _expected_candidates(smin, rmin, blocker).collect()
+        for r in expected(smin, rmin, blocker, cfg).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_field_candidates_salted_block_parity(spark, sides):
-    """A block heavy enough to trigger grid salting must still return the
-    global per-record max (per-group maxima + the window restore it)."""
-    smin, rmin, _ = sides
-    cfg = P.MatchConfig(salt_target_pairs=50)  # force multi-way splits
-    got = {
-        (r["record_id"], r["ref_id"], r["fuzzy_score"])
-        for r in FM.field_candidates(smin, rmin, "Postcode", cfg).collect()
-    }
-    want = {
-        (r["record_id"], r["ref_id"], r["fuzzy_score"])
-        for r in _expected_candidates(smin, rmin, "Postcode").collect()
-    }
-    assert got == want

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from address_matcher_spark import datagen
 from address_matcher_spark.functions import extract as X
+from address_matcher_spark.operators import blocked
+from address_matcher_spark.operators import fieldmatch as FM
 from address_matcher_spark.plans import pipeline as P
 
 
@@ -181,10 +183,9 @@ def test_street_field_pass_rescues_broken_postcode(spark):
 
 def test_early_exit_after_full_pass1(spark, monkeypatch):
     """X2 early-exit gate (ref tools/matcher_funcs.py:1013-1017): a corpus
-    fully matched by level 1 must run exactly ONE LEVEL (the pc + street
-    blockers run concurrently under paired_blockers) and zero field
-    passes — the remaining waterfall levels are skipped.  With
-    paired_blockers=False the gate is per-PASS: exactly one fuzzy pass."""
+    fully matched by level 1 must run exactly ONE LEVEL (its pc + street
+    blockers run concurrently) and zero field passes — the remaining
+    waterfall levels are skipped."""
     rows = [
         ("12", "OAK ROAD", "LONDON", "SW9 7QD"),
         ("7", "ELM STREET", "CROYDON", "CR2 6XH"),
@@ -219,26 +220,17 @@ def test_early_exit_after_full_pass1(spark, monkeypatch):
     smin, sfull = P.standardise_search(s, False), P.standardise_search(s, True)
     rmin, rfull = P.standardise_reference(r, False), P.standardise_reference(r, True)
 
-    calls = {"fuzzy": 0, "field": 0}
-    real_fuzzy = P.fuzzy_pass
+    seen = []
+    real_pass = blocked.blocked_pass
 
-    def counting_fuzzy(*a, **kw):
-        calls["fuzzy"] += 1
-        return real_fuzzy(*a, **kw)
+    def counting_pass(scorer, *a, **kw):
+        seen.append(scorer)  # list.append is atomic across pass threads
+        if scorer is FM.FIELD:
+            raise AssertionError("field pass must not run after early exit")
+        return real_pass(scorer, *a, **kw)
 
-    def counting_field(*a, **kw):
-        calls["field"] += 1
-        raise AssertionError("field pass must not run after early exit")
-
-    monkeypatch.setattr(P, "fuzzy_pass", counting_fuzzy)
-    monkeypatch.setattr(P, "field_pass", counting_field)
+    monkeypatch.setattr(blocked, "blocked_pass", counting_pass)
 
     res = P.run_waterfall(smin, sfull, rmin, rfull, cfg).toPandas()
-    assert calls["fuzzy"] == 2 and calls["field"] == 0  # one LEVEL
-
-    # strict sequential schedule: per-PASS gate, one fuzzy pass only
-    calls["fuzzy"] = 0
-    cfg_seq = P.MatchConfig(paired_blockers=False)
-    res_seq = P.run_waterfall(smin, sfull, rmin, rfull, cfg_seq).toPandas()
-    assert calls["fuzzy"] == 1 and calls["field"] == 0
+    assert seen == [P.FUZZY, P.FUZZY]  # one LEVEL, no field pass
     assert res["full_match"].all() and len(res) == 3
