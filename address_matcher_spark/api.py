@@ -45,7 +45,9 @@ def match_addresses(
 
     prior_results: a previous run's `results` — full matches are excluded
     from this run (F4) and their columns survive in results_on_orig (J10).
-    store: checkpoint every pass/superstep for mid-run resume."""
+    store: commit each waterfall stage (standardised sides, ref preps,
+    every pass) to it as parquet with lineage metadata; nothing resumes
+    from those commits."""
     cfg = cfg or P.MatchConfig()
     if "url" not in search_df.columns:
         # the pipeline carries a url provenance column (graft input shape);
@@ -64,7 +66,7 @@ def match_addresses(
         cfg, store=store,
     )
     on_orig = join_to_orig_df(results, search_df, "record_id")
-    clusters = cluster_records(results, store=store)
+    clusters = cluster_records(results)
     return MatchResult(
         results=results,
         results_on_orig=on_orig,

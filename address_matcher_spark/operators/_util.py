@@ -19,35 +19,7 @@ def ensure_parallel(df: DataFrame) -> DataFrame:
     return df
 
 
-def estimated_bytes(df: DataFrame, n_rows: int, sample_rows: int = 2000) -> int:
-    """Byte-size estimate for the broadcast decision: avg serialized row
-    width from an UNBIASED random sample × exact row count.  A row-count
-    heuristic is wrong at scale (5M rows × 30 string cols is multi-GB —
-    executor OOM); bytes are what the executor actually holds.  A
-    limit(sample_rows) would read only the first partitions — on sorted
-    input that systematically under/over-samples wide rows — so sample by
-    fraction instead (one projected pass; the frame under consideration is
-    the dimension side, which every pass scans anyway)."""
-    if n_rows == 0:
-        return 0
-    per_field = [
-        F.coalesce(F.octet_length(F.col(f.name).cast("string")), F.lit(0))
-        + F.lit(16)  # UnsafeRow field overhead + object headers, roughly
-        for f in df.schema.fields
-    ]
-    row_bytes = per_field[0]
-    for e in per_field[1:]:
-        row_bytes = row_bytes + e
-    frac = min(1.0, (4.0 * sample_rows) / max(n_rows, 1))
-    sampled = df if frac >= 1.0 else df.sample(False, frac, seed=7)
-    agg = sampled.limit(sample_rows * 4).agg(
-        F.avg(row_bytes).alias("avg_b")
-    ).first()
-    avg = float(agg["avg_b"] or 0.0)
-    return int(avg * n_rows)
-
-
-def should_broadcast(df: DataFrame, max_bytes: int, n_rows: int | None = None) -> bool:
+def should_broadcast(df: DataFrame, max_bytes: int) -> bool:
     """True when the measured size fits under the explicit-broadcast ceiling.
     Anything larger is left to a shuffled equi-join (AQE may still convert
     it if its own byte stats allow).
@@ -59,8 +31,6 @@ def should_broadcast(df: DataFrame, max_bytes: int, n_rows: int | None = None) -
     the materialised ref side, so the fused full-scan average costs the
     same I/O as the count alone while dropping the second job and the
     sampling bias."""
-    if n_rows is not None:
-        return estimated_bytes(df, n_rows) <= max_bytes
     per_field = [
         F.coalesce(F.octet_length(F.col(f.name).cast("string")), F.lit(0))
         + F.lit(16)  # UnsafeRow field overhead + object headers, roughly

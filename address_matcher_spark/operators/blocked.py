@@ -7,9 +7,10 @@ field-wise passes (weighted per-field sum, fieldmatch.FIELD) run the SAME
 pipeline; a `Scorer` record holds only what differs between them, and
 `blocked_pass` is the one implementation of everything else:
 
-  candidates  block-key select/rename → ref prep → semi-join prefilter →
-              per-block grid salting → hash packing → numbered
-              repartition → cogrouped Arrow cross-score → per-record max
+  candidates  block-key select/rename → ref prep → per-block grid
+              salting (keeps only blocks both sides hold) → hash
+              packing → numbered repartition → cogrouped Arrow
+              cross-score → per-record max
   tail        broadcast decision → join-back to both sides → D1-D7
               decisions → optional wratio tie-break → W1 best match
 """
@@ -85,16 +86,14 @@ def candidates(
     its row count and its materialised (__bk, count) histogram —
     run_waterfall builds each once per (level, blocker) and reuses them
     across passes, so the salting stats job stops recomputing the ref
-    aggregation (and the prefilter semi-join feeding it) once per pass
-    (equivalence in blocking.salt_for_cogroup_adaptive)."""
+    aggregation once per pass (equivalence in
+    blocking.salt_for_cogroup_adaptive)."""
     key = _KEYS[blocker]
     s = scorer.prep_search(search_std).filter(F.col(key) != "")
     s = s.withColumnRenamed(key, "__bk").drop(*(set(_KEYS.values()) - {key}))
     r = ref_prepped if ref_prepped is not None else (
         prep_ref_for_block(ref_std, blocker)
     )
-    # semi-join prefilter: ref blocks nobody searches never ship (J3/X3)
-    r = blocking.prefilter_ref(r, s, "__bk")
 
     # Scoring is the reference's cdist re-expressed for Spark: cogroup
     # both sides by (block, salt) and cross-score INSIDE an Arrow UDF.
@@ -102,7 +101,10 @@ def candidates(
     # pair.  Salting is PER-BLOCK from the measured cross-product
     # histogram (tools/matcher_funcs.py:894-986's batch packer, done
     # right): a heavy block splits so no salt-group exceeds ~target
-    # comparisons; small blocks stay whole.
+    # comparisons; small blocks stay whole.  The salting joins both
+    # sides to the per-block stats of blocks present on BOTH sides, so
+    # ref blocks nobody searches never ship (J3/X3) without a separate
+    # semi-join.
     spark = s.sparkSession
     s_salted, r_salted, extra = blocking.salt_for_cogroup_adaptive(
         s.select("record_id", "__bk", *scorer.search_cols),
@@ -154,11 +156,9 @@ def blocked_pass(
     per the reference's rename at tools/recordlinkage_funcs.py:219-221).
 
     broadcast_ref: run_waterfall threads its once-measured decision in;
-    a DIRECT caller falls back to cfg, then to a fresh byte measurement —
-    never an unconditional broadcast (a multi-GB ref side would OOM the
+    a DIRECT caller falls back to a fresh byte measurement — never an
+    unconditional broadcast (a multi-GB ref side would OOM the
     executors)."""
-    if broadcast_ref is None:
-        broadcast_ref = cfg.broadcast_ref
     if broadcast_ref is None:
         broadcast_ref = _util.should_broadcast(ref_std, cfg.broadcast_max_bytes)
     shortlist = candidates(scorer, search_std, ref_std, blocker, cfg,

@@ -3,18 +3,16 @@
 Replaces the reference's per-postcode Python loop + greedy batch packer
 (tools/fuzzy_match.py:141-168, tools/matcher_funcs.py:894-986) with:
 
-  * a semi-join prefilter dropping reference rows whose block key has no
-    search rows (J3/X3, tools/matcher_funcs.py:1213-1216) — at 100 TB this
-    is the difference between scanning the whole reference universe and
-    only the blocks that matter; Catalyst pushes it into the scan where the
-    key is a partition column;
-  * the block equi-join itself (J1/J4) — AQE skew-join splits oversized
-    post-shuffle partitions;
-  * optional explicit salting (X4): the search side gets
-    ``pmod(xxhash64(id), S)`` and the reference side is replicated S ways,
-    so one heavy key (the synthetic corpus puts ~25% of rows on a single
-    postcode) fans out to S tasks instead of one straggler.  The salt
-    factor is *measured* from the block histogram, not guessed.
+  * per-block grid salting (X4, salt_for_cogroup_adaptive): both sides
+    join the per-block stats of blocks present on BOTH sides, so ref
+    blocks nobody searches never ship (J3/X3,
+    tools/matcher_funcs.py:1213-1216), and one heavy key (the synthetic
+    corpus puts ~25% of rows on a single postcode) splits into salt
+    groups sized from the measured block histogram, not guessed;
+  * hash packing of small blocks into few cogroup buckets (pack_groups),
+    split back into blocks inside the scorer (block_slices);
+  * a standalone semi-join prefilter (prefilter_ref) for callers that
+    want the active reference rows themselves.
 """
 
 from __future__ import annotations
@@ -82,13 +80,10 @@ def salt_for_cogroup_adaptive(
     # ref_hist (round 8): a precomputed (key, count) histogram of the
     # ref side — run_waterfall materialises one per (level, blocker) ref
     # prep and threads it into all passes, where each pass previously
-    # recomputed the aggregation (and the prefilter semi-join feeding
-    # it) from scratch.  The histogram may cover a SUPERSET of ref's
-    # blocks (it is taken before the per-pass semi-join prefilter):
-    # per-block counts are identical for surviving blocks — the
-    # prefilter drops whole blocks, never rows within one — and extra
-    # blocks vanish in the inner join with the search histogram, so the
-    # salting decisions are unchanged.
+    # recomputed the aggregation from scratch.  Blocks the search side
+    # lacks vanish in the inner join with the search histogram, so
+    # `stats` — and therefore both salted outputs — hold only blocks
+    # present on both sides.
     sh = search.groupBy(key).count().withColumnRenamed("count", "__sc")
     rh = (ref_hist.withColumnRenamed("count", "__rc")
           if ref_hist is not None
@@ -185,30 +180,3 @@ def block_slices(left_blocks: pd.Series, right_blocks: pd.Series):
         ri = ro[rsplit[u]:rsplit[u + 1]]
         if len(li) and len(ri):
             yield li, ri
-
-
-def block_join(
-    search: DataFrame,
-    ref: DataFrame,
-    key: str,
-    salt: int = 1,
-    salt_id_col: str = "record_id",
-    prefilter: bool = True,
-) -> DataFrame:
-    """Candidate-pair generation: equi-join on the block key.
-
-    Column-name collisions must be resolved by the caller (both sides
-    should carry disjoint names apart from ``key``).
-    """
-    if prefilter:
-        ref = prefilter_ref(ref, search, key)
-    if salt <= 1:
-        return search.join(ref, on=key, how="inner")
-    salted_search = search.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_id_col)), F.lit(salt)).cast("int")
-    )
-    salted_ref = ref.withColumn(
-        "__salt", F.explode(F.array([F.lit(i) for i in range(salt)]))
-    )
-    out = salted_search.join(salted_ref, on=[key, "__salt"], how="inner")
-    return out.drop("__salt")

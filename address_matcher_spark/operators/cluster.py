@@ -5,7 +5,10 @@ in MapReduce and Beyond", SoCC 2014): converges in O(log^2 n) rounds on
 arbitrary graphs, each round two shuffles (groupBy min + join).  The
 reference never needed this (its matches point at an authoritative UPRN,
 tools/fuzzy_match.py:222); at web scale the match graph is record↔record
-and transitive closure is what produces entity clusters.
+and transitive closure is what produces entity clusters.  The
+waterfall's own results keep the reference's shape (one ref per record),
+so cluster_records labels them with one window aggregate and never runs
+the loop; the dedup operators run it on arbitrary graphs.
 
 Every superstep optionally checkpoints through CheckpointStore (parquet /
 Iceberg-snapshot analogue) with row counts per partition — a killed run
@@ -19,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from address_matcher_spark.sources.checkpoint import CheckpointStore
 
@@ -193,24 +197,27 @@ def connected_components(
     return labels.unionByName(roots)
 
 
-def match_edges(results: DataFrame) -> DataFrame:
-    """full_match rows → bipartite (search-node, ref-node) edges with
-    disjoint node namespaces (search ids are xxhash64 of url — re-hash both
-    sides with a type tag to keep spaces disjoint)."""
-    m = results.filter(F.col("full_match"))
-    return m.select(
-        F.xxhash64(F.concat(F.lit("s:"), F.col("record_id").cast("string"))).alias("src"),
-        F.xxhash64(F.concat(F.lit("r:"), F.col("ref_id").cast("string"))).alias("dst"),
-    )
+def _node(tag: str, col: str):
+    """Node id of a match-graph vertex: xxhash64 of a type-tagged id, so
+    search and ref ids live in disjoint namespaces."""
+    return F.xxhash64(F.concat(F.lit(tag), F.col(col).cast("string")))
 
 
-def cluster_records(results: DataFrame,
-                    store: CheckpointStore | None = None) -> DataFrame:
+def cluster_records(results: DataFrame) -> DataFrame:
     """Matched results → clusters(record_id, ref_id, cluster_id): every
-    matched search record labeled with its transitive entity cluster."""
-    m = results.filter(F.col("full_match")).select(
+    full_match search record labeled with its entity cluster.
+
+    Precondition: one row per record_id (select.combine_passes
+    guarantees it).  Each matched record then points at exactly one
+    ref_id, so the record↔ref match graph is a forest of stars, one per
+    ref_id, and each star is a whole component.  Its label is therefore
+    one window aggregate per ref_id instead of a connected_components
+    run: the min over the star's node hashes ("r:" + ref_id for the
+    centre, "s:" + record_id for each leaf — disjoint namespaces), the
+    same hash-to-min label connected_components gives that component."""
+    star = Window.partitionBy("ref_id")
+    return results.filter(F.col("full_match")).select(
         "record_id", "ref_id",
-        F.xxhash64(F.concat(F.lit("s:"), F.col("record_id").cast("string"))).alias("node"),
+        F.least(_node("r:", "ref_id"), F.min(_node("s:", "record_id")).over(star))
+        .alias("cluster_id"),
     )
-    labels = connected_components(match_edges(results), store=store)
-    return m.join(labels, "node").drop("node")

@@ -12,10 +12,10 @@ Flow per EP1 (SURVEY §3):
   fieldwise(full, street),
   each pass attempting only records the previous passes failed (anti-join
   F1, tools/matcher_funcs.py:83-109), combined with the W2 window dedup.
-  matched pairs → connected components → clusters.
+  matched pairs → one cluster per reference record (operators/cluster.py).
 
-Scale: blocking joins are equi-joins with semi-join prefilter + optional
-measured salting (operators/blocking.py); scoring is Arrow-batched pandas
+Scale: blocking is a cogroup on the block key with measured per-block
+grid salting (operators/blocking.py); scoring is Arrow-batched pandas
 UDFs; everything else is codegen'd expressions and windows.
 """
 
@@ -51,7 +51,6 @@ class MatchConfig:
     salt_target_pairs: int | None = None    # cogroup cross-score salting;
                                             # None → the measured default
                                             # (see salt_target_pairs_for)
-    broadcast_ref: bool | None = None       # None → measure bytes (see below)
     broadcast_max_bytes: int = 256 * 1024 * 1024  # explicit-broadcast ceiling
     run_field_passes: bool = True
     area_cofilter: bool = True              # F3 (tools/matcher_funcs.py:567-606)
@@ -288,7 +287,7 @@ def run_waterfall(
     # lineage: the standardisation layer is hundreds of expressions, and
     # without truncation every pass re-analyzes that whole tree on the
     # driver (~seconds per pass of pure planning).  With a store this is
-    # a real checkpoint (resumable); otherwise localCheckpoint.  Callers
+    # a real checkpoint; otherwise localCheckpoint.  Callers
     # that already checkpointed/cached the sides pass
     # sides_materialized=True to skip the redundant second scan+write.
     if store is not None:
@@ -310,10 +309,7 @@ def run_waterfall(
     # ref side is dimension-like; broadcast only while the serialized table
     # fits an executor comfortably
     _t1 = _t()
-    if cfg.broadcast_ref is None:
-        bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
-    else:
-        bc_ref = cfg.broadcast_ref
+    bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
     if metrics is not None:
         metrics["broadcast_measure_sec"] = round(_t() - _t1, 3)
         metrics["broadcast_ref"] = bc_ref
@@ -324,14 +320,13 @@ def run_waterfall(
     # the full reference side.  Shared across passes unless the ref is
     # already a durable bucketed table (persisting would destroy the
     # bucketed scan's exchange-free HashPartitioning).  With a store this
-    # is a real checkpoint (resumable); otherwise localCheckpoint: even
-    # WITHIN one pass the prep subtree is referenced three times (rh
-    # histogram, semi-join prefilter, salted ref side) and Catalyst
+    # is a real checkpoint; otherwise localCheckpoint: the prep subtree
+    # is read by its histogram and by both scorers' passes, and Catalyst
     # recomputes shared subtrees — profiled at ~15 core-s of repeated
     # dedup aggregation per pass at bench scale.  (An in-memory .cache()
     # variant measured SLOWER end-to-end: columnar compress-on-write +
     # decompress-per-read beats a local checkpoint scan only when the
-    # frame is read once, and these are read ~3× per pass.)
+    # frame is read once, and these are read ~3×.)
     materialize_prep = not ref_materialized
     _prep_futs: dict[tuple[str, str], "CFuture"] = {}
     _prep_rows: dict[tuple[str, str], int] = {}
@@ -428,7 +423,7 @@ def run_waterfall(
     # build them concurrently in the background while level 1 runs
     # instead of serially on each level's critical path (~0.8 s each at
     # bench scale).  Skipped for bucketed refs (prep stays a lazy plan —
-    # no job to prefetch) and in store mode (a resume should only find
+    # no job to prefetch) and in store mode (the store should only hold
     # checkpoint stages the waterfall actually reached).  An early exit
     # may waste a prefetched prep; a failed prefetch surfaces on first
     # use (the Future re-raises) or never, if that pass was skipped.

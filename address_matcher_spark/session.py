@@ -29,7 +29,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -51,18 +51,5 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
     )
-    # Opt-in straggler re-launch (scaling lever under test): on a real
-    # cluster speculation re-runs a descheduled task on a healthy
-    # executor; in local mode the copy competes for the same contended
-    # cores, so whether it pays is measured (scripts/scaling_run.py A/B),
-    # not assumed.  Aggressive-ish thresholds because the straggler tail
-    # under test is ~20% proportional, not pathological outliers.
-    if os.environ.get("SPARK_GRAFT_SPECULATION") == "1":
-        builder = (
-            builder.config("spark.speculation", "true")
-            .config("spark.speculation.interval", "1s")
-            .config("spark.speculation.multiplier", "1.5")
-            .config("spark.speculation.quantile", "0.75")
-        )
-    return builder.getOrCreate()

@@ -6,7 +6,7 @@ and on a cluster).
                   (default: deterministic synthetic corpus in /tmp)
   AM_REF_DIR      parquet dir of LPI reference addresses
   AM_OUT_DIR      output dir (matches + clusters + run metadata)
-  AM_CKPT_DIR     checkpoint root (resumable per pass/superstep)
+  AM_CKPT_DIR     checkpoint root (one commit per waterfall stage)
   AM_RUN_ID       run id for checkpoint lineage (default 'run1')
   AM_PRIOR_DIR    optional parquet of a previous run's matches — rows with
                   full_match are excluded from this run (F4/J11) and their
@@ -119,7 +119,7 @@ def main() -> None:
         os.path.join(out_dir, "results_on_orig")
     )
     clusters = cluster_records(
-        spark.read.parquet(os.path.join(out_dir, "matches")), store=store
+        spark.read.parquet(os.path.join(out_dir, "matches"))
     )
     clusters.write.mode("overwrite").parquet(os.path.join(out_dir, "clusters"))
 

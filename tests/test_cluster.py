@@ -86,6 +86,33 @@ def test_pipeline_clusters_match_ground_truth(spark):
     assert got_parts == want_parts
 
 
+def test_cluster_records_equals_connected_components(spark):
+    """On one-row-per-record results (a forest of stars, one per ref_id)
+    cluster_records' window label is connected_components' label of the
+    record's node over the same type-tagged node hashes."""
+    import random
+
+    rng = random.Random(3)
+    rows = [(rid, rng.randrange(-8, 8), rng.random() < 0.8)
+            for rid in range(-30, 30)]
+    res = spark.createDataFrame(
+        rows, "record_id long, ref_id long, full_match boolean")
+    got = {(r["record_id"], r["ref_id"], r["cluster_id"])
+           for r in C.cluster_records(res).collect()}
+
+    def node(tag, col):
+        return F.xxhash64(F.concat(F.lit(tag), F.col(col).cast("string")))
+
+    m = res.filter("full_match")
+    labels = C.connected_components(m.select(
+        node("s:", "record_id").alias("src"), node("r:", "ref_id").alias("dst")))
+    want = {(r["record_id"], r["ref_id"], r["cluster_id"])
+            for r in m.select("record_id", "ref_id",
+                              node("s:", "record_id").alias("node"))
+            .join(labels, "node").collect()}
+    assert got == want and len(got) == sum(f for _, _, f in rows)
+
+
 def test_driver_finish_matches_distributed(spark):
     # hybrid tail (driver union-find under the size bound) must label
     # exactly like pure supersteps, on a graph with chains, stars,

@@ -102,3 +102,15 @@ def test_frozen_harness_entry_points_resolve():
         s, r, "Postcode", cfg, "bench", broadcast_ref=True)
     inspect.signature(P.should_broadcast).bind(r, cfg.broadcast_max_bytes)
     inspect.signature(P.prep_ref_for_block).bind(r, "Postcode")
+
+
+def test_register_views_restores_dropped_view(spark):
+    """A memoised registration is skipped only while the catalog still
+    holds every view: a dropped view (or a new session that reuses a
+    collected one's id) is registered again."""
+    from address_matcher_spark.plans.driver_queries import register_views
+
+    register_views(spark, SF_DIR)
+    spark.catalog.dropTempView("er_ref")
+    register_views(spark, SF_DIR)
+    assert spark.table("er_ref").limit(1).count() == 1

@@ -17,10 +17,6 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _optimized(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def test_parquet_filter_pushdown(spark):
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet").filter(
         F.col("o_orderstatus") == "F"
@@ -121,7 +117,7 @@ def test_field_pass_honours_measured_broadcast_decision(
 
     smin, rmin, cfg = tiny_sides
     import dataclasses
-    no_bc = dataclasses.replace(cfg, broadcast_max_bytes=0, broadcast_ref=None)
+    no_bc = dataclasses.replace(cfg, broadcast_max_bytes=0)
     s, r = smin.localCheckpoint(), rmin.localCheckpoint()
     for blocker in ("Postcode", "Street"):
         plan = _plan(FM.field_pass(s, r, blocker, no_bc, "plan_test"))
@@ -154,13 +150,38 @@ def test_waterfall_results_identical_without_broadcast(spark, tiny_sides):
     assert run(0) == run(256 * 1024 * 1024)
 
 
-def test_semi_join_prefilter_in_plan(tiny_sides):
-    """The reference side is prefiltered with a LeftSemi join before any
-    scoring (J3/X3) — ref blocks nobody searches never ship."""
-    smin, rmin, cfg = tiny_sides
-    out = P.fuzzy_pass(smin.localCheckpoint(), rmin.localCheckpoint(),
-                       "Postcode", cfg, "plan_test")
-    assert "LeftSemi" in _optimized(out)
+def test_semi_join_prefilter_in_plan(spark):
+    """Ref blocks nobody searches never ship (J3/X3): the salting that
+    feeds the scorer keeps only blocks present on both sides, with and
+    without a precomputed ref histogram covering the unsearched block."""
+    from address_matcher_spark.operators import blocking
+
+    s = spark.createDataFrame([(1, "A"), (2, "A"), (3, "B")],
+                              "record_id long, bk string")
+    r = spark.createDataFrame([(10, "A"), (11, "B"), (12, "Z"), (13, "Z")],
+                              "ref_id long, bk string")
+    for hist in (None, r.groupBy("bk").count()):
+        _, r_salted, _ = blocking.salt_for_cogroup_adaptive(
+            s, r, "bk", target_pairs=1, ref_hist=hist
+        )
+        got = {(x.ref_id, x.bk) for x in r_salted.collect()}
+        assert got == {(10, "A"), (11, "B")}
+
+
+def test_cluster_records_one_pass_no_join(spark, tmp_path):
+    """cluster_records labels the waterfall's star-shaped match graph
+    with one window aggregate: no join back to its input and one scan of
+    it (connected_components would checkpoint, collect and re-join)."""
+    from address_matcher_spark.operators.cluster import cluster_records
+
+    path = str(tmp_path / "results")
+    spark.createDataFrame(
+        [(1, 10, True), (2, 10, True), (3, 11, True), (4, 12, False)],
+        "record_id long, ref_id long, full_match boolean",
+    ).write.parquet(path)
+    plan = _plan(cluster_records(spark.read.parquet(path)))
+    assert "Join" not in plan
+    assert plan.count("FileScan parquet") == 1
 
 
 def test_aqe_skew_join_enabled_and_splits_hot_partition(spark):

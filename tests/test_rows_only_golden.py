@@ -88,7 +88,7 @@ def test_waterfall_clusters_composition_pinned(spark):
     """The real fuzzy-waterfall → cluster_records composition, pinned at
     the round-5 hash.  er_pipeline_clusters graduated to a full DuckDB
     oracle in round 6 (decisions-style pre-scored pairs through the same
-    combine→edges→CC chain), so the driver no longer runs THIS
+    combine→cluster_records chain), so the driver no longer runs THIS
     composition — the pin keeps the waterfall→clusters path regression-
     guarded exactly as before."""
     from pyspark.sql import functions as F
