@@ -75,32 +75,28 @@ def predict_lpi_fields(search_std: DataFrame) -> DataFrame:
     )
 
 
-def field_cross_score(
-    search: DataFrame,
-    ref: DataFrame,
-    key_cols: list[str],
-    block_col: str,
-) -> DataFrame:
-    """The field-wise analogue of scoring.block_cross_score: cogroup both
-    sides by (block, salt) and compute the FULL weighted per-field score
-    matrix inside one Arrow UDF, returning only each record's max-score
-    rows (ties kept) per group.
+def field_scorer(block_col: str = "__bk"):
+    """The field-wise analogue of scoring.token_set_scorer: returns
+    ``score(left, right)``, the pandas function both candidate plans of
+    operators/blocked.py call.  It computes the FULL weighted per-field
+    score matrix of every block present on both sides and returns only
+    each record's max-score rows (ties kept) per block.
 
-    Arrow transfer is O(rows) both ways — round 2 evaluated the three
-    Jaro-Winkler pandas-UDF columns on the whole pair fan-out, shipping
-    O(pairs) strings through Arrow before keep_max_score pruned them
-    (VERDICT r2 'What's wrong #2').  Here strings cross once per row, the
-    JW/levenshtein kernels run once per DISTINCT value pair within the
-    group, and only ~1 row per record comes back.  The per-group row max
-    is a safe pre-prune: a record's global max over all its salt groups is
-    the max of per-group maxima, and the caller's keep_max_score window
-    restores exact global-ties semantics.
+    Strings cross the Arrow boundary once per row — round 2 evaluated the
+    three Jaro-Winkler pandas-UDF columns on the whole pair fan-out,
+    shipping O(pairs) strings through Arrow before keep_max_score pruned
+    them (VERDICT r2 'What's wrong #2').  Here the JW/levenshtein kernels
+    run once per DISTINCT value pair within a block, and only ~1 row per
+    record comes back.  The per-block row max is a safe pre-prune: a
+    record's global max over all its salt groups is the max of per-group
+    maxima, and the caller's keep_max_score window restores exact
+    global-ties semantics.
 
     Search side columns: record_id + p_<field>; ref side: ref_id + fields
-    (Postcode as postcode_ref).  Fields are visited in the same EXACT →
-    TEXT → LEV order as the previous column-expression path; parity is
-    near-exact but not guaranteed bit-exact when any field is
-    group-constant, because the rank-1 accumulation adds side-constant
+    (Postcode as postcode_ref); both carry block_col.  Fields are visited
+    in the same EXACT → TEXT → LEV order as the previous column-expression
+    path; parity is near-exact but not guaranteed bit-exact when any field
+    is block-constant, because the rank-1 accumulation adds side-constant
     contributions (row_acc/col_acc/const_acc) after all varying fields.
 
     Rounding is np.round (IEEE half-even) — DELIBERATE: the reference's
@@ -116,7 +112,6 @@ def field_cross_score(
     exact_cols = list(EXACT_COLUMNS)
     text_cols = [c for c in TEXT_COLUMNS if WEIGHTS[c] != 0.0]
     lev_cols = list(LEV_COLUMNS)
-    out_schema = "record_id long, ref_id long, fuzzy_score double"
 
     def _lower(vals) -> np.ndarray:
         # vectorized (round 8): the columns arrive as pandas string
@@ -148,7 +143,7 @@ def field_cross_score(
         )
         if left.empty or right.empty:
             return empty
-        # Column extraction + lowering happens ONCE per Arrow group (the
+        # Column extraction + lowering happens ONCE per call (the
         # row-wise Python loops in _lower/_txt are the per-row cost);
         # per-block scoring below works on index slices of these arrays.
         l_vals = {c: _lower(left[f"p_{c}"]) for c in exact_cols}
@@ -227,11 +222,12 @@ def field_cross_score(
             il, jr = np.nonzero(pct == mx[:, None])
             return lids_all[li][il], rids_all[ri][jr], pct[il, jr]
 
-        # packed buckets (blocking.pack_groups): one score_block per
-        # block.  Per-record max stays PER BLOCK (a record belongs to one
-        # block, so its per-block max rows are its per-group max rows from
-        # the unpacked plan; the caller's keep_max_score window restores
-        # global semantics across salt shards).
+        # one score_block per block of the rows (a packed bucket or a
+        # whole small residue).  Per-record max stays PER BLOCK (a record
+        # belongs to one block, so its per-block max rows are its
+        # per-group max rows from the unpacked plan; the caller's
+        # keep_max_score window restores global semantics across salt
+        # shards).
         parts = [score_block(li, ri) for li, ri in
                  blocking.block_slices(left[block_col], right[block_col])]
         parts = [p for p in parts if len(p[0])]
@@ -243,21 +239,17 @@ def field_cross_score(
             "fuzzy_score": np.concatenate([p[2] for p in parts]),
         })
 
-    return (
-        search.groupBy(*key_cols)
-        .cogroup(ref.groupBy(*key_cols))
-        .applyInPandas(score, out_schema)
-    )
+    return score
 
 
-# zero-weight fields (PostTown) never ship into the cogroup
+# zero-weight fields (PostTown) never ship into the scorer
 _USED = [c for c in MATCHING_VARIABLES if WEIGHTS[c] != 0.0]
 
 FIELD = blocked.Scorer(
     prep_search=predict_lpi_fields,
     search_cols=tuple(f"p_{c}" for c in _USED),
     ref_cols=tuple(REF_COL.get(c, c) for c in _USED),
-    cross_score=lambda s, r, keys, bk, cfg: field_cross_score(s, r, keys, bk),
+    score=lambda cfg: field_scorer(),
     # D8: the street-blocked pass uses the raised 99.5 cutoff
     # (tools/recordlinkage_funcs.py:264-267)
     verify_limit=lambda cfg, blocker: (

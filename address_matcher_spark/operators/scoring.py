@@ -30,36 +30,27 @@ FUZZY_MATCH_LIMIT = 85.0  # tools/constants.py:39
 NO_NUMBER_FUZZY_MATCH_LIMIT = 100.0  # tools/constants.py:235
 
 
-def block_cross_score(
-    search: "DataFrame",
-    ref: "DataFrame",
-    key_cols: list[str],
-    block_col: str,
-    cutoff: float = FUZZY_MATCH_LIMIT,
-):
-    """J1, the cdist shape: cogroup both sides by the block key and score
-    the full cross product INSIDE the UDF (tools/fuzzy_match.py:88-94).
-    Search side: record_id + search_mod_address; ref side: ref_id +
-    reference_mod_address.
+def token_set_scorer(cutoff: float = FUZZY_MATCH_LIMIT,
+                     block_col: str = "__bk"):
+    """J1, the cdist shape: returns ``score(left, right)``, the pandas
+    function both candidate plans of operators/blocked.py call on a set
+    of search rows (record_id, search_mod_address, block_col) and ref
+    rows (ref_id, reference_mod_address, block_col).  It scores the full
+    cross product of every block present on both sides
+    (tools/fuzzy_match.py:88-94) and returns (record_id, ref_id,
+    fuzzy_score) for the pairs >= cutoff.
 
-    Arrow transfer is O(block rows), not O(pairs): each side's strings
-    cross the JVM↔Python boundary once per block, tokenisation happens
-    once per row, and only pairs >= cutoff come back — for a 5k x 6k
-    block that is ~30M in-memory comparisons but only thousands of
-    result rows.  Skew is handled upstream by salting the search side
-    and replicating the ref side, which splits a heavy block's cross
-    product across salt groups.
+    Tokenisation happens once per row and only pairs >= cutoff come back
+    — for a 5k x 6k block that is ~30M in-memory comparisons but only
+    thousands of result rows.
 
-    block_col: the caller packs many blocks into one cogroup key
-    (blocking.pack_groups), so the real block key arrives as a DATA
-    column of this name; the UDF splits the bucket back into blocks
-    (blocking.block_slices) and scores each block's cross product
-    separately — identical pair set, ~#buckets UDF dispatches instead of
-    ~#blocks.
+    block_col: the rows may hold many blocks (a packed cogroup bucket,
+    blocking.pack_groups, or a whole small residue), so the real block
+    key is a DATA column of this name; the scorer splits the rows back
+    into blocks (blocking.block_slices) and never crosses rows from
+    different blocks.
     """
     import numpy as np
-
-    out_schema = "record_id long, ref_id long, fuzzy_score double"
 
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         import os
@@ -94,7 +85,7 @@ def block_cross_score(
         }) if parts else empty
         if prof_dir:
             # scaling-residue instrumentation (scripts/profile_block_score
-            # .py): per-group (start, call wall s, kernel wall s, pairs,
+            # .py): per-call (start, call wall s, kernel wall s, pairs,
             # call CPU s).  wall vs CPU separates memory-stall slowdown
             # (on-core, inflates both) from OS descheduling under
             # oversubscription (inflates wall only).
@@ -107,11 +98,7 @@ def block_cross_score(
                 )
         return out
 
-    return (
-        search.groupBy(*key_cols)
-        .cogroup(ref.groupBy(*key_cols))
-        .applyInPandas(score, out_schema)
-    )
+    return score
 
 
 @F.pandas_udf(DoubleType())

@@ -517,17 +517,43 @@ _register(
     """),
 )
 
-_register(
-    "er_levenshtein_best",
-    lambda spark, sf: _q(spark, sf, lambda s: (
+# packed arg-min key (er_levenshtein_best): lev << 40 | ref_id
+_LEV_BITS, _ID_BITS = 23, 40
+
+
+def _guard(col: str, bad, what: str):
+    """`col`, or a loud failure for any row where `bad` holds — one
+    check per input row, so a packed key can never silently wrap."""
+    return (F.when(bad, F.raise_error(F.lit(what)))
+            .otherwise(F.col(col)).alias(col))
+
+
+def levenshtein_best(search: DataFrame, ref: DataFrame) -> DataFrame:
+    """Per search record, the block's ref row with the least levenshtein
+    distance (ties → lowest ref_id).  search(record_id, postcode, body),
+    ref(ref_id, postcode, body)."""
+    # lev ≤ the longer body's length, so a body shorter than 2^23 keeps
+    # lev in its 23 bits; ref_id must fit the low 40 bits unsigned.
+    # Checked per input row, BEFORE the join — not per pair.
+    too_long = F.length("body") >= F.lit(1 << _LEV_BITS)
+    body = _guard("body", too_long,
+                  f"er_levenshtein_best: body longer than 2^{_LEV_BITS} - 1")
+    search = search.select("record_id", "postcode", body)
+    ref = ref.select(
+        _guard("ref_id", (F.col("ref_id") < 0)
+               | (F.col("ref_id") >= F.lit(1 << _ID_BITS)),
+               f"er_levenshtein_best: ref_id outside [0, 2^{_ID_BITS})"),
+        "postcode", body,
+    )
+    return (
         # numbered repartition BEFORE the (broadcast) join: without it the
         # pair fan-out + levenshtein run on the parquet scan's 1-2 splits
         # (the ref side broadcasts, so the join inherits the left side's
         # partitioning; AQE can't help a stage it sizes by input bytes)
-        s.table("er_search")
-        .repartition(s.sparkContext.defaultParallelism * 4)
+        search
+        .repartition(search.sparkSession.sparkContext.defaultParallelism * 4)
         .alias("s")
-        .join(s.table("er_ref").alias("r"), F.col("s.postcode") == F.col("r.postcode"))
+        .join(ref.alias("r"), F.col("s.postcode") == F.col("r.postcode"))
         # project the levenshtein ONCE before aggregating
         .select(
             "record_id", "ref_id",
@@ -541,15 +567,22 @@ _register(
         # packed into ONE bigint (lev << 40 | ref_id) so the aggregate
         # stays a codegen'd HashAggregate — min(struct(...)) planned as
         # a SortAggregate and measured SLOWER than the window (5.2 s vs
-        # 3.5 s; the packed min is 1.9-2.3 s).  Bounds: lev ≤ body
-        # length < 2^23, 0 ≤ ref_id = c_custkey < 2^40 at any TPC-H SF.
+        # 3.5 s; the packed min is 1.9-2.3 s).  The guards above enforce
+        # the bounds.
         .groupBy("record_id")
-        .agg(F.min(F.col("lev").cast("bigint") * F.lit(1 << 40)
+        .agg(F.min(F.col("lev").cast("bigint") * F.lit(1 << _ID_BITS)
                    + F.col("ref_id")).alias("__m"))
         .select("record_id",
-                F.col("__m").bitwiseAND(F.lit((1 << 40) - 1)).alias("ref_id"),
-                F.shiftright(F.col("__m"), 40).cast("int").alias("lev"))
-    )),
+                F.col("__m").bitwiseAND(F.lit((1 << _ID_BITS) - 1))
+                .alias("ref_id"),
+                F.shiftright(F.col("__m"), _ID_BITS).cast("int").alias("lev"))
+    )
+
+
+_register(
+    "er_levenshtein_best",
+    lambda spark, sf: _q(spark, sf, lambda s: levenshtein_best(
+        s.table("er_search"), s.table("er_ref"))),
     _with_er("""
     SELECT record_id, ref_id, lev FROM (
       SELECT s.record_id, r.ref_id, levenshtein(s.body, r.body) AS lev,

@@ -165,8 +165,10 @@ def prepare_sides(
     area co-filter depends on the current search corpus, and the ref
     direction is perf-only (full_match needs close_postcode_match, finer
     than area equality, so dropping other-area ref rows never changes a
-    result); the per-pass semi-join prefilter prunes at plan time
-    instead."""
+    result); each pass reads only the reference blocks its residue
+    holds instead — the salted plan's block stats join keeps only blocks
+    both sides hold, and the small plan filters the ref to the
+    residue's block keys (one bucket of a bucketed reference)."""
     if cfg.area_cofilter:
         search_kept, ref_kept, _ = cofilter.area_cofilter(
             search_raw, ref_raw, cfg.postcode_col, "Postcode",
@@ -224,8 +226,7 @@ FUZZY = blocked.Scorer(
     ref_cols=("reference_mod_address",),
     # P1 token_set_ratio, with the D1 threshold pushed into the kernel:
     # only pairs at or above fuzzy_match_limit come back
-    cross_score=lambda s, r, keys, bk, cfg: scoring.block_cross_score(
-        s, r, keys, bk, cfg.fuzzy_match_limit),
+    score=lambda cfg: scoring.token_set_scorer(cfg.fuzzy_match_limit),
     verify_limit=lambda cfg, blocker: cfg.fuzzy_match_limit,
     wratio_tiebreak=True,
 )
@@ -276,9 +277,26 @@ def run_waterfall(
     destroy (every per-pass ref dedup/histogram would shuffle again).
 
     metrics: pass a dict to collect per-stage run counters — wall seconds,
-    residue rows, and matched counts per pass (the same counters a
-    store.write records durably; this is the in-process view for ops
-    dashboards and for profiling where waterfall time goes)."""
+    residue rows, matched counts and the candidate plan per pass
+    (`small_path`), the broadcast decision (None when not measured) —
+    the same counters a store.write records durably; this is the
+    in-process view for ops dashboards and for profiling where waterfall
+    time goes.
+
+    Each pass gets a residue estimate (`residue_rows`) that sizes its
+    plan: total records minus the SUM of earlier passes' winners.  Both
+    blockers of a unit can match the same record, so the estimate can
+    UNDER-count the true residue.  Where it falls to the small candidate
+    plan's bound (blocked.SMALL_RESIDUE_ROWS) the residue is re-counted
+    exactly, and only a residue that fits is offered the small plan; the
+    estimate still sizes the salted plan.  The small plan also collects
+    at most one row more than its bound and falls back to the salted
+    plan when that many come back (a direct caller's estimate can be
+    just as wrong).  A run
+    of at most that many records takes the small plan in every pass, so
+    it neither measures the broadcast decision (a full reference scan
+    the small plan never reads) nor materialises the reference preps
+    (each pass reads only its residue's blocks)."""
     cfg = cfg or MatchConfig()
     _t = _time.perf_counter
     _t0 = _t()
@@ -305,13 +323,18 @@ def run_waterfall(
     if metrics is not None:
         metrics["sides_sec"] = round(_t() - _t0, 3)
     sides = {"min": (search_min, ref_min), "full": (search_full, ref_full)}
+    total_records = search_min.count()
+    small_run = total_records <= blocked.SMALL_RESIDUE_ROWS
     # broadcast decision measured once in BYTES, not row count (X11): the
     # ref side is dimension-like; broadcast only while the serialized table
-    # fits an executor comfortably
-    _t1 = _t()
-    bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
+    # fits an executor comfortably.  Only the salted plan reads it.
+    bc_ref, measure_sec = None, 0
+    if not small_run:
+        _t1 = _t()
+        bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
+        measure_sec = round(_t() - _t1, 3)
     if metrics is not None:
-        metrics["broadcast_measure_sec"] = round(_t() - _t1, 3)
+        metrics["broadcast_measure_sec"] = measure_sec
         metrics["broadcast_ref"] = bc_ref
         metrics["passes"] = []
     # Block-keyed ref variants (filter/rename/dedup, prep_ref_for_block):
@@ -319,7 +342,9 @@ def run_waterfall(
     # the 8-pass plan used to rebuild them per pass — 8 dedup shuffles of
     # the full reference side.  Shared across passes unless the ref is
     # already a durable bucketed table (persisting would destroy the
-    # bucketed scan's exchange-free HashPartitioning).  With a store this
+    # bucketed scan's exchange-free HashPartitioning) or the run is small
+    # (every pass then filters the lazy prep to its residue's blocks, and
+    # the filter reaches the ref scan).  With a store this
     # is a real checkpoint; otherwise localCheckpoint: the prep subtree
     # is read by its histogram and by both scorers' passes, and Catalyst
     # recomputes shared subtrees — profiled at ~15 core-s of repeated
@@ -327,7 +352,7 @@ def run_waterfall(
     # variant measured SLOWER end-to-end: columnar compress-on-write +
     # decompress-per-read beats a local checkpoint scan only when the
     # frame is read once, and these are read ~3×.)
-    materialize_prep = not ref_materialized
+    materialize_prep = not ref_materialized and not small_run
     _prep_futs: dict[tuple[str, str], "CFuture"] = {}
     _prep_rows: dict[tuple[str, str], int] = {}
     _prep_hists: dict[tuple[str, str], DataFrame] = {}
@@ -377,7 +402,7 @@ def run_waterfall(
 
     passes: list[DataFrame] = []
 
-    def run_pass(scorer, level, blocker, name, residue, residue_rows):
+    def run_pass(scorer, level, blocker, name, residue, residue_rows, small):
         # NOTE: does not touch `passes` — a unit runs its two passes from
         # worker threads, and pass_priority (combine_passes) must follow
         # PLAN order, so the caller appends results in unit order.
@@ -390,9 +415,11 @@ def run_waterfall(
         # get_prep call, so evaluate it first.
         k = (level, blocker)
         ref_prepped = get_prep(level, blocker)
+        info: dict = {}
         out = blocked.blocked_pass(
             scorer, residue, sides[level][1], blocker, cfg, name, bc_ref,
             residue_rows, ref_prepped, _prep_rows.get(k), _prep_hists.get(k),
+            small=small, info=info,
         )
         obs = Observation()
         out = out.select(*RESULT_COLS).observe(
@@ -406,7 +433,7 @@ def run_waterfall(
         # metric is available; .get would block forever only if the
         # action somehow skipped execution, which store.write/
         # localCheckpoint never do
-        return out, int(obs.get["won"])
+        return out, int(obs.get["won"]), info["small_path"]
 
     # The reference's fall-back-to-the-postcode-result-when-street-finds-
     # nothing behaviour (tools/matcher_funcs.py:1455-1462) is structural
@@ -466,28 +493,40 @@ def run_waterfall(
     #
     # early-exit gate (X2, ref tools/matcher_funcs.py:1013-1017): the
     # reference aborts the waterfall when nothing is left to match; the
-    # gate runs between units.  Pass winners within a unit may overlap
-    # (both blockers can match the same record), so the matched total is
-    # a distinct count over the units' (tiny, checkpointed) winner ids —
-    # one cheap job, only when the corpus looks done.
-    total_records = search_min.count()
+    # gate runs between units.
+    #
+    # matched_count SUMS the observed per-pass winner counts and sizes the
+    # salted plan.  A unit's two blockers can both match a record (only
+    # when both won something: `overcount`), so the sum can over-count
+    # and the residue it implies under-count.  matched_hi is the same
+    # upper bound on the matched records, made exact by one distinct
+    # count over the units' (tiny, checkpointed) winner ids wherever a
+    # decision needs it: before the early exit, and before a residue is
+    # offered the small candidate plan.
     matched_union: DataFrame | None = None
-    matched_count = 0
+    matched_count = matched_hi = 0
+    overcount = False
     try:
         for sname, scorer, level in units:
             if passes and matched_count >= total_records:
-                # matched_count is a SUM of observed per-pass winner
-                # counts — a unit's two blockers can both match the same
-                # record, so it is an upper bound.  Confirm with one
-                # exact distinct count (over tiny checkpointed winner
-                # ids) before skipping real matching work; this fires at
-                # most once per run, only when the corpus looks done.
-                matched_count = matched_union.distinct().count()
+                # the corpus looks done: confirm before skipping work
+                matched_count = matched_hi = matched_union.distinct().count()
+                overcount = False
                 if matched_count >= total_records:
                     break  # every search record already has a full match
             # (the first unit always runs so an empty input still yields
             # a result frame with the full schema)
             residue_rows = max(1, total_records - matched_count)
+            small_rows = blocked.SMALL_RESIDUE_ROWS
+            if overcount and total_records - matched_hi <= small_rows:
+                matched_hi = matched_union.distinct().count()
+                overcount = False
+            # the small plan only for a residue that really fits it; the
+            # estimate still sizes the salted plan (perfbench batch_skewed
+            # seed 1, local[4]: levels 3-4 hold ~360 records but estimate
+            # 20, and the 4 scoring partitions an exact count gives
+            # measured ~0.3 s per level slower than the estimate's 1)
+            small = total_records - matched_hi <= small_rows
             side = sides[level][0]
             residue = side if matched_union is None else side.join(
                 matched_union, "record_id", "left_anti"
@@ -497,21 +536,20 @@ def run_waterfall(
             with ThreadPoolExecutor(len(BLOCKERS)) as ex:
                 futs = [
                     ex.submit(run_pass, scorer, level, blocker, name,
-                              residue, residue_rows)
+                              residue, residue_rows, small)
                     for name, (_, blocker) in zip(names, BLOCKERS)
                 ]
                 outs = [f.result() for f in futs]
-            passes.extend(out for out, _ in outs)
+            passes.extend(out for out, _, _ in outs)
             # winner count folded into the checkpoint write via observe()
-            # (run_pass) — no separate count job per unit.  The sum can
-            # double-count a record both blockers match; it only feeds
-            # the early-exit gate (which re-verifies exactly before
-            # firing) and the residue-size partitioning hints, where an
-            # under-estimate is harmless.
-            won = sum(w for _, w in outs)
+            # (run_pass) — no separate count job per unit.
+            wins = [w for _, w, _ in outs]
+            won = sum(wins)
             matched_count += won
+            matched_hi += won
+            overcount = overcount or sum(w > 0 for w in wins) > 1
             winners = None
-            for out, _ in outs:
+            for out, _, _ in outs:
                 w = out.filter(F.col("full_match")).select("record_id")
                 winners = w if winners is None else winners.unionByName(w)
             if metrics is not None:
@@ -519,7 +557,8 @@ def run_waterfall(
                     "pass": "+".join(names),
                     "residue_rows": int(residue_rows),
                     "matched": int(won),
-                    "matched_per_pass": [int(w) for _, w in outs],
+                    "matched_per_pass": [int(w) for w in wins],
+                    "small_path": [small for _, _, small in outs],
                     "seconds": round(_t() - tpass, 3),
                 })
             matched_union = winners if matched_union is None else (

@@ -4,7 +4,7 @@ In-Spark 8→32 block-score efficiency (0.626 at r3) trails the pure-kernel
 multiprocessing calibration (0.748) on the same box.  This script
 attributes the gap: it runs the stage once per parallelism level in a
 FRESH subprocess (honest JVM thread counts), with the per-group timing
-hook in scoring.block_cross_score (SPARK_GRAFT_PROF_DIR) recording, for
+hook in scoring.token_set_scorer (SPARK_GRAFT_PROF_DIR) recording, for
 every cogroup call, the worker pid, whole-call seconds (Arrow batch →
 pandas assembly + kernel), kernel seconds, and pair count.
 

@@ -114,3 +114,25 @@ def test_register_views_restores_dropped_view(spark):
     spark.catalog.dropTempView("er_ref")
     register_views(spark, SF_DIR)
     assert spark.table("er_ref").limit(1).count() == 1
+
+
+def test_levenshtein_best_rejects_out_of_range_ref_id(spark):
+    """er_levenshtein_best packs (lev, ref_id) into one bigint with
+    ref_id in the low 40 bits: an id outside [0, 2^40) must fail the
+    query, not wrap into a wrong arg-min.  The largest valid id works."""
+    from address_matcher_spark.plans.driver_queries import levenshtein_best
+
+    schema = "id long, postcode string, body string"
+    search = spark.createDataFrame([(1, "AB1", "1 high st")], schema) \
+        .withColumnRenamed("id", "record_id")
+
+    def ref(i):
+        return spark.createDataFrame([(i, "AB1", "1 high st")], schema) \
+            .withColumnRenamed("id", "ref_id")
+
+    top = (1 << 40) - 1
+    got = levenshtein_best(search, ref(top)).collect()
+    assert [(r.record_id, r.ref_id, r.lev) for r in got] == [(1, top, 0)]
+    for bad in (1 << 40, -1):
+        with pytest.raises(Exception, match="ref_id outside"):
+            levenshtein_best(search, ref(bad)).collect()

@@ -6,7 +6,9 @@ an explicit block join scored independently —
     expressions (reference semantics tools/recordlinkage_funcs.py:15-278);
   * fuzzy scorer: the scalar token_set_ratio kernel on every block pair,
     kept at or above fuzzy_match_limit (tools/fuzzy_match.py:88-94).
-Both at the default salting and at a forced multi-way split."""
+Both at the default salting and at a forced multi-way split, and through
+the small-residue plan (and its fallback when the residue estimate
+under-counts)."""
 
 from __future__ import annotations
 
@@ -105,20 +107,42 @@ SCORERS = {
 }
 
 
-@pytest.mark.parametrize("salt_target_pairs", [None, 50],
-                         ids=["default", "salted"])
+# case → (salt_target_pairs, residue_rows).  "small" scores a subset of
+# at most blocked.SMALL_RESIDUE_ROWS records with its row count as the
+# residue estimate, so the small (mapInPandas) plan runs; "underestimated"
+# states a residue of 1 for the whole fixture, so the bounded collect
+# finds too many rows and falls back to the salted cogroup.
+CASES = {
+    "default": (None, None),
+    "salted": (50, None),
+    "small": (None, "small"),
+    "underestimated": (None, 1),
+}
+
+
+@pytest.mark.parametrize("case", list(CASES))
 @pytest.mark.parametrize("blocker", ["Postcode", "Street"])
 @pytest.mark.parametrize("scorer", sorted(SCORERS))
-def test_candidates_parity(sides, scorer, blocker, salt_target_pairs):
+def test_candidates_parity(sides, scorer, blocker, case):
     """salt_target_pairs=50 forces every block above 50 pairs into a
     multi-way grid split: the per-group maxima plus the keep_max_score
-    window must still give the global per-record max."""
+    window must still give the global per-record max.  Both candidate
+    plans must give the same candidates as the explicit block join."""
     smin, rmin, _ = sides
+    salt_target_pairs, residue_rows = CASES[case]
+    if residue_rows == "small":
+        smin = smin.filter(F.pmod(F.col("record_id"), 3) == 0).localCheckpoint()
+        residue_rows = smin.count()
+        assert 0 < residue_rows <= blocked.SMALL_RESIDUE_ROWS
     cfg = P.MatchConfig(salt_target_pairs=salt_target_pairs)
     spec, expected = SCORERS[scorer]
+    cand, _ = blocked.candidates(spec, smin, rmin, blocker, cfg,
+                                 residue_rows)
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    assert ("FlatMapCoGroupsInPandas" in plan) == (case != "small")
     got = {
         (r["record_id"], r["ref_id"], r["fuzzy_score"])
-        for r in blocked.candidates(spec, smin, rmin, blocker, cfg).collect()
+        for r in cand.collect()
     }
     want = {
         (r["record_id"], r["ref_id"], r["fuzzy_score"])

@@ -63,12 +63,34 @@ def test_search_from_pages_roundtrip(spark, fixtures):
 
 
 @pytest.fixture(scope="module")
-def results(sides):
+def waterfall(sides):
+    metrics: dict = {}
     res = P.run_waterfall(
         sides["search_min"], sides["search_full"],
-        sides["ref_min"], sides["ref_full"], sides["cfg"],
+        sides["ref_min"], sides["ref_full"], sides["cfg"], metrics=metrics,
     )
-    return res.toPandas()
+    return res.toPandas(), metrics
+
+
+@pytest.fixture(scope="module")
+def results(waterfall):
+    return waterfall[0]
+
+
+def test_small_plan_follows_true_residue(waterfall):
+    """Each unit's passes take the small candidate plan exactly when the
+    unit's TRUE residue fits blocked.SMALL_RESIDUE_ROWS.  A record keeps
+    the row of its earliest full-match pass, so the records matched
+    before a unit are the full matches whose method names an earlier
+    pass."""
+    res, metrics = waterfall
+    methods = res.loc[res["full_match"], "match_method"]
+    done = 0
+    for unit in metrics["passes"]:
+        residue = metrics["total_records"] - done
+        fits = residue <= blocked.SMALL_RESIDUE_ROWS
+        assert unit["small_path"] == [fits] * len(unit["small_path"]), unit
+        done += int(methods.isin(unit["pass"].split("+")).sum())
 
 
 def test_pairwise_f1(results, fixtures, spark):
@@ -234,3 +256,46 @@ def test_early_exit_after_full_pass1(spark, monkeypatch):
     res = P.run_waterfall(smin, sfull, rmin, rfull, cfg).toPandas()
     assert seen == [P.FUZZY, P.FUZZY]  # one LEVEL, no field pass
     assert res["full_match"].all() and len(res) == 3
+
+
+def _blank_keys(df, value):
+    """The frame with both block keys set to `value` (a string or None)."""
+    lit = F.lit(value).cast("string")
+    return df.withColumn("postcode_search", lit).withColumn("street_key", lit)
+
+
+@pytest.mark.parametrize("residue", ["empty", "empty_key", "null_key"])
+@pytest.mark.parametrize("blocker", ["Postcode", "Street"])
+def test_small_pass_on_adversarial_residue(sides, residue, blocker):
+    """Adversarial residues through the small candidate plan: no rows, or
+    one row whose only block key is empty or null.  Each pass returns
+    zero rows with the full result schema, for both scorers."""
+    one = sides["search_min"].limit(1)
+    res = {
+        "empty": one.limit(0),
+        "empty_key": _blank_keys(one, ""),
+        "null_key": _blank_keys(one, None),
+    }[residue].localCheckpoint()
+    for scorer in (P.FUZZY, FM.FIELD):
+        info: dict = {}
+        out = blocked.blocked_pass(scorer, res, sides["ref_min"], blocker,
+                                   sides["cfg"], "adversarial",
+                                   residue_rows=1, info=info)
+        assert info["small_path"]
+        assert out.select(*P.RESULT_COLS).count() == 0
+
+
+def test_waterfall_one_record_without_block_keys(sides):
+    """One record with an empty postcode and an empty street key: no pass
+    has a block to search, so the waterfall returns an empty frame with
+    the result columns, not an error."""
+    smin = _blank_keys(sides["search_min"].limit(1), "").localCheckpoint()
+    sfull = _blank_keys(sides["search_full"].limit(1), "").localCheckpoint()
+    metrics: dict = {}
+    res = P.run_waterfall(smin, sfull, sides["ref_min"], sides["ref_full"],
+                          sides["cfg"], metrics=metrics).toPandas()
+    assert len(res) == 0
+    assert set(P.RESULT_COLS) <= set(res.columns)
+    assert metrics["broadcast_ref"] is None
+    assert metrics["broadcast_measure_sec"] == 0
+    assert all(all(p["small_path"]) for p in metrics["passes"])

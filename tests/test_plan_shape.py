@@ -265,3 +265,33 @@ def test_line_boilerplate_shuffles_hash_keys_not_strings(spark):
         assert not re.search(r"\bline#", keys), (
             "exchange keyed on the raw line string: " + keys
         )
+
+
+def test_small_residue_pass_reads_one_bucket(spark, tiny_sides, tmp_path):
+    """A residue of at most blocked.SMALL_RESIDUE_ROWS records takes the
+    small candidate plan: no salting, packing or cogroup — one
+    mapInPandas over the ref rows of the residue's blocks, which on a
+    reference bucketed by postcode is ONE bucket, and a tail whose
+    windows reuse the one-partition shortlist (broadcast join-backs
+    only)."""
+    from address_matcher_spark.sources.bucketing import ensure_bucketed_ref
+
+    smin, rmin, cfg = tiny_sides
+    one = smin.filter(F.col("postcode_search") != "").limit(1).localCheckpoint()
+    ref = ensure_bucketed_ref(spark, rmin, "plan_small_ref_b", n_buckets=4,
+                              path=str(tmp_path / "ref_b"))
+    info: dict = {}
+    out = P.fuzzy_pass(one, ref, "Postcode", cfg, "plan_test",
+                       residue_rows=1, info=info)
+    plan = _plan(out)
+    assert info["small_path"]
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "REPARTITION_BY_NUM" not in plan
+    assert plan.count("MapInPandas") == 1
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan" in ln and "plan_small_ref_b" in ln]
+    assert scans and all("SelectedBucketsCount: 1 out of 4" in ln
+                         for ln in scans), plan
+    # the two broadcasts only: the tail's windows reuse the one partition
+    assert plan.count("Exchange") <= 2, plan
+    assert out.count() == 1
