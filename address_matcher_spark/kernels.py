@@ -26,7 +26,6 @@ __all__ = [
     "indel_distance",
     "ratio",
     "token_set_ratio",
-    "token_set_ratio_cutoff",
     "jaro_similarity",
     "jaro_winkler_similarity",
     "levenshtein",
@@ -106,14 +105,6 @@ def token_set_ratio(s1: str, s2: str) -> float:
     sect_ba_dist = (1 if sect_len else 0) + ba_len
     sect_ba_ratio = (1.0 - sect_ba_dist / (sect_len + sect_ba_len)) * 100.0
     return max(result, sect_ab_ratio, sect_ba_ratio)
-
-
-def token_set_ratio_cutoff(s1: str, s2: str, cutoff: float) -> float:
-    """token_set_ratio with rapidfuzz ``score_cutoff`` semantics: scores
-    below the cutoff collapse to 0 (``process.cdist(score_cutoff=...)``,
-    reference ``tools/fuzzy_match.py:88,94``)."""
-    score = token_set_ratio(s1, s2)
-    return score if score >= cutoff else 0.0
 
 
 def jaro_similarity(s1: str, s2: str) -> float:

@@ -107,23 +107,17 @@ def candidates(
     ref_prepped: DataFrame | None = None,
     ref_rows: int | None = None,
     ref_hist: DataFrame | None = None,
-    small: bool | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Candidate stage: every search record's max-score ref candidates
     (ties kept) within its block, as (record_id, ref_id, fuzzy_score);
     and the block-filtered ref prep the small plan scored (None when the
     salted plan ran).
 
-    residue_rows: the caller's estimate of the search rows left; it
-    sizes the salted plan and, unless `small` says otherwise, at most
-    SMALL_RESIDUE_ROWS selects the small plan.  An estimate can
-    under-count, so the small plan collects at most one row more than
-    the bound and falls back to the salted plan when that many come
-    back.
-
-    small: the caller's own choice of plan (run_waterfall counts the
-    residue exactly where its estimate may under-count); None decides
-    from residue_rows.
+    residue_rows: the search rows left; at most SMALL_RESIDUE_ROWS
+    selects the small plan, and it sizes the salted plan.  run_waterfall
+    passes each unit's exact residue count.  A direct caller's figure may
+    be wrong, so the small plan collects at most one row more than the
+    bound and falls back to the salted plan when that many come back.
 
     ref_prepped / ref_rows / ref_hist: the prep_ref_for_block variant,
     its row count and its materialised (__bk, count) histogram —
@@ -140,9 +134,7 @@ def candidates(
     )
     score = scorer.score(cfg)
 
-    if small is None:
-        small = residue_rows is not None and residue_rows <= SMALL_RESIDUE_ROWS
-    if small:
+    if residue_rows is not None and residue_rows <= SMALL_RESIDUE_ROWS:
         left = s.limit(SMALL_RESIDUE_ROWS + 1).toPandas()
         if len(left) <= SMALL_RESIDUE_ROWS:
             # the key filter pushes below the prep's dedup into the scan:
@@ -211,8 +203,6 @@ def blocked_pass(
     ref_prepped: DataFrame | None = None,
     ref_rows: int | None = None,
     ref_hist: DataFrame | None = None,
-    small: bool | None = None,
-    info: dict | None = None,
 ) -> DataFrame:
     """J1/J4 block → P1 or J5/P6 cross-score → J6 shortlist → D1-D8
     verify → P2 tie-break → W1 best.  Returns one row per attempted
@@ -224,16 +214,11 @@ def blocked_pass(
     run_waterfall threads its once-measured decision in; a DIRECT caller
     falls back to a fresh byte measurement — never an unconditional
     broadcast (a multi-GB ref side would OOM the executors).  The small
-    plan never reads it.
-
-    small: see candidates.  info: pass a dict to learn which candidate
-    plan ran (info["small_path"])."""
+    plan never reads it."""
     shortlist, ref_small = candidates(
         scorer, search_std, ref_std, blocker, cfg, residue_rows,
-        ref_prepped, ref_rows, ref_hist, small,
+        ref_prepped, ref_rows, ref_hist,
     )
-    if info is not None:
-        info["small_path"] = ref_small is not None
     # join the (now tiny) shortlist back to both sides for verification
     search_back = search_std.drop(*_KEYS.values())
     if ref_small is not None:

@@ -283,20 +283,15 @@ def run_waterfall(
     in-process view for ops dashboards and for profiling where waterfall
     time goes.
 
-    Each pass gets a residue estimate (`residue_rows`) that sizes its
-    plan: total records minus the SUM of earlier passes' winners.  Both
-    blockers of a unit can match the same record, so the estimate can
-    UNDER-count the true residue.  Where it falls to the small candidate
-    plan's bound (blocked.SMALL_RESIDUE_ROWS) the residue is re-counted
-    exactly, and only a residue that fits is offered the small plan; the
-    estimate still sizes the salted plan.  The small plan also collects
-    at most one row more than its bound and falls back to the salted
-    plan when that many come back (a direct caller's estimate can be
-    just as wrong).  A run
-    of at most that many records takes the small plan in every pass, so
-    it neither measures the broadcast decision (a full reference scan
-    the small plan never reads) nor materialises the reference preps
-    (each pass reads only its residue's blocks)."""
+    One exact residue per unit: every unit after the first materialises
+    the records no earlier pass full-matched, counting them in the same
+    job, and that count (`residue_rows`) decides the early exit, picks
+    the candidate plan (the small plan at most blocked.SMALL_RESIDUE_ROWS
+    records) and sizes the salted plan.  A run of at most that many
+    records takes the small plan in every pass, so it neither measures
+    the broadcast decision (a full reference scan the small plan never
+    reads) nor materialises the reference preps (each pass reads only
+    its residue's blocks)."""
     cfg = cfg or MatchConfig()
     _t = _time.perf_counter
     _t0 = _t()
@@ -402,7 +397,7 @@ def run_waterfall(
 
     passes: list[DataFrame] = []
 
-    def run_pass(scorer, level, blocker, name, residue, residue_rows, small):
+    def run_pass(scorer, level, blocker, name, residue, residue_rows):
         # NOTE: does not touch `passes` — a unit runs its two passes from
         # worker threads, and pass_priority (combine_passes) must follow
         # PLAN order, so the caller appends results in unit order.
@@ -415,11 +410,9 @@ def run_waterfall(
         # get_prep call, so evaluate it first.
         k = (level, blocker)
         ref_prepped = get_prep(level, blocker)
-        info: dict = {}
         out = blocked.blocked_pass(
             scorer, residue, sides[level][1], blocker, cfg, name, bc_ref,
             residue_rows, ref_prepped, _prep_rows.get(k), _prep_hists.get(k),
-            small=small, info=info,
         )
         obs = Observation()
         out = out.select(*RESULT_COLS).observe(
@@ -433,7 +426,7 @@ def run_waterfall(
         # metric is available; .get would block forever only if the
         # action somehow skipped execution, which store.write/
         # localCheckpoint never do
-        return out, int(obs.get["won"]), info["small_path"]
+        return out, int(obs.get["won"])
 
     # The reference's fall-back-to-the-postcode-result-when-street-finds-
     # nothing behaviour (tools/matcher_funcs.py:1455-1462) is structural
@@ -493,72 +486,58 @@ def run_waterfall(
     #
     # early-exit gate (X2, ref tools/matcher_funcs.py:1013-1017): the
     # reference aborts the waterfall when nothing is left to match; the
-    # gate runs between units.
+    # gate runs between units, on the unit's exact residue.
     #
-    # matched_count SUMS the observed per-pass winner counts and sizes the
-    # salted plan.  A unit's two blockers can both match a record (only
-    # when both won something: `overcount`), so the sum can over-count
-    # and the residue it implies under-count.  matched_hi is the same
-    # upper bound on the matched records, made exact by one distinct
-    # count over the units' (tiny, checkpointed) winner ids wherever a
-    # decision needs it: before the early exit, and before a residue is
-    # offered the small candidate plan.
+    # The residue of every unit after the first is materialised once and
+    # counted in the same job (observe): the side minus the records
+    # earlier passes full-matched.  Both passes of the unit read that one
+    # checkpoint instead of re-deriving the anti-join in every job.  It
+    # is a localCheckpoint in store mode too: it is derived from the
+    # committed pass outputs, and nothing resumes from it.
     matched_union: DataFrame | None = None
-    matched_count = matched_hi = 0
-    overcount = False
+    residue_rows = total_records
     try:
         for sname, scorer, level in units:
-            if passes and matched_count >= total_records:
-                # the corpus looks done: confirm before skipping work
-                matched_count = matched_hi = matched_union.distinct().count()
-                overcount = False
-                if matched_count >= total_records:
-                    break  # every search record already has a full match
-            # (the first unit always runs so an empty input still yields
-            # a result frame with the full schema)
-            residue_rows = max(1, total_records - matched_count)
-            small_rows = blocked.SMALL_RESIDUE_ROWS
-            if overcount and total_records - matched_hi <= small_rows:
-                matched_hi = matched_union.distinct().count()
-                overcount = False
-            # the small plan only for a residue that really fits it; the
-            # estimate still sizes the salted plan (perfbench batch_skewed
-            # seed 1, local[4]: levels 3-4 hold ~360 records but estimate
-            # 20, and the 4 scoring partitions an exact count gives
-            # measured ~0.3 s per level slower than the estimate's 1)
-            small = total_records - matched_hi <= small_rows
-            side = sides[level][0]
-            residue = side if matched_union is None else side.join(
-                matched_union, "record_id", "left_anti"
-            )
-            names = [f"{sname}_{level}_{b}" for b, _ in BLOCKERS]
             tpass = _t()
+            side = sides[level][0]
+            if matched_union is None:
+                # the first unit always runs, so an empty input still
+                # yields a result frame with the full schema
+                residue = side
+            else:
+                obs = Observation()
+                residue = side.join(
+                    matched_union, "record_id", "left_anti"
+                ).observe(obs, F.count(F.lit(1)).alias("rows"))
+                residue = residue.localCheckpoint()
+                residue_rows = int(obs.get["rows"])
+                if residue_rows == 0:
+                    break  # every search record already has a full match
+            names = [f"{sname}_{level}_{b}" for b, _ in BLOCKERS]
             with ThreadPoolExecutor(len(BLOCKERS)) as ex:
                 futs = [
                     ex.submit(run_pass, scorer, level, blocker, name,
-                              residue, residue_rows, small)
+                              residue, residue_rows)
                     for name, (_, blocker) in zip(names, BLOCKERS)
                 ]
                 outs = [f.result() for f in futs]
-            passes.extend(out for out, _, _ in outs)
+            passes.extend(out for out, _ in outs)
             # winner count folded into the checkpoint write via observe()
             # (run_pass) — no separate count job per unit.
-            wins = [w for _, w, _ in outs]
-            won = sum(wins)
-            matched_count += won
-            matched_hi += won
-            overcount = overcount or sum(w > 0 for w in wins) > 1
+            wins = [w for _, w in outs]
             winners = None
-            for out, _, _ in outs:
+            for out, _ in outs:
                 w = out.filter(F.col("full_match")).select("record_id")
                 winners = w if winners is None else winners.unionByName(w)
             if metrics is not None:
                 metrics["passes"].append({
                     "pass": "+".join(names),
                     "residue_rows": int(residue_rows),
-                    "matched": int(won),
+                    "matched": int(sum(wins)),
                     "matched_per_pass": [int(w) for w in wins],
-                    "small_path": [small for _, _, small in outs],
+                    "small_path": [
+                        residue_rows <= blocked.SMALL_RESIDUE_ROWS
+                    ] * len(outs),
                     "seconds": round(_t() - tpass, 3),
                 })
             matched_union = winners if matched_union is None else (
@@ -576,7 +555,7 @@ def run_waterfall(
 
     if metrics is not None:
         metrics["total_records"] = int(total_records)
-        metrics["matched"] = int(matched_count)
+        metrics["matched"] = sum(p["matched"] for p in metrics["passes"])
         metrics["waterfall_sec"] = round(_t() - _t0, 3)
     return select.combine_passes(passes, key="record_id")
 

@@ -58,7 +58,6 @@ def main() -> None:
     s = (sides["smin"].filter(F.col(key) != "")
          .withColumnRenamed(key, "__bk").drop("street_key"))
     r = P.prep_ref_for_block(sides["rmin"], "Postcode")
-    r = blocking.prefilter_ref(r, s, "__bk")
     s_salted, r_salted, extra = blocking.salt_for_cogroup_adaptive(
         s.select("record_id", "__bk", "search_mod_address"),
         r.select("ref_id", "__bk", "reference_mod_address"),

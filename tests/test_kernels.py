@@ -74,8 +74,13 @@ def test_token_set_ratio_example_values():
 def test_token_set_cutoff():
     s = K.token_set_ratio("1 ash road", "2 beech lane")
     assert s < 85
-    assert K.token_set_ratio_cutoff("1 ash road", "2 beech lane", 85.0) == 0.0
-    assert K.token_set_ratio_cutoff("flat 2 maple road", "2 maple road", 85.0) == 100.0
+    # the production cross kernel drops pairs below the cutoff
+    il, jr, sc = K.cross_token_set_scores(
+        [["1", "ash", "road"]], [["2", "beech", "lane"]], 85.0)
+    assert len(il) == len(jr) == len(sc) == 0
+    il, jr, sc = K.cross_token_set_scores(
+        [["flat", "2", "maple", "road"]], [["2", "maple", "road"]], 85.0)
+    assert (il.tolist(), jr.tolist(), sc.tolist()) == ([0], [0], [100.0])
 
 
 CORPUS = [

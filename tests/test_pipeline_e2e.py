@@ -78,16 +78,17 @@ def results(waterfall):
 
 
 def test_small_plan_follows_true_residue(waterfall):
-    """Each unit's passes take the small candidate plan exactly when the
-    unit's TRUE residue fits blocked.SMALL_RESIDUE_ROWS.  A record keeps
-    the row of its earliest full-match pass, so the records matched
-    before a unit are the full matches whose method names an earlier
-    pass."""
+    """Each unit reports its TRUE residue as `residue_rows`, and its
+    passes take the small candidate plan exactly when that residue fits
+    blocked.SMALL_RESIDUE_ROWS.  A record keeps the row of its earliest
+    full-match pass, so the records matched before a unit are the full
+    matches whose method names an earlier pass."""
     res, metrics = waterfall
     methods = res.loc[res["full_match"], "match_method"]
     done = 0
     for unit in metrics["passes"]:
         residue = metrics["total_records"] - done
+        assert unit["residue_rows"] == residue, unit
         fits = residue <= blocked.SMALL_RESIDUE_ROWS
         assert unit["small_path"] == [fits] * len(unit["small_path"]), unit
         done += int(methods.isin(unit["pass"].split("+")).sum())
@@ -277,11 +278,13 @@ def test_small_pass_on_adversarial_residue(sides, residue, blocker):
         "null_key": _blank_keys(one, None),
     }[residue].localCheckpoint()
     for scorer in (P.FUZZY, FM.FIELD):
-        info: dict = {}
         out = blocked.blocked_pass(scorer, res, sides["ref_min"], blocker,
                                    sides["cfg"], "adversarial",
-                                   residue_rows=1, info=info)
-        assert info["small_path"]
+                                   residue_rows=1)
+        # the analyzed plan: an empty residue optimises the scorer away
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "MapInPandas" in plan
+        assert "FlatMapCoGroupsInPandas" not in plan
         assert out.select(*P.RESULT_COLS).count() == 0
 
 

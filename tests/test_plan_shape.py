@@ -280,11 +280,10 @@ def test_small_residue_pass_reads_one_bucket(spark, tiny_sides, tmp_path):
     one = smin.filter(F.col("postcode_search") != "").limit(1).localCheckpoint()
     ref = ensure_bucketed_ref(spark, rmin, "plan_small_ref_b", n_buckets=4,
                               path=str(tmp_path / "ref_b"))
-    info: dict = {}
     out = P.fuzzy_pass(one, ref, "Postcode", cfg, "plan_test",
-                       residue_rows=1, info=info)
+                       residue_rows=1)
     plan = _plan(out)
-    assert info["small_path"]
+    assert "MapInPandas" in plan
     assert "FlatMapCoGroupsInPandas" not in plan
     assert "REPARTITION_BY_NUM" not in plan
     assert plan.count("MapInPandas") == 1
