@@ -5,21 +5,27 @@ tools/matcher_funcs.py:988-1074).
 The fuzzy passes (rapidfuzz token_set_ratio, pipeline.FUZZY) and the
 field-wise passes (weighted per-field sum, fieldmatch.FIELD) run the SAME
 pipeline; a `Scorer` record holds only what differs between them, and
-`blocked_pass` is the one implementation of everything else:
+`blocked_pass` is the one implementation of everything else.
 
-  candidates  block-key select/rename → ref prep → one of two plans,
-              both calling the scorer's own pandas score(left, right)
-              → per-record max:
+One call scores one blocker or several in ONE plan (run_waterfall
+passes both).  Each side holds a row per record and blocker with a
+non-empty key, tagged in the column __blocker, and every step keys on
+(record, blocker), so rows of different blockers never meet:
+
+  candidates  per-blocker block-key select/rename, unioned → ref prep
+              (prep_ref) → one of two plans, both calling the scorer's
+              own pandas score(left, right) per blocker → per-record max:
     small     residue of at most SMALL_RESIDUE_ROWS records: collect it
               (bounded), keep the ref rows whose block key it holds
-              (`__bk IN (...)` — one bucket on a bucketed reference),
-              score them in ONE mapInPandas task
+              (`__bk IN (...)` per blocker — one bucket of a reference
+              bucketed by postcode), score them in ONE mapInPandas task
     salted    per-block grid salting (keeps only blocks both sides
               hold) → hash packing → numbered repartition → cogrouped
               Arrow cross-score
   tail        join-back to both sides (small: broadcast sides bounded
               by the residue; salted: the measured broadcast decision)
-              → D1-D7 decisions → optional wratio tie-break → W1 best
+              → D1-D7 decisions (the row's blocker's rules) → optional
+              wratio tie-break → W1 best
 
 Why 127: _util.scoring_npart gives a residue below 128 rows ONE scoring
 partition already, so the salted plan spends a salting-stats job, two
@@ -32,11 +38,12 @@ ROADMAP.md (item 5).
 from __future__ import annotations
 
 import functools
+import operator
 from dataclasses import dataclass
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from address_matcher_spark.operators import (
@@ -45,8 +52,12 @@ from address_matcher_spark.operators import (
 
 # at most this many residue rows take the small plan (see module doc)
 SMALL_RESIDUE_ROWS = 127
-_CAND_SCHEMA = "record_id long, ref_id long, fuzzy_score double"
+_CAND_SCHEMA = (
+    "record_id long, ref_id long, fuzzy_score double, __blocker string"
+)
 _KEYS = {"Postcode": "postcode_search", "Street": "street_key"}
+_BLOCK = ["__blocker", "__bk"]  # a block: the blocker and its key value
+_RECORD = ["record_id", "__blocker"]  # one attempt: a record in one blocker
 
 
 @dataclass(frozen=True)
@@ -61,7 +72,8 @@ class Scorer:
                   rows and ref rows (each carrying the block key as the
                   column __bk) to their (record_id, ref_id, fuzzy_score)
                   candidates; both candidate plans call it.
-    verify_limit: (cfg, blocker) → the D1 score threshold.
+    verify_limit: (cfg, blocker) → the D1 score threshold, where blocker
+                  is the column holding each row's blocker name.
     wratio_tiebreak: whether tied shortlists get the plain-ratio
                   tie-break (P2); the field pass carries a null score.
     """
@@ -70,23 +82,56 @@ class Scorer:
     search_cols: tuple[str, ...]
     ref_cols: tuple[str, ...]
     score: Callable[..., Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame]]
-    verify_limit: Callable[..., float]
+    verify_limit: Callable[..., float | Column]
     wratio_tiebreak: bool
 
 
 def prep_ref_for_block(ref_std: DataFrame, blocker: str) -> DataFrame:
     """Block-keyed reference variant: filter empty keys, rename the block
     key to __bk, drop the other key, dedup identical standardised rows
-    (X7 — join-key fan-out guard).  There are only FOUR distinct variants
-    per run ((min|full) × (postcode|street)); run_waterfall materialises
-    them once and threads them into every pass instead of paying the
-    dedup shuffle 8× (once per pass).  A bucketed reference or a small
-    run keeps the prep lazy, so a pass's block-key filter reaches the
-    ref scan."""
+    (X7 — join-key fan-out guard).  prep_ref unions them."""
     key = _KEYS[blocker]
     r = ref_std.filter(F.col(key) != "").withColumnRenamed(key, "__bk")
     r = r.drop(*(set(_KEYS.values()) - {key}))
     return r.dropDuplicates(["__bk", "reference_mod_address"])
+
+
+def _names(x) -> tuple[str, ...]:
+    return (x,) if isinstance(x, str) else tuple(x)
+
+
+def _union(frames) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
+def prep_ref(ref_std: DataFrame, blocker) -> DataFrame:
+    """The ref prep of one blocker or several: prep_ref_for_block of
+    each, tagged with its __blocker and unioned.  run_waterfall
+    materialises one per level and threads it into every unit; a lazy
+    prep (bucketed reference, small run) lets each blocker's key filter
+    reach its own branch's ref scan."""
+    return _union(
+        prep_ref_for_block(ref_std, b).withColumn("__blocker", F.lit(b))
+        for b in _names(blocker)
+    )
+
+
+def _per_blocker(score):
+    """The scorer over rows of several blockers: each blocker's rows are
+    scored apart and their candidates tagged with it, so rows of
+    different blockers never cross, even where a postcode key equals a
+    street key.  Empty parts are skipped (their float columns would turn
+    the int64 ids to floats); no candidates give a frame without
+    columns, the empty result Spark accepts for any schema."""
+    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        parts = []
+        for b, rows in left.groupby("__blocker", sort=False):
+            out = score(rows, right[right["__blocker"] == b])
+            if len(out):
+                parts.append(out.assign(__blocker=b))
+        return pd.concat(parts, ignore_index=True) if parts else (
+            pd.DataFrame())
+    return run
 
 
 def _score_all(score, left: pd.DataFrame, batches):
@@ -101,7 +146,7 @@ def candidates(
     scorer: Scorer,
     search_std: DataFrame,
     ref_std: DataFrame,
-    blocker: str,
+    blocker: str | tuple[str, ...],
     cfg,
     residue_rows: int | None = None,
     ref_prepped: DataFrame | None = None,
@@ -109,44 +154,54 @@ def candidates(
     ref_hist: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Candidate stage: every search record's max-score ref candidates
-    (ties kept) within its block, as (record_id, ref_id, fuzzy_score);
-    and the block-filtered ref prep the small plan scored (None when the
-    salted plan ran).
+    (ties kept) within its block of each blocker, as (record_id,
+    __blocker, ref_id, fuzzy_score); and the block-filtered ref prep the
+    small plan scored (None when the salted plan ran).  blocker: one
+    name or a tuple of them.
 
-    residue_rows: the search rows left; at most SMALL_RESIDUE_ROWS
+    residue_rows: the search records left; at most SMALL_RESIDUE_ROWS
     selects the small plan, and it sizes the salted plan.  run_waterfall
     passes each unit's exact residue count.  A direct caller's figure may
     be wrong, so the small plan collects at most one row more than the
-    bound and falls back to the salted plan when that many come back.
+    bound (per blocker) and falls back to the salted plan when that many
+    come back.
 
-    ref_prepped / ref_rows / ref_hist: the prep_ref_for_block variant,
-    its row count and its materialised (__bk, count) histogram —
-    run_waterfall builds each once per (level, blocker) and reuses them
-    across passes, so the salting stats job stops recomputing the ref
-    aggregation once per pass (equivalence in
+    ref_prepped / ref_rows / ref_hist: the prep_ref of these blockers,
+    its row count and its materialised (__blocker, __bk, count)
+    histogram — run_waterfall builds each once per level and reuses them
+    across units, so the salting stats job stops recomputing the ref
+    aggregation once per unit (equivalence in
     blocking.salt_for_cogroup_adaptive)."""
-    key = _KEYS[blocker]
-    s = scorer.prep_search(search_std).filter(F.col(key) != "")
-    s = s.withColumnRenamed(key, "__bk").drop(*(set(_KEYS.values()) - {key}))
-    s = s.select("record_id", "__bk", *scorer.search_cols)
-    r = ref_prepped if ref_prepped is not None else (
-        prep_ref_for_block(ref_std, blocker)
+    blockers = _names(blocker)
+    base = scorer.prep_search(search_std)
+    s = _union(
+        base.filter(F.col(_KEYS[b]) != "").select(
+            "record_id", F.lit(b).alias("__blocker"),
+            F.col(_KEYS[b]).alias("__bk"), *scorer.search_cols,
+        )
+        for b in blockers
     )
-    score = scorer.score(cfg)
+    r = prep_ref(ref_std, blockers) if ref_prepped is None else ref_prepped
+    score = _per_blocker(scorer.score(cfg))
 
     if residue_rows is not None and residue_rows <= SMALL_RESIDUE_ROWS:
-        left = s.limit(SMALL_RESIDUE_ROWS + 1).toPandas()
-        if len(left) <= SMALL_RESIDUE_ROWS:
-            # the key filter pushes below the prep's dedup into the scan:
-            # on the reference bucketed by postcode it reads the residue's
-            # buckets only
-            rk = r.filter(F.col("__bk").isin(sorted(set(left["__bk"]))))
+        bound = len(blockers) * SMALL_RESIDUE_ROWS
+        left = s.limit(bound + 1).toPandas()
+        if len(left) <= bound:
+            # each blocker's key filter lands on its own union branch and
+            # pushes below its dedup into the scan: on the reference
+            # bucketed by postcode it reads the residue's buckets only
+            rk = r.filter(functools.reduce(operator.or_, [
+                (F.col("__blocker") == b) & F.col("__bk").isin(
+                    sorted(set(left.loc[left["__blocker"] == b, "__bk"])))
+                for b in blockers
+            ]))
             cand = (
-                rk.select("ref_id", "__bk", *scorer.ref_cols).coalesce(1)
+                rk.select("ref_id", *_BLOCK, *scorer.ref_cols).coalesce(1)
                 .mapInPandas(functools.partial(_score_all, score, left),
                              _CAND_SCHEMA)
             )
-            return select.keep_max_score(cand, "record_id"), rk
+            return select.keep_max_score(cand, _RECORD), rk
 
     # Scoring is the reference's cdist re-expressed for Spark: cogroup
     # both sides by (block, salt) and cross-score INSIDE an Arrow UDF.
@@ -160,8 +215,8 @@ def candidates(
     # semi-join.
     spark = s.sparkSession
     s_salted, r_salted, extra = blocking.salt_for_cogroup_adaptive(
-        s, r.select("ref_id", "__bk", *scorer.ref_cols),
-        "__bk", blocking.salt_target_pairs_for(spark, cfg),
+        s, r.select("ref_id", *_BLOCK, *scorer.ref_cols),
+        _BLOCK, blocking.salt_target_pairs_for(spark, cfg),
         ref_hist=ref_hist,
     )
     # pin the scoring stage's parallelism with an explicit NUMBERED
@@ -180,7 +235,7 @@ def candidates(
     n_groups = _util.pack_group_count(spark, npart, residue_rows,
                                       ref_rows=ref_rows)
     s_salted, r_salted, keys = blocking.pack_groups(
-        s_salted, r_salted, "__bk", extra, n_groups
+        s_salted, r_salted, _BLOCK, extra, n_groups
     )
     s_salted = s_salted.repartition(npart, *[F.col(k) for k in keys])
     r_salted = r_salted.repartition(npart, *[F.col(k) for k in keys])
@@ -188,16 +243,16 @@ def candidates(
         s_salted.groupBy(*keys).cogroup(r_salted.groupBy(*keys))
         .applyInPandas(score, _CAND_SCHEMA)
     )
-    return select.keep_max_score(cand, "record_id"), None
+    return select.keep_max_score(cand, _RECORD), None
 
 
 def blocked_pass(
     scorer: Scorer,
     search_std: DataFrame,
     ref_std: DataFrame,
-    blocker: str,
+    blocker: str | tuple[str, ...],
     cfg,
-    pass_name: str,
+    pass_name: str | tuple[str, ...],
     broadcast_ref: bool | None = None,
     residue_rows: int | None = None,
     ref_prepped: DataFrame | None = None,
@@ -206,9 +261,11 @@ def blocked_pass(
 ) -> DataFrame:
     """J1/J4 block → P1 or J5/P6 cross-score → J6 shortlist → D1-D8
     verify → P2 tie-break → W1 best.  Returns one row per attempted
-    search record, its best candidate with decisions and
-    match_method=pass_name (the field score is carried as fuzzy_score,
-    per the reference's rename at tools/recordlinkage_funcs.py:219-221).
+    search record and blocker, its best candidate with decisions and
+    match_method = that blocker's pass_name (the field score is carried
+    as fuzzy_score, per the reference's rename at
+    tools/recordlinkage_funcs.py:219-221).  blocker / pass_name: one
+    name each, or a tuple of blockers and the tuple of their pass names.
 
     broadcast_ref: the salted plan's ref join-back decision.
     run_waterfall threads its once-measured decision in; a DIRECT caller
@@ -225,10 +282,11 @@ def blocked_pass(
         # small plan: both sides are bounded by the residue (its rows, the
         # ref rows of its blocks), so both broadcast and the one-partition
         # shortlist keeps its partitioning — the windows below need no
-        # exchange.  The ref prep minus its key holds ref_std's columns.
+        # exchange.  The ref prep minus its key holds ref_std's columns,
+        # a row per blocker, so it joins back on both.
         shortlist = shortlist.join(F.broadcast(search_back), "record_id")
         shortlist = shortlist.join(F.broadcast(ref_small.drop("__bk")),
-                                   "ref_id")
+                                   ["ref_id", "__blocker"])
     else:
         # the ref side is dimension-like → broadcast when it fits (else a
         # shuffled equi-join on ref_id)
@@ -240,13 +298,15 @@ def blocked_pass(
         shortlist = shortlist.join(
             F.broadcast(ref_back) if broadcast_ref else ref_back, "ref_id"
         )
+    row_blocker = F.col("__blocker")
     shortlist = verify.add_decisions(
-        shortlist, blocker,
-        scorer.verify_limit(cfg, blocker),
+        shortlist, row_blocker,
+        scorer.verify_limit(cfg, row_blocker),
         cfg.no_number_fuzzy_match_limit,
     )
     if scorer.wratio_tiebreak:
-        shortlist = select.add_wratio_tiebreak(shortlist, scoring.ratio_udf)
+        shortlist = select.add_wratio_tiebreak(shortlist, scoring.ratio_udf,
+                                               _RECORD)
         if ref_small is not None:
             # the Python tie-break reports no output partitioning; restore
             # the one-partition layout so best_match needs no exchange
@@ -255,5 +315,9 @@ def blocked_pass(
         shortlist = shortlist.withColumn(
             "wratio_score", F.lit(None).cast("double")
         )
-    best = select.best_match(shortlist, "record_id")
-    return best.withColumn("match_method", F.lit(pass_name))
+    blockers, names = _names(blocker), _names(pass_name)
+    method = F.lit(names[-1])
+    for b, name in zip(blockers[:-1], names[:-1]):
+        method = F.when(row_blocker == b, name).otherwise(method)
+    best = select.best_match(shortlist, _RECORD)
+    return best.withColumn("match_method", method).drop("__blocker")

@@ -57,7 +57,7 @@ def salt_target_pairs_for(spark, cfg) -> int:
 def salt_for_cogroup_adaptive(
     search: DataFrame,
     ref: DataFrame,
-    key: str,
+    key: str | list[str],
     target_pairs: int = 250_000,
     max_splits: int = 64,
     search_id_col: str = "record_id",
@@ -75,19 +75,21 @@ def salt_for_cogroup_adaptive(
     instead of rc·n.  Tiny blocks stay whole (a=b=1), so the group count
     — and the per-group UDF overhead — grows only where the data demands
     it.  Per-block factors live in a broadcast histogram join; no driver
-    collect.
+    collect.  key: the block key column, or the list of columns that
+    together name a block.
     """
     # ref_hist (round 8): a precomputed (key, count) histogram of the
-    # ref side — run_waterfall materialises one per (level, blocker) ref
-    # prep and threads it into all passes, where each pass previously
-    # recomputed the aggregation from scratch.  Blocks the search side
+    # ref side — run_waterfall materialises one per level's ref prep and
+    # threads it into all units, where each unit would otherwise
+    # recompute the aggregation from scratch.  Blocks the search side
     # lacks vanish in the inner join with the search histogram, so
     # `stats` — and therefore both salted outputs — hold only blocks
     # present on both sides.
-    sh = search.groupBy(key).count().withColumnRenamed("count", "__sc")
+    keys = [key] if isinstance(key, str) else key
+    sh = search.groupBy(*keys).count().withColumnRenamed("count", "__sc")
     rh = (ref_hist.withColumnRenamed("count", "__rc")
           if ref_hist is not None
-          else ref.groupBy(key).count().withColumnRenamed("count", "__rc"))
+          else ref.groupBy(*keys).count().withColumnRenamed("count", "__rc"))
     n = F.ceil(F.col("__sc") * F.col("__rc") / F.lit(target_pairs))
     a = F.ceil(F.sqrt(n * F.col("__sc") / F.col("__rc")))
     a = F.greatest(F.least(a, F.lit(max_splits), F.col("__sc")), F.lit(1))
@@ -96,7 +98,7 @@ def salt_for_cogroup_adaptive(
         sh.join(rh, key)
         .withColumn("__na", a.cast("int"))
         .withColumn("__nb", b.cast("int"))
-        .select(key, "__na", "__nb")
+        .select(*keys, "__na", "__nb")
     )
     s = (
         search.join(F.broadcast(stats), key)
@@ -128,7 +130,7 @@ def salt_for_cogroup_adaptive(
 def pack_groups(
     search: DataFrame,
     ref: DataFrame,
-    key: str,
+    keys: list[str],
     extra: list[str],
     n_groups: int,
 ):
@@ -152,7 +154,7 @@ def pack_groups(
     salting: their salt shards spread over (bucket, si, sj) keys exactly
     as before.
     """
-    gb = F.pmod(F.xxhash64(F.col(key)), F.lit(n_groups)).cast("int")
+    gb = F.pmod(F.xxhash64(*keys), F.lit(n_groups)).cast("int")
     return (
         search.withColumn("__gb", gb),
         ref.withColumn("__gb", gb),

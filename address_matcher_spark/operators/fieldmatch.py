@@ -252,9 +252,9 @@ FIELD = blocked.Scorer(
     score=lambda cfg: field_scorer(),
     # D8: the street-blocked pass uses the raised 99.5 cutoff
     # (tools/recordlinkage_funcs.py:264-267)
-    verify_limit=lambda cfg, blocker: (
-        cfg.score_cut_off_street if blocker == "Street" else cfg.score_cut_off
-    ),
+    verify_limit=lambda cfg, blocker: F.when(
+        blocker == "Street", cfg.score_cut_off_street
+    ).otherwise(cfg.score_cut_off),
     wratio_tiebreak=False,
 )
 

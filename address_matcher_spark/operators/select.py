@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def keep_max_score(pairs: DataFrame, group_col: str,
+def keep_max_score(pairs: DataFrame, group_col: str | list[str],
                    score_col: str = "fuzzy_score") -> DataFrame:
     """J6/A1: keep every candidate tying the per-group max score
     (tools/fuzzy_match.py:239-243) — prunes before the expensive verify/
@@ -26,7 +26,7 @@ def keep_max_score(pairs: DataFrame, group_col: str,
     )
 
 
-def best_match(shortlist: DataFrame, group_col: str = "record_id",
+def best_match(shortlist: DataFrame, group_col: str | list[str] = "record_id",
                tiebreak_col: str = "ref_id") -> DataFrame:
     """W1: top-1 per search record with the reference's tie-break cascade
     (tools/fuzzy_match.py:313-318,384-386): full_match desc,
@@ -67,20 +67,20 @@ def combine_passes(results: list[DataFrame], key: str = "record_id") -> DataFram
 
 
 def add_wratio_tiebreak(shortlist: DataFrame, ratio_udf,
-                        group_cols=("record_id", "search_mod_address",
-                                    "full_number_match",
-                                    "room_number_search", "fuzzy_score")) -> DataFrame:
+                        key=("record_id",)) -> DataFrame:
     """P2/X6: compute the plain-ratio tie-break ONLY for groups that are
     actually tied with full_number_match=true (tools/fuzzy_match.py:296-308)
     — the expensive UDF runs on the tiny tied subset.
 
-    The group keys lead with record_id so this window's required
-    clustering is satisfied by the keep_max_score/best_match exchange —
-    all three windows share ONE shuffle.  (The reference counts ties
-    globally by address text; keying by record additionally only splits
-    ties between distinct records that share identical address text,
-    which cannot change any per-record selection.)"""
-    w = Window.partitionBy(*[F.col(c) for c in group_cols])
+    The group keys lead with the record key (the keep_max_score/
+    best_match partitioning) so this window's required clustering is
+    satisfied by their exchange — all three windows share ONE shuffle.
+    (The reference counts ties globally by address text; keying by
+    record additionally only splits ties between distinct records that
+    share identical address text, which cannot change any per-record
+    selection.)"""
+    w = Window.partitionBy(*key, "search_mod_address", "full_number_match",
+                           "room_number_search", "fuzzy_score")
     flagged = shortlist.withColumn("__ties", F.count(F.lit(1)).over(w))
     return flagged.withColumn(
         "wratio_score",

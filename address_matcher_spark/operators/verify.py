@@ -45,16 +45,16 @@ def close_postcode_match(search_pc: Column, ref_pc: Column) -> Column:
 
 def add_decisions(
     pairs: DataFrame,
-    blocker_col: str,
-    fuzzy_match_limit: float = 85.0,
+    blocker: str | Column,
+    fuzzy_match_limit: float | Column = 85.0,
     no_number_fuzzy_match_limit: float = 100.0,
-    search_mod_address: str = "search_mod_address",
 ) -> DataFrame:
     """Append fuzzy_score_match / per-field *_match / full_number_match /
-    close_postcode_match / full_match columns (D1-D7)."""
+    close_postcode_match / full_match columns (D1-D7).  blocker: the
+    blocker's name, or a column holding each row's blocker name."""
     score = F.col("fuzzy_score")
     no_numbers = F.length(
-        F.regexp_replace(F.col(search_mod_address), r"[^0-9]", "")
+        F.regexp_replace(F.col("search_mod_address"), r"[^0-9]", "")
     ) == 0
 
     # D1/D2: threshold, raised to 100 for digit-free addresses
@@ -62,8 +62,10 @@ def add_decisions(
         score >= fuzzy_match_limit
     )
     # D3: street-blocked pass never matches digit-free addresses
-    if blocker_col == "Street":
-        fuzzy_ok = F.when(no_numbers, F.lit(False)).otherwise(fuzzy_ok)
+    if isinstance(blocker, str):
+        blocker = F.lit(blocker)
+    digit_free_street = no_numbers & (blocker == "Street")
+    fuzzy_ok = F.when(digit_free_street, F.lit(False)).otherwise(fuzzy_ok)
 
     out = pairs.withColumn("fuzzy_score_match", fuzzy_ok)
     for f in FIELDS:

@@ -6,12 +6,11 @@ Flow per EP1 (SURVEY §3):
   LPI reference → fulladdress assembly → reference side
   both → minimal + full standardisation (one DataFrame each, reused by all
   passes — the reference's four standing datasets, tools/matcher_funcs.py:752-772)
-  waterfall: fuzzy(min, postcode) → fuzzy(min, street) → fuzzy(full,
-  postcode) → fuzzy(full, street) → fieldwise(min, postcode) →
-  fieldwise(min, street) → fieldwise(full, postcode) →
-  fieldwise(full, street),
-  each pass attempting only records the previous passes failed (anti-join
-  F1, tools/matcher_funcs.py:83-109), combined with the W2 window dedup.
+  waterfall: fuzzy(min) → fuzzy(full) → fieldwise(min) → fieldwise(full),
+  each unit ONE plan scoring its residue postcode-blocked and
+  street-blocked (passes <scorer>_<level>_pc and _st), each unit
+  attempting only records the previous units failed (anti-join F1,
+  tools/matcher_funcs.py:83-109), combined with the W2 window dedup.
   matched pairs → one cluster per reference record (operators/cluster.py).
 
 Scale: blocking is a cogroup on the block key with measured per-block
@@ -23,10 +22,8 @@ from __future__ import annotations
 
 import functools
 import logging as _logging
-import threading as _threading
 import time as _time
-from concurrent.futures import Future as CFuture
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
@@ -235,7 +232,7 @@ FUZZY = blocked.Scorer(
 fuzzy_pass = functools.partial(blocked.blocked_pass, FUZZY)
 
 # The waterfall as data: each (scorer, level) unit runs its Postcode- and
-# Street-blocked passes together, named <scorer>_<level>_<pc|st>.  The
+# Street-blocked passes in one plan, named <scorer>_<level>_<pc|st>.  The
 # reference's NN stage runs a Postcode-blocked score_based_match then a
 # Street-blocked one at EACH standardisation level
 # (tools/matcher_funcs.py:1425-1462), the street pass with the raised
@@ -277,20 +274,25 @@ def run_waterfall(
     destroy (every per-pass ref dedup/histogram would shuffle again).
 
     metrics: pass a dict to collect per-stage run counters — wall seconds,
-    residue rows, matched counts and the candidate plan per pass
-    (`small_path`), the broadcast decision (None when not measured) —
-    the same counters a store.write records durably; this is the
-    in-process view for ops dashboards and for profiling where waterfall
-    time goes.
+    residue rows, matched counts (per unit and per pass) and the
+    candidate plan per pass (`small_path`), the broadcast decision (None
+    when not measured), the seconds of each level's ref prep — the same
+    counters a store.write records durably; this is the in-process view
+    for ops dashboards and for profiling where waterfall time goes.
+
+    One plan per unit: each (scorer, level) unit is ONE blocked_pass
+    call scoring both BLOCKERS, with one checkpoint (store key
+    `pass_<scorer>_<level>`).  The ref prep is one per level (store key
+    `ref_prep_<level>`), shared by both scorers.
 
     One exact residue per unit: every unit after the first materialises
     the records no earlier pass full-matched, counting them in the same
     job, and that count (`residue_rows`) decides the early exit, picks
     the candidate plan (the small plan at most blocked.SMALL_RESIDUE_ROWS
     records) and sizes the salted plan.  A run of at most that many
-    records takes the small plan in every pass, so it neither measures
+    records takes the small plan in every unit, so it neither measures
     the broadcast decision (a full reference scan the small plan never
-    reads) nor materialises the reference preps (each pass reads only
+    reads) nor materialises the reference preps (each unit reads only
     its residue's blocks)."""
     cfg = cfg or MatchConfig()
     _t = _time.perf_counter
@@ -332,168 +334,74 @@ def run_waterfall(
         metrics["broadcast_measure_sec"] = measure_sec
         metrics["broadcast_ref"] = bc_ref
         metrics["passes"] = []
-    # Block-keyed ref variants (filter/rename/dedup, prep_ref_for_block):
-    # only FOUR distinct ones exist per run ((min|full) × (pc|street)) but
-    # the 8-pass plan used to rebuild them per pass — 8 dedup shuffles of
-    # the full reference side.  Shared across passes unless the ref is
-    # already a durable bucketed table (persisting would destroy the
-    # bucketed scan's exchange-free HashPartitioning) or the run is small
-    # (every pass then filters the lazy prep to its residue's blocks, and
-    # the filter reaches the ref scan).  With a store this
-    # is a real checkpoint; otherwise localCheckpoint: the prep subtree
-    # is read by its histogram and by both scorers' passes, and Catalyst
-    # recomputes shared subtrees — profiled at ~15 core-s of repeated
-    # dedup aggregation per pass at bench scale.  (An in-memory .cache()
-    # variant measured SLOWER end-to-end: columnar compress-on-write +
-    # decompress-per-read beats a local checkpoint scan only when the
-    # frame is read once, and these are read ~3×.)
+    # One ref prep per level (blocked.prep_ref), shared by both scorers'
+    # units and materialised unless the ref is already a durable bucketed
+    # table (persisting would destroy the bucketed scan's exchange-free
+    # HashPartitioning) or the run is small (every unit then filters the
+    # lazy prep to its residue's blocks, and the filter reaches the ref
+    # scan).  The prep is read by its histogram and by every unit of its
+    # level, and Catalyst recomputes shared subtrees; a local checkpoint
+    # beat .cache() for a frame read ~3× (docs/PLANS.md, round 6).
     materialize_prep = not ref_materialized and not small_run
-    _prep_futs: dict[tuple[str, str], "CFuture"] = {}
-    _prep_rows: dict[tuple[str, str], int] = {}
-    _prep_hists: dict[tuple[str, str], DataFrame] = {}
-    _prep_lock = _threading.Lock()
+    blockers = tuple(b for _, b in BLOCKERS)
 
-    def get_prep(level: str, blocker: str) -> DataFrame:
-        # called from concurrent pass threads AND the prefetcher below;
-        # a Future per (level, blocker) makes the materialisation
-        # once-only — the first arrival builds, the rest block on it
-        k = (level, blocker)
-        with _prep_lock:
-            fut = _prep_futs.get(k)
-            mine = fut is None
-            if mine:
-                fut = CFuture()
-                _prep_futs[k] = fut
-        if mine:
-            try:
-                tp = _t()
-                v = prep_ref_for_block(sides[level][1], blocker)
-                if materialize_prep:
-                    # the prep's row count rides the materialisation via
-                    # observe() (no extra job) — it sizes the pack-bucket
-                    # memory guard from the REF side too
-                    # (_util.pack_group_count), since the cogroup holds
-                    # both sides of a group in worker memory at once
-                    obs = Observation()
-                    v = v.observe(obs, F.count(F.lit(1)).alias("rows"))
-                    v = (store.write(v, f"ref_prep_{level}_{blocker}")
-                         if store is not None else v.localCheckpoint())
-                    _prep_rows[k] = int(obs.get["rows"])
-                    # the prep's block histogram, materialised once and
-                    # reused by every pass's salting stats (round 8) —
-                    # ≤ #blocks rows, one tiny job off the critical path
-                    # (preps are prefetched)
-                    _prep_hists[k] = (
-                        v.groupBy("__bk").count().localCheckpoint()
-                    )
-                if metrics is not None:
-                    metrics[f"prep_{level}_{blocker}_sec"] = round(
-                        _t() - tp, 3)
-                fut.set_result(v)
-            except BaseException as e:
-                fut.set_exception(e)
-                raise
-        return fut.result()
+    def build_prep(level: str):
+        tp = _t()
+        prep = blocked.prep_ref(sides[level][1], blockers)
+        rows = hist = None
+        if materialize_prep:
+            # the row count rides the materialisation via observe(): it
+            # sizes the pack-bucket memory guard from the REF side too
+            # (_util.pack_group_count)
+            obs = Observation()
+            prep = prep.observe(obs, F.count(F.lit(1)).alias("rows"))
+            prep = (store.write(prep, f"ref_prep_{level}")
+                    if store is not None else prep.localCheckpoint())
+            rows = int(obs.get["rows"])
+            # the block histogram every unit's salting stats reuse
+            hist = prep.groupBy("__blocker", "__bk").count().localCheckpoint()
+        if metrics is not None:
+            metrics[f"prep_{level}_sec"] = round(_t() - tp, 3)
+        return prep, rows, hist
 
-    passes: list[DataFrame] = []
-
-    def run_pass(scorer, level, blocker, name, residue, residue_rows):
-        # NOTE: does not touch `passes` — a unit runs its two passes from
-        # worker threads, and pass_priority (combine_passes) must follow
-        # PLAN order, so the caller appends results in unit order.
-        #
-        # The pass's winner count rides the materialisation via observe()
-        # (CollectMetrics in the written plan) instead of a separate
-        # count job per level — the checkpoint/localCheckpoint action is
-        # the only driver-blocking job a pass runs (VERDICT r6 item #3).
-        # The prep's observed row count and histogram are filled by the
-        # get_prep call, so evaluate it first.
-        k = (level, blocker)
-        ref_prepped = get_prep(level, blocker)
-        out = blocked.blocked_pass(
-            scorer, residue, sides[level][1], blocker, cfg, name, bc_ref,
-            residue_rows, ref_prepped, _prep_rows.get(k), _prep_hists.get(k),
-        )
-        obs = Observation()
-        out = out.select(*RESULT_COLS).observe(
-            obs, F.count(F.when(F.col("full_match"), 1)).alias("won")
-        )
-        if store is not None:
-            out = store.write(out, f"pass_{name}")
-        else:
-            out = out.localCheckpoint()
-        # the materialisation above already executed the plan, so the
-        # metric is available; .get would block forever only if the
-        # action somehow skipped execution, which store.write/
-        # localCheckpoint never do
-        return out, int(obs.get["won"])
-
-    # The reference's fall-back-to-the-postcode-result-when-street-finds-
-    # nothing behaviour (tools/matcher_funcs.py:1455-1462) is structural
-    # here: each unit only attempts the previous units' residue and
-    # combine_passes keeps the earliest pass's row per record, so a record
-    # the street pass can't improve retains its postcode-pass row
-    # untouched.  Every pass gets the same measured broadcast decision and
-    # the same residue-scaled partitioning (VERDICT r4 "What's wrong #1").
     scorers = SCORERS if cfg.run_field_passes else SCORERS[:1]
     units = [(sname, scorer, level)
              for sname, scorer in scorers for level in LEVELS]
 
-    # Prefetch: the prep materialisations are residue-independent, so
-    # build them concurrently in the background while level 1 runs
-    # instead of serially on each level's critical path (~0.8 s each at
-    # bench scale).  Skipped for bucketed refs (prep stays a lazy plan —
-    # no job to prefetch) and in store mode (the store should only hold
-    # checkpoint stages the waterfall actually reached).  An early exit
-    # may waste a prefetched prep; a failed prefetch surfaces on first
-    # use (the Future re-raises) or never, if that pass was skipped.
-    # Only the LATER levels' preps prefetch — level 1 builds its own two
-    # in its pass threads, and prefetching those as well just makes all
-    # four compete for the same slots on level 1's critical path
-    # (measured: full-prefetch inflated each prep 1.0 s → 2.3 s and the
-    # 8-pass wall by ~2 s).
+    # Prefetch: the full-level prep is residue-independent, so it is
+    # built in the background while level 1 runs.  Not for a lazy prep
+    # (no job) nor in store mode (the store holds only stages the
+    # waterfall reached).  A failure surfaces on first use, or in the log
+    # if an early exit skips level 2.
+    preps: dict = {}
     _prefetch = None
     if materialize_prep and store is None:
-        _prefetch = ThreadPoolExecutor(max_workers=len(BLOCKERS),
-                                       thread_name_prefix="prep-prefetch")
+        _prefetch = ThreadPoolExecutor(1, thread_name_prefix="prep-prefetch")
 
         def _log_prefetch_failure(fut, _log=_logging.getLogger(__name__)):
-            # a failed prefetch whose pass the early-exit gate skips would
-            # otherwise vanish (the Future re-raises only on consumption);
-            # surface it in the log either way (ADVICE r6)
             exc = None if fut.cancelled() else fut.exception()
             if exc is not None:
                 _log.warning("ref-prep prefetch failed: %r", exc)
 
-        for _, bl in BLOCKERS:
-            _prefetch.submit(get_prep, "full", bl).add_done_callback(
-                _log_prefetch_failure
-            )
+        preps["full"] = _prefetch.submit(build_prep, "full")
+        preps["full"].add_done_callback(_log_prefetch_failure)
 
-    # Level pairing: the two BLOCKERS of one unit (pc + street) read the
-    # SAME residue, and combine_passes keeps the earliest pass's row per
-    # record — so running them CONCURRENTLY is output-identical to a
-    # strict sequential waterfall (a record both passes match keeps the
-    # pc pass's row via pass_priority; a record only the street pass
-    # matches gets the same row either way; the next unit's residue is
-    # the same union of winners).  What changes is the schedule: the
-    # per-pass wall at bench scale is dominated by sequential stage
-    # latency (~6 exchanges × scheduler latency, NOT core-seconds —
-    # profiled in round 6), so halving the sequential depth nearly
-    # halves the waterfall wall.  The street pass does score records the
-    # pc pass will win (bounded extra compute: street blocks are the
-    # smaller fan-out; at bench scale ~2× the street pass's own pairs).
+    # One plan per unit: blocked_pass scores both BLOCKERS against the
+    # SAME residue, one row per (record, blocker) named by match_method.
+    # Split by blocker in BLOCKERS order, its one checkpoint gives
+    # combine_passes the passes of a strict sequential waterfall: a
+    # record both blockers match keeps the Postcode row (pass_priority),
+    # so a record the Street blocker can't improve keeps its Postcode
+    # row, the reference's fall-back (tools/matcher_funcs.py:1455-1462).
+    # The Street blocker does score records the Postcode one will win
+    # (bounded: street blocks are the smaller fan-out).  The winner
+    # counts ride the checkpoint via observe(), one per blocker.
     #
-    # early-exit gate (X2, ref tools/matcher_funcs.py:1013-1017): the
-    # reference aborts the waterfall when nothing is left to match; the
-    # gate runs between units, on the unit's exact residue.
-    #
-    # The residue of every unit after the first is materialised once and
-    # counted in the same job (observe): the side minus the records
-    # earlier passes full-matched.  Both passes of the unit read that one
-    # checkpoint instead of re-deriving the anti-join in every job.  It
-    # is a localCheckpoint in store mode too: it is derived from the
-    # committed pass outputs, and nothing resumes from it.
+    # Early-exit gate (X2, tools/matcher_funcs.py:1013-1017): between
+    # units, on the unit's exact residue — the side minus the records
+    # earlier units full-matched, materialised and counted in one job.
+    # It is a localCheckpoint in store mode too: nothing resumes from it.
+    passes: list[DataFrame] = []
     matched_union: DataFrame | None = None
     residue_rows = total_records
     try:
@@ -513,31 +421,39 @@ def run_waterfall(
                 residue_rows = int(obs.get["rows"])
                 if residue_rows == 0:
                     break  # every search record already has a full match
-            names = [f"{sname}_{level}_{b}" for b, _ in BLOCKERS]
-            with ThreadPoolExecutor(len(BLOCKERS)) as ex:
-                futs = [
-                    ex.submit(run_pass, scorer, level, blocker, name,
-                              residue, residue_rows)
-                    for name, (_, blocker) in zip(names, BLOCKERS)
-                ]
-                outs = [f.result() for f in futs]
-            passes.extend(out for out, _ in outs)
-            # winner count folded into the checkpoint write via observe()
-            # (run_pass) — no separate count job per unit.
-            wins = [w for _, w in outs]
-            winners = None
-            for out, _ in outs:
-                w = out.filter(F.col("full_match")).select("record_id")
-                winners = w if winners is None else winners.unionByName(w)
+            if level not in preps:
+                preps[level] = build_prep(level)
+            elif isinstance(preps[level], Future):
+                preps[level] = preps[level].result()
+            ref_prepped, ref_rows, ref_hist = preps[level]
+            names = tuple(f"{sname}_{level}_{b}" for b, _ in BLOCKERS)
+            out = blocked.blocked_pass(
+                scorer, residue, sides[level][1], blockers, cfg, names,
+                bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
+            )
+            obs = Observation()
+            out = out.select(*RESULT_COLS).observe(obs, *[
+                F.count(F.when(F.col("full_match")
+                               & (F.col("match_method") == n), 1)).alias(n)
+                for n in names
+            ])
+            if store is not None:
+                out = store.write(out, f"pass_{sname}_{level}")
+            else:
+                out = out.localCheckpoint()
+            wins = [int(obs.get[n]) for n in names]
+            passes.extend(out.filter(F.col("match_method") == n)
+                          for n in names)
+            winners = out.filter(F.col("full_match")).select("record_id")
             if metrics is not None:
                 metrics["passes"].append({
                     "pass": "+".join(names),
                     "residue_rows": int(residue_rows),
-                    "matched": int(sum(wins)),
-                    "matched_per_pass": [int(w) for w in wins],
+                    "matched": sum(wins),
+                    "matched_per_pass": wins,
                     "small_path": [
                         residue_rows <= blocked.SMALL_RESIDUE_ROWS
-                    ] * len(outs),
+                    ] * len(names),
                     "seconds": round(_t() - tpass, 3),
                 })
             matched_union = winners if matched_union is None else (
@@ -548,8 +464,6 @@ def run_waterfall(
         # exit or a raise must not leave a prep thread running a Spark
         # job against a session the caller may be tearing down, and a
         # hung thread would otherwise block interpreter shutdown
-        # (cancel_futures drops queued-but-unstarted preps; running ones
-        # finish — they're ~1 s materialisations at bench scale)
         if _prefetch is not None:
             _prefetch.shutdown(wait=True, cancel_futures=True)
 

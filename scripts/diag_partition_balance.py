@@ -66,7 +66,7 @@ def main() -> None:
     for npart in nparts:
         n_groups = _util.pack_group_count(spark, npart, None)
         ss, rr, keys = blocking.pack_groups(
-            s_salted, r_salted, "__bk", extra, n_groups)
+            s_salted, r_salted, ["__bk"], extra, n_groups)
         a = ss.groupBy(*keys, "__bk").count().withColumnRenamed("count", "sc")
         b = rr.groupBy(*keys, "__bk").count().withColumnRenamed("count", "rc")
         per_key = (

@@ -1,6 +1,7 @@
-"""Stage-level timing of ONE fuzzy/field pass on a small residue —
-identifies which of the ~10 shuffle stages carries the fixed per-pass
-cost that dominates the 8-pass waterfall once the kernel is fast.
+"""Stage-level timing of ONE fuzzy/field waterfall unit on a small
+residue — both blockers in one plan, called as run_waterfall calls it —
+identifies which shuffle stages carry the fixed per-unit cost that
+dominates the waterfall once the kernel is fast.
 
 Runs with the Spark UI enabled (unlike the product session) and dumps
 stage name / duration / task count from the REST API."""
@@ -66,40 +67,40 @@ def main() -> None:
         ) as r:
             return json.loads(r.read())
 
+    # one unit: both blockers, one pass name each, as run_waterfall calls it
+    blockers = tuple(b for _, b in P.BLOCKERS)
+    names = tuple(f"probe_{b}" for b, _ in P.BLOCKERS)
     before = {s["stageId"] for s in stages()}
     t0 = time.perf_counter()
-    out = P.fuzzy_pass(residue, sides["rmin"], "Postcode", cfg,
-                       "probe", broadcast_ref=bc, residue_rows=n_res)
+    out = P.fuzzy_pass(residue, sides["rmin"], blockers, cfg,
+                       names, broadcast_ref=bc, residue_rows=n_res)
     out.select(*P.RESULT_COLS).localCheckpoint().count()
     wall = time.perf_counter() - t0
     after = stages()
     new = [s for s in after if s["stageId"] not in before]
     new.sort(key=lambda s: -(s.get("executorRunTime") or 0))
-    print(f"fuzzy_pass residue={n_res} wall={wall:.2f}s "
+    print(f"fuzzy unit residue={n_res} wall={wall:.2f}s "
           f"stages={len(new)}")
     tot_run = 0
     for s in new:
         run = (s.get("executorRunTime") or 0) / 1000.0
         tot_run += run
-        dur = "?"
-        if s.get("firstTaskLaunchedTime") and s.get("completionTime"):
-            dur = ""
         print(f"  stage {s['stageId']:>4} tasks={s['numCompleteTasks']:>3} "
               f"execRun={run:7.2f}s  {s['name'][:90]}")
     print(f"  total executorRunTime: {tot_run:.1f} core-s "
           f"({cpus} cores x {wall:.2f}s wall = {cpus*wall:.0f} core-s budget)")
 
-    # same probe for the field pass
+    # same probe for the field unit
     before = {s["stageId"] for s in stages()}
     from address_matcher_spark.operators.fieldmatch import field_pass
     t0 = time.perf_counter()
-    out = field_pass(residue, sides["rmin"], "Postcode", cfg, "probe",
+    out = field_pass(residue, sides["rmin"], blockers, cfg, names,
                      broadcast_ref=bc, residue_rows=n_res)
     out.select(*P.RESULT_COLS).localCheckpoint().count()
     wall = time.perf_counter() - t0
     new = [s for s in stages() if s["stageId"] not in before]
     new.sort(key=lambda s: -(s.get("executorRunTime") or 0))
-    print(f"field_pass residue={n_res} wall={wall:.2f}s stages={len(new)}")
+    print(f"field unit residue={n_res} wall={wall:.2f}s stages={len(new)}")
     for s in new:
         run = (s.get("executorRunTime") or 0) / 1000.0
         print(f"  stage {s['stageId']:>4} tasks={s['numCompleteTasks']:>3} "

@@ -8,7 +8,9 @@ an explicit block join scored independently —
     kept at or above fuzzy_match_limit (tools/fuzzy_match.py:88-94).
 Both at the default salting and at a forced multi-way split, and through
 the small-residue plan (and its fallback when the residue estimate
-under-counts)."""
+under-counts); for one blocker and for both in one plan, where each
+candidate carries its blocker and the expectation is the union of the
+single-blocker ones."""
 
 from __future__ import annotations
 
@@ -120,8 +122,17 @@ CASES = {
 }
 
 
+# blocker → the blockers one candidates call scores ("both" is the
+# waterfall unit's plan)
+BLOCKERS = {
+    "Postcode": ("Postcode",),
+    "Street": ("Street",),
+    "both": ("Postcode", "Street"),
+}
+
+
 @pytest.mark.parametrize("case", list(CASES))
-@pytest.mark.parametrize("blocker", ["Postcode", "Street"])
+@pytest.mark.parametrize("blocker", list(BLOCKERS))
 @pytest.mark.parametrize("scorer", sorted(SCORERS))
 def test_candidates_parity(sides, scorer, blocker, case):
     """salt_target_pairs=50 forces every block above 50 pairs into a
@@ -136,16 +147,17 @@ def test_candidates_parity(sides, scorer, blocker, case):
         assert 0 < residue_rows <= blocked.SMALL_RESIDUE_ROWS
     cfg = P.MatchConfig(salt_target_pairs=salt_target_pairs)
     spec, expected = SCORERS[scorer]
-    cand, _ = blocked.candidates(spec, smin, rmin, blocker, cfg,
-                                 residue_rows)
+    blockers = BLOCKERS[blocker]
+    arg = blocker if len(blockers) == 1 else blockers
+    cand, _ = blocked.candidates(spec, smin, rmin, arg, cfg, residue_rows)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert ("FlatMapCoGroupsInPandas" in plan) == (case != "small")
-    got = {
-        (r["record_id"], r["ref_id"], r["fuzzy_score"])
-        for r in cand.collect()
-    }
-    want = {
-        (r["record_id"], r["ref_id"], r["fuzzy_score"])
-        for r in expected(smin, rmin, blocker, cfg).collect()
-    }
+
+    def key(r, b):
+        return (b, r["record_id"], r["ref_id"], r["fuzzy_score"])
+
+    got = {key(r, r["__blocker"] if blocker == "both" else blocker)
+           for r in cand.collect()}
+    want = {key(r, b) for b in blockers
+            for r in expected(smin, rmin, b, cfg).collect()}
     assert got == want and len(got) > 0

@@ -206,9 +206,9 @@ def test_street_field_pass_rescues_broken_postcode(spark):
 
 def test_early_exit_after_full_pass1(spark, monkeypatch):
     """X2 early-exit gate (ref tools/matcher_funcs.py:1013-1017): a corpus
-    fully matched by level 1 must run exactly ONE LEVEL (its pc + street
-    blockers run concurrently) and zero field passes — the remaining
-    waterfall levels are skipped."""
+    fully matched by level 1 must run exactly ONE LEVEL (one blocked_pass
+    call scoring its pc + street blockers in one plan) and zero field
+    passes — the remaining waterfall levels are skipped."""
     rows = [
         ("12", "OAK ROAD", "LONDON", "SW9 7QD"),
         ("7", "ELM STREET", "CROYDON", "CR2 6XH"),
@@ -247,7 +247,7 @@ def test_early_exit_after_full_pass1(spark, monkeypatch):
     real_pass = blocked.blocked_pass
 
     def counting_pass(scorer, *a, **kw):
-        seen.append(scorer)  # list.append is atomic across pass threads
+        seen.append(scorer)  # one call per (scorer, level) unit
         if scorer is FM.FIELD:
             raise AssertionError("field pass must not run after early exit")
         return real_pass(scorer, *a, **kw)
@@ -255,7 +255,7 @@ def test_early_exit_after_full_pass1(spark, monkeypatch):
     monkeypatch.setattr(blocked, "blocked_pass", counting_pass)
 
     res = P.run_waterfall(smin, sfull, rmin, rfull, cfg).toPandas()
-    assert seen == [P.FUZZY, P.FUZZY]  # one LEVEL, no field pass
+    assert seen == [P.FUZZY]  # one LEVEL, no field pass
     assert res["full_match"].all() and len(res) == 3
 
 

@@ -294,3 +294,14 @@ def test_small_residue_pass_reads_one_bucket(spark, tiny_sides, tmp_path):
     # the two broadcasts only: the tail's windows reuse the one partition
     assert plan.count("Exchange") <= 2, plan
     assert out.count() == 1
+    # the waterfall unit's plan, both blockers at once: still one
+    # mapInPandas, and each blocker's key filter reaches its own branch,
+    # so the postcode-keyed scan still reads one bucket
+    plan = _plan(P.fuzzy_pass(one, ref, ("Postcode", "Street"), cfg,
+                              ("plan_pc", "plan_st"), residue_rows=1))
+    assert plan.count("MapInPandas") == 1
+    assert "FlatMapCoGroupsInPandas" not in plan
+    pc_scans = [ln for ln in plan.splitlines() if "FileScan" in ln
+                and "postcode_search" in ln.partition("PushedFilters")[2]]
+    assert pc_scans and all("SelectedBucketsCount: 1 out of 4" in ln
+                            for ln in pc_scans), plan

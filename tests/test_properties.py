@@ -69,9 +69,10 @@ def test_waterfall_checkpointed_equals_plain(spark, sides, tmp_path):
         sides["cfg"], store=store,
     ).collect()
     assert _result_key(plain) == _result_key(ckpt)
-    # lineage metadata written per pass
-    assert store.committed("pass_fuzzy_min_pc")
-    assert store.meta("pass_fuzzy_min_pc")["rows"] >= 0
+    # lineage metadata written per unit: one checkpoint holds both passes
+    assert store.committed("pass_fuzzy_min")
+    assert store.meta("pass_fuzzy_min")["rows"] >= 0
+    assert not store.committed("pass_fuzzy_min_pc")
 
 
 def test_combine_passes_idempotent(spark, sides):
