@@ -107,9 +107,10 @@ def _union(frames) -> DataFrame:
 def prep_ref(ref_std: DataFrame, blocker) -> DataFrame:
     """The ref prep of one blocker or several: prep_ref_for_block of
     each, tagged with its __blocker and unioned.  run_waterfall
-    materialises one per level and threads it into every unit; a lazy
-    prep (bucketed reference, small run) lets each blocker's key filter
-    reach its own branch's ref scan."""
+    materialises both levels' preps in one job (each tagged with its
+    __level) and threads each level's into every unit of that level; a
+    lazy prep (bucketed reference, small run) lets each blocker's key
+    filter reach its own branch's ref scan."""
     return _union(
         prep_ref_for_block(ref_std, b).withColumn("__blocker", F.lit(b))
         for b in _names(blocker)
@@ -120,15 +121,13 @@ def _per_blocker(score):
     """The scorer over rows of several blockers: each blocker's rows are
     scored apart and their candidates tagged with it, so rows of
     different blockers never cross, even where a postcode key equals a
-    street key.  Empty parts are skipped (their float columns would turn
-    the int64 ids to floats); no candidates give a frame without
-    columns, the empty result Spark accepts for any schema."""
+    street key.  No rows give a frame without columns, the empty result
+    Spark accepts for any schema."""
     def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        parts = []
-        for b, rows in left.groupby("__blocker", sort=False):
-            out = score(rows, right[right["__blocker"] == b])
-            if len(out):
-                parts.append(out.assign(__blocker=b))
+        parts = [
+            score(rows, right[right["__blocker"] == b]).assign(__blocker=b)
+            for b, rows in left.groupby("__blocker", sort=False)
+        ]
         return pd.concat(parts, ignore_index=True) if parts else (
             pd.DataFrame())
     return run

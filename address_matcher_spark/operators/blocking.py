@@ -79,8 +79,9 @@ def salt_for_cogroup_adaptive(
     together name a block.
     """
     # ref_hist (round 8): a precomputed (key, count) histogram of the
-    # ref side — run_waterfall materialises one per level's ref prep and
-    # threads it into all units, where each unit would otherwise
+    # ref side — run_waterfall materialises one histogram of both levels'
+    # ref preps, in the job after the prep's, and threads each level's
+    # slice into all its units, where each unit would otherwise
     # recompute the aggregation from scratch.  Blocks the search side
     # lacks vanish in the inner join with the search histogram, so
     # `stats` — and therefore both salted outputs — hold only blocks

@@ -59,7 +59,11 @@ def token_set_scorer(cutoff: float = FUZZY_MATCH_LIMIT,
         prof_dir = os.environ.get("SPARK_GRAFT_PROF_DIR")
         t0 = time.perf_counter() if prof_dir else 0.0
         c0 = time.process_time() if prof_dir else 0.0
-        empty = pd.DataFrame({"record_id": [], "ref_id": [], "fuzzy_score": []})
+        empty = pd.DataFrame(
+            {"record_id": pd.Series([], dtype="int64"),
+             "ref_id": pd.Series([], dtype="int64"),
+             "fuzzy_score": pd.Series([], dtype="float64")}
+        )
         if left.empty or right.empty:
             return empty
         lids = left["record_id"].to_numpy()

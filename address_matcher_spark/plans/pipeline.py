@@ -21,9 +21,7 @@ UDFs; everything else is codegen'd expressions and windows.
 from __future__ import annotations
 
 import functools
-import logging as _logging
 import time as _time
-from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
@@ -276,14 +274,18 @@ def run_waterfall(
     metrics: pass a dict to collect per-stage run counters — wall seconds,
     residue rows, matched counts (per unit and per pass) and the
     candidate plan per pass (`small_path`), the broadcast decision (None
-    when not measured), the seconds of each level's ref prep — the same
-    counters a store.write records durably; this is the in-process view
-    for ops dashboards and for profiling where waterfall time goes.
+    when not measured), the seconds of the ref prep job (`prep_sec`) —
+    the same counters a store.write records durably; this is the
+    in-process view for ops dashboards and for profiling where waterfall
+    time goes.
 
     One plan per unit: each (scorer, level) unit is ONE blocked_pass
     call scoring both BLOCKERS, with one checkpoint (store key
-    `pass_<scorer>_<level>`).  The ref prep is one per level (store key
-    `ref_prep_<level>`), shared by both scorers.
+    `pass_<scorer>_<level>`).  The ref prep is one per level, shared by
+    both scorers; both levels' preps are built by one job, before the
+    first unit (store key `ref_prep`).  run_waterfall starts no thread:
+    every job it runs inherits the calling thread's Spark local
+    properties.
 
     One exact residue per unit: every unit after the first materialises
     the records no earlier pass full-matched, counting them in the same
@@ -295,30 +297,29 @@ def run_waterfall(
     reads) nor materialises the reference preps (each unit reads only
     its residue's blocks)."""
     cfg = cfg or MatchConfig()
+    metrics = {} if metrics is None else metrics
     _t = _time.perf_counter
     _t0 = _t()
+
+    def keep(df: DataFrame, key: str) -> DataFrame:
+        # a durable checkpoint under `key` with a store, else a local one
+        return (store.write(df, key) if store is not None
+                else df.localCheckpoint())
+
     # The four standing datasets are reused by every pass
     # (tools/matcher_funcs.py:752-772).  Materialise them AND cut their
     # lineage: the standardisation layer is hundreds of expressions, and
     # without truncation every pass re-analyzes that whole tree on the
-    # driver (~seconds per pass of pure planning).  With a store this is
-    # a real checkpoint; otherwise localCheckpoint.  Callers
-    # that already checkpointed/cached the sides pass
-    # sides_materialized=True to skip the redundant second scan+write.
-    if store is not None:
-        search_min = store.write(search_min, "side_search_min")
-        search_full = store.write(search_full, "side_search_full")
+    # driver (~seconds per pass of pure planning).  Callers that already
+    # checkpointed/cached the sides pass sides_materialized=True to skip
+    # the redundant second scan+write (a store still commits them).
+    if store is not None or not sides_materialized:
+        search_min = keep(search_min, "side_search_min")
+        search_full = keep(search_full, "side_search_full")
         if not ref_materialized:
-            ref_min = store.write(ref_min, "side_ref_min")
-            ref_full = store.write(ref_full, "side_ref_full")
-    elif not sides_materialized:
-        search_min = search_min.localCheckpoint()
-        search_full = search_full.localCheckpoint()
-        if not ref_materialized:
-            ref_min = ref_min.localCheckpoint()
-            ref_full = ref_full.localCheckpoint()
-    if metrics is not None:
-        metrics["sides_sec"] = round(_t() - _t0, 3)
+            ref_min = keep(ref_min, "side_ref_min")
+            ref_full = keep(ref_full, "side_ref_full")
+    metrics["sides_sec"] = round(_t() - _t0, 3)
     sides = {"min": (search_min, ref_min), "full": (search_full, ref_full)}
     total_records = search_min.count()
     small_run = total_records <= blocked.SMALL_RESIDUE_ROWS
@@ -330,61 +331,48 @@ def run_waterfall(
         _t1 = _t()
         bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
         measure_sec = round(_t() - _t1, 3)
-    if metrics is not None:
-        metrics["broadcast_measure_sec"] = measure_sec
-        metrics["broadcast_ref"] = bc_ref
-        metrics["passes"] = []
+    metrics["broadcast_measure_sec"] = measure_sec
+    metrics["broadcast_ref"] = bc_ref
+    metrics["passes"] = []
     # One ref prep per level (blocked.prep_ref), shared by both scorers'
-    # units and materialised unless the ref is already a durable bucketed
-    # table (persisting would destroy the bucketed scan's exchange-free
-    # HashPartitioning) or the run is small (every unit then filters the
-    # lazy prep to its residue's blocks, and the filter reaches the ref
-    # scan).  The prep is read by its histogram and by every unit of its
-    # level, and Catalyst recomputes shared subtrees; a local checkpoint
-    # beat .cache() for a frame read ~3× (docs/PLANS.md, round 6).
-    materialize_prep = not ref_materialized and not small_run
+    # units.  Both levels' preps are ONE job: tagged with their __level,
+    # unioned (Spark runs the two branches in parallel), counted per
+    # level by observe() — the count sizes the pack-bucket memory guard
+    # from the REF side too (_util.pack_group_count) — and materialised
+    # once (store key `ref_prep`), plus one (__level, __blocker, __bk)
+    # histogram every unit's salting stats reuse.  The prep is read by
+    # its histogram and by every unit of its level, and Catalyst
+    # recomputes shared subtrees; a local checkpoint beat .cache() for a
+    # frame read ~3× (docs/PLANS.md, round 6).  Not materialised when the
+    # ref is already a durable bucketed table (persisting would destroy
+    # the bucketed scan's exchange-free HashPartitioning) or the run is
+    # small (every unit then filters the lazy prep to its residue's
+    # blocks, and the filter reaches the ref scan): a lazy prep runs no
+    # job and is built when a unit of its level first needs it.
     blockers = tuple(b for _, b in BLOCKERS)
-
-    def build_prep(level: str):
-        tp = _t()
-        prep = blocked.prep_ref(sides[level][1], blockers)
-        rows = hist = None
-        if materialize_prep:
-            # the row count rides the materialisation via observe(): it
-            # sizes the pack-bucket memory guard from the REF side too
-            # (_util.pack_group_count)
-            obs = Observation()
-            prep = prep.observe(obs, F.count(F.lit(1)).alias("rows"))
-            prep = (store.write(prep, f"ref_prep_{level}")
-                    if store is not None else prep.localCheckpoint())
-            rows = int(obs.get["rows"])
-            # the block histogram every unit's salting stats reuse
-            hist = prep.groupBy("__blocker", "__bk").count().localCheckpoint()
-        if metrics is not None:
-            metrics[f"prep_{level}_sec"] = round(_t() - tp, 3)
-        return prep, rows, hist
+    preps: dict = {}
+    tp = _t()
+    if not ref_materialized and not small_run:
+        tag = F.col("__level")
+        obs = Observation()
+        both = functools.reduce(DataFrame.unionByName, [
+            blocked.prep_ref(sides[lv][1], blockers)
+            .withColumn("__level", F.lit(lv)) for lv in LEVELS
+        ])
+        both = keep(both.observe(obs, *[
+            F.count(F.when(tag == lv, 1)).alias(lv) for lv in LEVELS
+        ]), "ref_prep")
+        hist = both.groupBy("__level", "__blocker", "__bk").count()
+        hist = hist.localCheckpoint()
+        preps = {lv: (both.filter(tag == lv).drop("__level"),
+                      int(obs.get[lv]),
+                      hist.filter(tag == lv).drop("__level"))
+                 for lv in LEVELS}
+    metrics["prep_sec"] = round(_t() - tp, 3)
 
     scorers = SCORERS if cfg.run_field_passes else SCORERS[:1]
     units = [(sname, scorer, level)
              for sname, scorer in scorers for level in LEVELS]
-
-    # Prefetch: the full-level prep is residue-independent, so it is
-    # built in the background while level 1 runs.  Not for a lazy prep
-    # (no job) nor in store mode (the store holds only stages the
-    # waterfall reached).  A failure surfaces on first use, or in the log
-    # if an early exit skips level 2.
-    preps: dict = {}
-    _prefetch = None
-    if materialize_prep and store is None:
-        _prefetch = ThreadPoolExecutor(1, thread_name_prefix="prep-prefetch")
-
-        def _log_prefetch_failure(fut, _log=_logging.getLogger(__name__)):
-            exc = None if fut.cancelled() else fut.exception()
-            if exc is not None:
-                _log.warning("ref-prep prefetch failed: %r", exc)
-
-        preps["full"] = _prefetch.submit(build_prep, "full")
-        preps["full"].add_done_callback(_log_prefetch_failure)
 
     # One plan per unit: blocked_pass scores both BLOCKERS against the
     # SAME residue, one row per (record, blocker) named by match_method.
@@ -404,73 +392,58 @@ def run_waterfall(
     passes: list[DataFrame] = []
     matched_union: DataFrame | None = None
     residue_rows = total_records
-    try:
-        for sname, scorer, level in units:
-            tpass = _t()
-            side = sides[level][0]
-            if matched_union is None:
-                # the first unit always runs, so an empty input still
-                # yields a result frame with the full schema
-                residue = side
-            else:
-                obs = Observation()
-                residue = side.join(
-                    matched_union, "record_id", "left_anti"
-                ).observe(obs, F.count(F.lit(1)).alias("rows"))
-                residue = residue.localCheckpoint()
-                residue_rows = int(obs.get["rows"])
-                if residue_rows == 0:
-                    break  # every search record already has a full match
-            if level not in preps:
-                preps[level] = build_prep(level)
-            elif isinstance(preps[level], Future):
-                preps[level] = preps[level].result()
-            ref_prepped, ref_rows, ref_hist = preps[level]
-            names = tuple(f"{sname}_{level}_{b}" for b, _ in BLOCKERS)
-            out = blocked.blocked_pass(
-                scorer, residue, sides[level][1], blockers, cfg, names,
-                bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
-            )
+    for sname, scorer, level in units:
+        tpass = _t()
+        side = sides[level][0]
+        if matched_union is None:
+            # the first unit always runs, so an empty input still
+            # yields a result frame with the full schema
+            residue = side
+        else:
             obs = Observation()
-            out = out.select(*RESULT_COLS).observe(obs, *[
-                F.count(F.when(F.col("full_match")
-                               & (F.col("match_method") == n), 1)).alias(n)
-                for n in names
-            ])
-            if store is not None:
-                out = store.write(out, f"pass_{sname}_{level}")
-            else:
-                out = out.localCheckpoint()
-            wins = [int(obs.get[n]) for n in names]
-            passes.extend(out.filter(F.col("match_method") == n)
-                          for n in names)
-            winners = out.filter(F.col("full_match")).select("record_id")
-            if metrics is not None:
-                metrics["passes"].append({
-                    "pass": "+".join(names),
-                    "residue_rows": int(residue_rows),
-                    "matched": sum(wins),
-                    "matched_per_pass": wins,
-                    "small_path": [
-                        residue_rows <= blocked.SMALL_RESIDUE_ROWS
-                    ] * len(names),
-                    "seconds": round(_t() - tpass, 3),
-                })
-            matched_union = winners if matched_union is None else (
-                matched_union.unionByName(winners)
-            )
-    finally:
-        # join the prefetcher on every exit path (ADVICE r6): an early
-        # exit or a raise must not leave a prep thread running a Spark
-        # job against a session the caller may be tearing down, and a
-        # hung thread would otherwise block interpreter shutdown
-        if _prefetch is not None:
-            _prefetch.shutdown(wait=True, cancel_futures=True)
+            residue = side.join(
+                matched_union, "record_id", "left_anti"
+            ).observe(obs, F.count(F.lit(1)).alias("rows"))
+            residue = residue.localCheckpoint()
+            residue_rows = int(obs.get["rows"])
+            if residue_rows == 0:
+                break  # every search record already has a full match
+        if level not in preps:
+            preps[level] = (blocked.prep_ref(sides[level][1], blockers),
+                            None, None)
+        ref_prepped, ref_rows, ref_hist = preps[level]
+        names = tuple(f"{sname}_{level}_{b}" for b, _ in BLOCKERS)
+        out = blocked.blocked_pass(
+            scorer, residue, sides[level][1], blockers, cfg, names,
+            bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
+        )
+        obs = Observation()
+        out = keep(out.select(*RESULT_COLS).observe(obs, *[
+            F.count(F.when(F.col("full_match")
+                           & (F.col("match_method") == n), 1)).alias(n)
+            for n in names
+        ]), f"pass_{sname}_{level}")
+        wins = [int(obs.get[n]) for n in names]
+        passes.extend(out.filter(F.col("match_method") == n)
+                      for n in names)
+        winners = out.filter(F.col("full_match")).select("record_id")
+        metrics["passes"].append({
+            "pass": "+".join(names),
+            "residue_rows": int(residue_rows),
+            "matched": sum(wins),
+            "matched_per_pass": wins,
+            "small_path": [
+                residue_rows <= blocked.SMALL_RESIDUE_ROWS
+            ] * len(names),
+            "seconds": round(_t() - tpass, 3),
+        })
+        matched_union = winners if matched_union is None else (
+            matched_union.unionByName(winners)
+        )
 
-    if metrics is not None:
-        metrics["total_records"] = int(total_records)
-        metrics["matched"] = sum(p["matched"] for p in metrics["passes"])
-        metrics["waterfall_sec"] = round(_t() - _t0, 3)
+    metrics["total_records"] = int(total_records)
+    metrics["matched"] = sum(p["matched"] for p in metrics["passes"])
+    metrics["waterfall_sec"] = round(_t() - _t0, 3)
     return select.combine_passes(passes, key="record_id")
 
 

@@ -14,6 +14,7 @@ single-blocker ones."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
@@ -161,3 +162,37 @@ def test_candidates_parity(sides, scorer, blocker, case):
     want = {key(r, b) for b in blockers
             for r in expected(smin, rmin, b, cfg).collect()}
     assert got == want and len(got) > 0
+
+
+def _scorer_rows(id_col, text_col, rows):
+    """(id, text, block key) tuples → a scorer input frame."""
+    return pd.DataFrame({
+        id_col: pd.Series([r[0] for r in rows], dtype="int64"),
+        text_col: [r[1] for r in rows],
+        "__bk": [r[2] for r in rows],
+    })
+
+
+def test_token_set_scorer_no_candidates_keeps_int64_ids():
+    """No candidate comes back (disjoint blocks, or no search rows): the
+    empty result still types its ids int64, so the per-blocker scorer
+    keeps a Street candidate's id above 2**53 (not a float64) exact
+    beside a Postcode part that scores nothing."""
+    big = 2**53 + 1
+    left = _scorer_rows("record_id", "search_mod_address",
+                        [(big, "12 OAK ROAD", "SW97QD"),
+                         (big, "12 OAK ROAD", "OAK ROAD")])
+    right = _scorer_rows("ref_id", "reference_mod_address",
+                         [(7, "12 OAK ROAD", "CR26XH"),
+                          (big + 2, "12 OAK ROAD", "OAK ROAD")])
+    score = scoring.token_set_scorer()
+    for out in (score(left.iloc[:1], right.iloc[:1]),
+                score(left.iloc[:0], right)):
+        assert len(out) == 0
+        assert str(out["record_id"].dtype) == "int64"
+        assert str(out["ref_id"].dtype) == "int64"
+        assert str(out["fuzzy_score"].dtype) == "float64"
+    left["__blocker"] = right["__blocker"] = ["Postcode", "Street"]
+    out = blocked._per_blocker(score)(left, right)
+    assert out[["record_id", "ref_id", "__blocker"]].values.tolist() == [
+        [big, big + 2, "Street"]]

@@ -4,6 +4,8 @@ byte-identity, and the matched/unmatched split."""
 
 from __future__ import annotations
 
+import threading
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +77,27 @@ def waterfall(sides):
 @pytest.fixture(scope="module")
 def results(waterfall):
     return waterfall[0]
+
+
+def test_waterfall_runs_on_the_calling_thread(sides, monkeypatch):
+    """The 700-record run materialises the ref prep, and no unit runs
+    beside a thread the waterfall started: every job it runs inherits the
+    calling thread's Spark local properties."""
+    before = {t.ident for t in threading.enumerate()}
+    seen = []
+    real_pass = blocked.blocked_pass
+
+    def watching_pass(*a, **kw):
+        seen.append({t.ident for t in threading.enumerate()})
+        return real_pass(*a, **kw)
+
+    monkeypatch.setattr(blocked, "blocked_pass", watching_pass)
+    metrics: dict = {}
+    P.run_waterfall(sides["search_min"], sides["search_full"],
+                    sides["ref_min"], sides["ref_full"], sides["cfg"],
+                    metrics=metrics)
+    assert not metrics["passes"][0]["small_path"][0]
+    assert seen and all(live == before for live in seen)
 
 
 def test_small_plan_follows_true_residue(waterfall):

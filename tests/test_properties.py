@@ -73,6 +73,10 @@ def test_waterfall_checkpointed_equals_plain(spark, sides, tmp_path):
     assert store.committed("pass_fuzzy_min")
     assert store.meta("pass_fuzzy_min")["rows"] >= 0
     assert not store.committed("pass_fuzzy_min_pc")
+    # both levels' ref preps are one commit
+    assert store.committed("ref_prep")
+    assert not store.committed("ref_prep_min")
+    assert not store.committed("ref_prep_full")
 
 
 def test_combine_passes_idempotent(spark, sides):
