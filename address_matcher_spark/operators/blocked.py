@@ -32,7 +32,7 @@ partition already, so the salted plan spends a salting-stats job, two
 shuffles and full reference scans to feed a single task.  Not
 partitioning at all is the faster plan there (SIGMOD'21, "To Partition,
 or Not to Partition"); the residue-size A/B behind the bound is in
-ROADMAP.md (item 5).
+docs/PLANS.md ("One-record pass: the small candidate plan").
 """
 
 from __future__ import annotations

@@ -274,10 +274,13 @@ def run_waterfall(
     metrics: pass a dict to collect per-stage run counters — wall seconds,
     residue rows, matched counts (per unit and per pass) and the
     candidate plan per pass (`small_path`), the broadcast decision (None
-    when not measured), the seconds of the ref prep job (`prep_sec`) —
-    the same counters a store.write records durably; this is the
-    in-process view for ops dashboards and for profiling where waterfall
-    time goes.
+    when not measured), the seconds of the ref prep job (`prep_sec`) and
+    the classes Janino compiled during the call (`codegen_compiles`).
+    They are kept in process only, for ops dashboards and for profiling
+    where waterfall time goes; a store.write records none of them.
+    `codegen_compiles` reads Spark's JVM-wide compile counter, so it also
+    counts classes that queries running beside the call compile, and it
+    excludes the caller's final collect of the lazy result.
 
     One plan per unit: each (scorer, level) unit is ONE blocked_pass
     call scoring both BLOCKERS, with one checkpoint (store key
@@ -300,6 +303,9 @@ def run_waterfall(
     metrics = {} if metrics is None else metrics
     _t = _time.perf_counter
     _t0 = _t()
+    compiles = search_min.sparkSession._jvm.org.apache.spark.metrics \
+        .source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiles0 = compiles.getCount()
 
     def keep(df: DataFrame, key: str) -> DataFrame:
         # a durable checkpoint under `key` with a store, else a local one
@@ -444,6 +450,7 @@ def run_waterfall(
     metrics["total_records"] = int(total_records)
     metrics["matched"] = sum(p["matched"] for p in metrics["passes"])
     metrics["waterfall_sec"] = round(_t() - _t0, 3)
+    metrics["codegen_compiles"] = int(compiles.getCount() - compiles0)
     return select.combine_passes(passes, key="record_id")
 
 

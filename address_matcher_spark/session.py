@@ -9,6 +9,17 @@ Settings rationale (100 TB target, tested on local[N]):
     tools/constants.py:217-218).
   * shuffle partitions default to cores on local mode; on a real cluster
     leave spark.sql.shuffle.partitions to AQE coalescing.
+  * the generated-class cache holds CODEGEN_CACHE_ENTRIES classes, not
+    Spark's default 100.  Spark keeps every Janino-compiled class in one
+    JVM-wide LRU of spark.sql.codegen.cache.maxEntries entries; one
+    waterfall generates more classes than 100, so at the default every
+    request recompiled classes an earlier request had already built
+    (63-82 per one-address lookup, 347-378 per batch_skewed call;
+    docs/PLANS.md, "Generated-class cache").  It is a STATIC SQL conf:
+    it takes effect only when set before the JVM compiles its first
+    class, so it is set here, in the builder, and the spark-submit entry
+    points (scripts/job_match.py, scripts/job_stream.py,
+    scripts/submit_example.sh) set it too.
 """
 
 from __future__ import annotations
@@ -18,6 +29,11 @@ import os
 from pyspark.sql import SparkSession
 
 ARROW_MAX_RECORDS = 20_000
+# sized from the matcher's measured class set with headroom: a
+# batch_skewed process generates 435-443 distinct classes, a
+# lookup_single process 161 after four requests (docs/PLANS.md,
+# "Generated-class cache")
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -51,5 +67,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )

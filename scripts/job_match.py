@@ -43,7 +43,13 @@ from pyspark.sql import functions as F
 
 
 def main() -> None:
-    spark = SparkSession.builder.getOrCreate()
+    from address_matcher_spark.session import CODEGEN_CACHE_ENTRIES
+
+    # a static conf: only a builder setting reaches the generated-class
+    # cache (session.py)
+    spark = SparkSession.builder.config(
+        "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+    ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     from address_matcher_spark import datagen

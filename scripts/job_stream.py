@@ -77,7 +77,13 @@ def run(spark, in_dir: str, ref_dir: str, out_dir: str, ckpt_dir: str,
 
 
 def main() -> None:
-    spark = SparkSession.builder.getOrCreate()
+    from address_matcher_spark.session import CODEGEN_CACHE_ENTRIES
+
+    # a static conf: only a builder setting reaches the generated-class
+    # cache, which every micro-batch's plans share (session.py)
+    spark = SparkSession.builder.config(
+        "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+    ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     in_dir = os.environ.get("AM_STREAM_IN")

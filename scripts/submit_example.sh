@@ -18,6 +18,9 @@ ZIP="$(mktemp -d)/address_matcher_spark.zip"
 # reference ONCE as tables bucketed on the block key; later runs
 # re-declare over the files and plan ref-side work exchange-free.
 #
+# spark.sql.codegen.cache.maxEntries is session.CODEGEN_CACHE_ENTRIES: at
+# Spark's default of 100 every request recompiles its generated classes.
+#
 # The pipeline runs under a DEFAULT session (no caseSensitive override:
 # the ref-side LPI `Postcode` is renamed `postcode_ref` internally).
 spark-submit \
@@ -28,4 +31,5 @@ spark-submit \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
   --conf spark.sql.execution.arrow.maxRecordsPerBatch=20000 \
+  --conf spark.sql.codegen.cache.maxEntries=2000 \
   "$REPO/scripts/job_match.py"

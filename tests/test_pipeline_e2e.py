@@ -15,6 +15,7 @@ from address_matcher_spark.functions import extract as X
 from address_matcher_spark.operators import blocked
 from address_matcher_spark.operators import fieldmatch as FM
 from address_matcher_spark.plans import pipeline as P
+from address_matcher_spark.session import CODEGEN_CACHE_ENTRIES
 
 
 @pytest.fixture(scope="module")
@@ -115,6 +116,24 @@ def test_small_plan_follows_true_residue(waterfall):
         fits = residue <= blocked.SMALL_RESIDUE_ROWS
         assert unit["small_path"] == [fits] * len(unit["small_path"]), unit
         done += int(methods.isin(unit["pass"].split("+")).sum())
+
+
+def test_repeated_waterfall_compiles_nothing(spark, sides):
+    """Spark's generated-class cache holds every class one waterfall
+    needs, so running the same plans again compiles no new class (at
+    Spark's default of 100 entries the second run recompiled ~190)."""
+    assert (spark.conf.get("spark.sql.codegen.cache.maxEntries")
+            == str(CODEGEN_CACHE_ENTRIES))
+    runs = []
+    for _ in range(2):
+        metrics: dict = {}
+        P.run_waterfall(sides["search_min"], sides["search_full"],
+                        sides["ref_min"], sides["ref_full"], sides["cfg"],
+                        metrics=metrics)
+        runs.append(metrics)
+    assert len(runs[1]["passes"]) == 4
+    assert runs[1]["codegen_compiles"] == 0, [r["codegen_compiles"]
+                                               for r in runs]
 
 
 def test_pairwise_f1(results, fixtures, spark):
