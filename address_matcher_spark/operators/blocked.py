@@ -185,7 +185,11 @@ def candidates(
 
     if residue_rows is not None and residue_rows <= SMALL_RESIDUE_ROWS:
         bound = len(blockers) * SMALL_RESIDUE_ROWS
-        left = s.limit(bound + 1).toPandas()
+        # coalesce(1) first: a bare limit is pushed into every union
+        # branch as a LocalLimit, whose generated code names its counter
+        # uniquely, so the class cache never hit and every request
+        # compiled fresh classes
+        left = s.coalesce(1).limit(bound + 1).toPandas()
         if len(left) <= bound:
             # each blocker's key filter lands on its own union branch and
             # pushes below its dedup into the scan: on the reference

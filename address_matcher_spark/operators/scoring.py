@@ -88,11 +88,11 @@ def token_set_scorer(cutoff: float = FUZZY_MATCH_LIMIT,
             "fuzzy_score": np.concatenate([p[2] for p in parts]),
         }) if parts else empty
         if prof_dir:
-            # scaling-residue instrumentation (scripts/profile_block_score
-            # .py): per-call (start, call wall s, kernel wall s, pairs,
-            # call CPU s).  wall vs CPU separates memory-stall slowdown
-            # (on-core, inflates both) from OS descheduling under
-            # oversubscription (inflates wall only).
+            # per-call profile rows, summed per operation by perfbench's
+            # traced run (probes.scorer_profile): (start, call wall s,
+            # kernel wall s, pairs, call CPU s).  wall vs CPU separates
+            # memory-stall slowdown (on-core, inflates both) from OS
+            # descheduling under oversubscription (inflates wall only).
             t1 = time.perf_counter()
             c1 = time.process_time()
             with open(f"{prof_dir}/{os.getpid()}.csv", "a") as fh:

@@ -286,9 +286,18 @@ def run_waterfall(
     call scoring both BLOCKERS, with one checkpoint (store key
     `pass_<scorer>_<level>`).  The ref prep is one per level, shared by
     both scorers; both levels' preps are built by one job, before the
-    first unit (store key `ref_prep`).  run_waterfall starts no thread:
-    every job it runs inherits the calling thread's Spark local
-    properties.
+    first unit (store key `ref_prep`).
+
+    Job tags: every job the call runs carries the Spark job description
+    (`spark.job.description`) `<unit>/<phase>`: `waterfall/sides`,
+    `waterfall/broadcast` and `waterfall/prep`, then per unit
+    `<scorer>_<level>/residue` and `<scorer>_<level>/score` (the
+    blocked_pass build and its checkpoint).  An event log read by
+    scripts/stage_report.py turns them into a per-phase stage table.
+    run_waterfall starts no thread, so every job it runs inherits the
+    tag, and it restores the caller's own description on return.  The
+    returned frame is lazy: the combine_passes jobs run when the caller
+    collects it, under the caller's description.
 
     One exact residue per unit: every unit after the first materialises
     the records no earlier pass full-matched, counting them in the same
@@ -301,157 +310,167 @@ def run_waterfall(
     its residue's blocks)."""
     cfg = cfg or MatchConfig()
     metrics = {} if metrics is None else metrics
-    _t = _time.perf_counter
-    _t0 = _t()
-    compiles = search_min.sparkSession._jvm.org.apache.spark.metrics \
-        .source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    compiles0 = compiles.getCount()
+    sc = search_min.sparkSession.sparkContext
+    caller_tag = sc.getLocalProperty("spark.job.description")
+    try:
+        _t = _time.perf_counter
+        _t0 = _t()
+        compiles = search_min.sparkSession._jvm.org.apache.spark.metrics \
+            .source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        compiles0 = compiles.getCount()
 
-    def keep(df: DataFrame, key: str) -> DataFrame:
-        # a durable checkpoint under `key` with a store, else a local one
-        return (store.write(df, key) if store is not None
-                else df.localCheckpoint())
+        def keep(df: DataFrame, key: str) -> DataFrame:
+            # a durable checkpoint under `key` with a store, else a local one
+            return (store.write(df, key) if store is not None
+                    else df.localCheckpoint())
 
-    # The four standing datasets are reused by every pass
-    # (tools/matcher_funcs.py:752-772).  Materialise them AND cut their
-    # lineage: the standardisation layer is hundreds of expressions, and
-    # without truncation every pass re-analyzes that whole tree on the
-    # driver (~seconds per pass of pure planning).  Callers that already
-    # checkpointed/cached the sides pass sides_materialized=True to skip
-    # the redundant second scan+write (a store still commits them).
-    if store is not None or not sides_materialized:
-        search_min = keep(search_min, "side_search_min")
-        search_full = keep(search_full, "side_search_full")
-        if not ref_materialized:
-            ref_min = keep(ref_min, "side_ref_min")
-            ref_full = keep(ref_full, "side_ref_full")
-    metrics["sides_sec"] = round(_t() - _t0, 3)
-    sides = {"min": (search_min, ref_min), "full": (search_full, ref_full)}
-    total_records = search_min.count()
-    small_run = total_records <= blocked.SMALL_RESIDUE_ROWS
-    # broadcast decision measured once in BYTES, not row count (X11): the
-    # ref side is dimension-like; broadcast only while the serialized table
-    # fits an executor comfortably.  Only the salted plan reads it.
-    bc_ref, measure_sec = None, 0
-    if not small_run:
-        _t1 = _t()
-        bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
-        measure_sec = round(_t() - _t1, 3)
-    metrics["broadcast_measure_sec"] = measure_sec
-    metrics["broadcast_ref"] = bc_ref
-    metrics["passes"] = []
-    # One ref prep per level (blocked.prep_ref), shared by both scorers'
-    # units.  Both levels' preps are ONE job: tagged with their __level,
-    # unioned (Spark runs the two branches in parallel), counted per
-    # level by observe() — the count sizes the pack-bucket memory guard
-    # from the REF side too (_util.pack_group_count) — and materialised
-    # once (store key `ref_prep`), plus one (__level, __blocker, __bk)
-    # histogram every unit's salting stats reuse.  The prep is read by
-    # its histogram and by every unit of its level, and Catalyst
-    # recomputes shared subtrees; a local checkpoint beat .cache() for a
-    # frame read ~3× (docs/PLANS.md, round 6).  Not materialised when the
-    # ref is already a durable bucketed table (persisting would destroy
-    # the bucketed scan's exchange-free HashPartitioning) or the run is
-    # small (every unit then filters the lazy prep to its residue's
-    # blocks, and the filter reaches the ref scan): a lazy prep runs no
-    # job and is built when a unit of its level first needs it.
-    blockers = tuple(b for _, b in BLOCKERS)
-    preps: dict = {}
-    tp = _t()
-    if not ref_materialized and not small_run:
-        tag = F.col("__level")
-        obs = Observation()
-        both = functools.reduce(DataFrame.unionByName, [
-            blocked.prep_ref(sides[lv][1], blockers)
-            .withColumn("__level", F.lit(lv)) for lv in LEVELS
-        ])
-        both = keep(both.observe(obs, *[
-            F.count(F.when(tag == lv, 1)).alias(lv) for lv in LEVELS
-        ]), "ref_prep")
-        hist = both.groupBy("__level", "__blocker", "__bk").count()
-        hist = hist.localCheckpoint()
-        preps = {lv: (both.filter(tag == lv).drop("__level"),
-                      int(obs.get[lv]),
-                      hist.filter(tag == lv).drop("__level"))
-                 for lv in LEVELS}
-    metrics["prep_sec"] = round(_t() - tp, 3)
-
-    scorers = SCORERS if cfg.run_field_passes else SCORERS[:1]
-    units = [(sname, scorer, level)
-             for sname, scorer in scorers for level in LEVELS]
-
-    # One plan per unit: blocked_pass scores both BLOCKERS against the
-    # SAME residue, one row per (record, blocker) named by match_method.
-    # Split by blocker in BLOCKERS order, its one checkpoint gives
-    # combine_passes the passes of a strict sequential waterfall: a
-    # record both blockers match keeps the Postcode row (pass_priority),
-    # so a record the Street blocker can't improve keeps its Postcode
-    # row, the reference's fall-back (tools/matcher_funcs.py:1455-1462).
-    # The Street blocker does score records the Postcode one will win
-    # (bounded: street blocks are the smaller fan-out).  The winner
-    # counts ride the checkpoint via observe(), one per blocker.
-    #
-    # Early-exit gate (X2, tools/matcher_funcs.py:1013-1017): between
-    # units, on the unit's exact residue — the side minus the records
-    # earlier units full-matched, materialised and counted in one job.
-    # It is a localCheckpoint in store mode too: nothing resumes from it.
-    passes: list[DataFrame] = []
-    matched_union: DataFrame | None = None
-    residue_rows = total_records
-    for sname, scorer, level in units:
-        tpass = _t()
-        side = sides[level][0]
-        if matched_union is None:
-            # the first unit always runs, so an empty input still
-            # yields a result frame with the full schema
-            residue = side
-        else:
+        # The four standing datasets are reused by every pass
+        # (tools/matcher_funcs.py:752-772).  Materialise them AND cut their
+        # lineage: the standardisation layer is hundreds of expressions, and
+        # without truncation every pass re-analyzes that whole tree on the
+        # driver (~seconds per pass of pure planning).  Callers that already
+        # checkpointed/cached the sides pass sides_materialized=True to skip
+        # the redundant second scan+write (a store still commits them).
+        sc.setJobDescription("waterfall/sides")
+        if store is not None or not sides_materialized:
+            search_min = keep(search_min, "side_search_min")
+            search_full = keep(search_full, "side_search_full")
+            if not ref_materialized:
+                ref_min = keep(ref_min, "side_ref_min")
+                ref_full = keep(ref_full, "side_ref_full")
+        metrics["sides_sec"] = round(_t() - _t0, 3)
+        sides = {"min": (search_min, ref_min), "full": (search_full, ref_full)}
+        total_records = search_min.count()
+        small_run = total_records <= blocked.SMALL_RESIDUE_ROWS
+        # broadcast decision measured once in BYTES, not row count (X11): the
+        # ref side is dimension-like; broadcast only while the serialized table
+        # fits an executor comfortably.  Only the salted plan reads it.
+        bc_ref, measure_sec = None, 0
+        if not small_run:
+            sc.setJobDescription("waterfall/broadcast")
+            _t1 = _t()
+            bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
+            measure_sec = round(_t() - _t1, 3)
+        metrics["broadcast_measure_sec"] = measure_sec
+        metrics["broadcast_ref"] = bc_ref
+        metrics["passes"] = []
+        # One ref prep per level (blocked.prep_ref), shared by both scorers'
+        # units.  Both levels' preps are ONE job: tagged with their __level,
+        # unioned (Spark runs the two branches in parallel), counted per
+        # level by observe() — the count sizes the pack-bucket memory guard
+        # from the REF side too (_util.pack_group_count) — and materialised
+        # once (store key `ref_prep`), plus one (__level, __blocker, __bk)
+        # histogram every unit's salting stats reuse.  The prep is read by
+        # its histogram and by every unit of its level, and Catalyst
+        # recomputes shared subtrees; a local checkpoint beat .cache() for a
+        # frame read ~3× (docs/PLANS.md, round 6).  Not materialised when the
+        # ref is already a durable bucketed table (persisting would destroy
+        # the bucketed scan's exchange-free HashPartitioning) or the run is
+        # small (every unit then filters the lazy prep to its residue's
+        # blocks, and the filter reaches the ref scan): a lazy prep runs no
+        # job and is built when a unit of its level first needs it.
+        blockers = tuple(b for _, b in BLOCKERS)
+        preps: dict = {}
+        tp = _t()
+        if not ref_materialized and not small_run:
+            sc.setJobDescription("waterfall/prep")
+            tag = F.col("__level")
             obs = Observation()
-            residue = side.join(
-                matched_union, "record_id", "left_anti"
-            ).observe(obs, F.count(F.lit(1)).alias("rows"))
-            residue = residue.localCheckpoint()
-            residue_rows = int(obs.get["rows"])
-            if residue_rows == 0:
-                break  # every search record already has a full match
-        if level not in preps:
-            preps[level] = (blocked.prep_ref(sides[level][1], blockers),
-                            None, None)
-        ref_prepped, ref_rows, ref_hist = preps[level]
-        names = tuple(f"{sname}_{level}_{b}" for b, _ in BLOCKERS)
-        out = blocked.blocked_pass(
-            scorer, residue, sides[level][1], blockers, cfg, names,
-            bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
-        )
-        obs = Observation()
-        out = keep(out.select(*RESULT_COLS).observe(obs, *[
-            F.count(F.when(F.col("full_match")
-                           & (F.col("match_method") == n), 1)).alias(n)
-            for n in names
-        ]), f"pass_{sname}_{level}")
-        wins = [int(obs.get[n]) for n in names]
-        passes.extend(out.filter(F.col("match_method") == n)
-                      for n in names)
-        winners = out.filter(F.col("full_match")).select("record_id")
-        metrics["passes"].append({
-            "pass": "+".join(names),
-            "residue_rows": int(residue_rows),
-            "matched": sum(wins),
-            "matched_per_pass": wins,
-            "small_path": [
-                residue_rows <= blocked.SMALL_RESIDUE_ROWS
-            ] * len(names),
-            "seconds": round(_t() - tpass, 3),
-        })
-        matched_union = winners if matched_union is None else (
-            matched_union.unionByName(winners)
-        )
+            both = functools.reduce(DataFrame.unionByName, [
+                blocked.prep_ref(sides[lv][1], blockers)
+                .withColumn("__level", F.lit(lv)) for lv in LEVELS
+            ])
+            both = keep(both.observe(obs, *[
+                F.count(F.when(tag == lv, 1)).alias(lv) for lv in LEVELS
+            ]), "ref_prep")
+            hist = both.groupBy("__level", "__blocker", "__bk").count()
+            hist = hist.localCheckpoint()
+            preps = {lv: (both.filter(tag == lv).drop("__level"),
+                          int(obs.get[lv]),
+                          hist.filter(tag == lv).drop("__level"))
+                     for lv in LEVELS}
+        metrics["prep_sec"] = round(_t() - tp, 3)
 
-    metrics["total_records"] = int(total_records)
-    metrics["matched"] = sum(p["matched"] for p in metrics["passes"])
-    metrics["waterfall_sec"] = round(_t() - _t0, 3)
-    metrics["codegen_compiles"] = int(compiles.getCount() - compiles0)
-    return select.combine_passes(passes, key="record_id")
+        scorers = SCORERS if cfg.run_field_passes else SCORERS[:1]
+        units = [(sname, scorer, level)
+                 for sname, scorer in scorers for level in LEVELS]
+
+        # One plan per unit: blocked_pass scores both BLOCKERS against the
+        # SAME residue, one row per (record, blocker) named by match_method.
+        # Split by blocker in BLOCKERS order, its one checkpoint gives
+        # combine_passes the passes of a strict sequential waterfall: a
+        # record both blockers match keeps the Postcode row (pass_priority),
+        # so a record the Street blocker can't improve keeps its Postcode
+        # row, the reference's fall-back (tools/matcher_funcs.py:1455-1462).
+        # The Street blocker does score records the Postcode one will win
+        # (bounded: street blocks are the smaller fan-out).  The winner
+        # counts ride the checkpoint via observe(), one per blocker.
+        #
+        # Early-exit gate (X2, tools/matcher_funcs.py:1013-1017): between
+        # units, on the unit's exact residue — the side minus the records
+        # earlier units full-matched, materialised and counted in one job.
+        # It is a localCheckpoint in store mode too: nothing resumes from it.
+        passes: list[DataFrame] = []
+        matched_union: DataFrame | None = None
+        residue_rows = total_records
+        for sname, scorer, level in units:
+            tpass = _t()
+            side = sides[level][0]
+            if matched_union is None:
+                # the first unit always runs, so an empty input still
+                # yields a result frame with the full schema
+                residue = side
+            else:
+                sc.setJobDescription(f"{sname}_{level}/residue")
+                obs = Observation()
+                residue = side.join(
+                    matched_union, "record_id", "left_anti"
+                ).observe(obs, F.count(F.lit(1)).alias("rows"))
+                residue = residue.localCheckpoint()
+                residue_rows = int(obs.get["rows"])
+                if residue_rows == 0:
+                    break  # every search record already has a full match
+            if level not in preps:
+                preps[level] = (blocked.prep_ref(sides[level][1], blockers),
+                                None, None)
+            ref_prepped, ref_rows, ref_hist = preps[level]
+            names = tuple(f"{sname}_{level}_{b}" for b, _ in BLOCKERS)
+            sc.setJobDescription(f"{sname}_{level}/score")
+            out = blocked.blocked_pass(
+                scorer, residue, sides[level][1], blockers, cfg, names,
+                bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
+            )
+            obs = Observation()
+            out = keep(out.select(*RESULT_COLS).observe(obs, *[
+                F.count(F.when(F.col("full_match")
+                               & (F.col("match_method") == n), 1)).alias(n)
+                for n in names
+            ]), f"pass_{sname}_{level}")
+            wins = [int(obs.get[n]) for n in names]
+            passes.extend(out.filter(F.col("match_method") == n)
+                          for n in names)
+            winners = out.filter(F.col("full_match")).select("record_id")
+            metrics["passes"].append({
+                "pass": "+".join(names),
+                "residue_rows": int(residue_rows),
+                "matched": sum(wins),
+                "matched_per_pass": wins,
+                "small_path": [
+                    residue_rows <= blocked.SMALL_RESIDUE_ROWS
+                ] * len(names),
+                "seconds": round(_t() - tpass, 3),
+            })
+            matched_union = winners if matched_union is None else (
+                matched_union.unionByName(winners)
+            )
+
+        metrics["total_records"] = int(total_records)
+        metrics["matched"] = sum(p["matched"] for p in metrics["passes"])
+        metrics["waterfall_sec"] = round(_t() - _t0, 3)
+        metrics["codegen_compiles"] = int(compiles.getCount() - compiles0)
+        return select.combine_passes(passes, key="record_id")
+    finally:
+        sc.setJobDescription(caller_tag)
 
 
 def match_summary(results: DataFrame) -> DataFrame:

@@ -76,6 +76,29 @@ def run(spark, in_dir: str, ref_dir: str, out_dir: str, ckpt_dir: str,
     return counts
 
 
+def write_default_corpus(base: str) -> tuple[str, str]:
+    """The synthetic corpus of a run with no inputs set, written once
+    under `base`: the reference as one parquet file, and the pages split
+    into the two plain parquet files the file source watches,
+    drops/drop0.parquet and drops/drop1.parquet.  Returns (the drops
+    dir, the reference path)."""
+    from address_matcher_spark import datagen
+
+    in_dir = os.path.join(base, "drops")
+    ref_path = os.path.join(base, "reference_addresses.parquet")
+    if not os.path.exists(os.path.join(in_dir, "drop1.parquet")):
+        tables = datagen.generate(datagen.Scale(n_ref=1200, n_search=800))
+        os.makedirs(in_dir, exist_ok=True)
+        tables["reference_addresses"].to_parquet(ref_path, index=False)
+        pages = tables["pages"]
+        half = len(pages) // 2
+        # drop1 last: its presence marks a complete corpus
+        for i, part in enumerate((pages.iloc[:half], pages.iloc[half:])):
+            part.to_parquet(os.path.join(in_dir, f"drop{i}.parquet"),
+                            index=False)
+    return in_dir, ref_path
+
+
 def main() -> None:
     from address_matcher_spark.session import CODEGEN_CACHE_ENTRIES
 
@@ -92,22 +115,7 @@ def main() -> None:
     ckpt_dir = os.environ.get("AM_CKPT_DIR", "/tmp/am_stream_ckpt")
 
     if not in_dir or not ref_dir:
-        from address_matcher_spark import datagen
-
-        base = "/tmp/am_stream_corpus"
-        in_dir = os.path.join(base, "drops")
-        ref_dir = os.path.join(base, "reference_addresses.parquet")
-        if not os.path.exists(os.path.join(base, "_done")):
-            import glob
-            import shutil
-
-            datagen.write_fixtures(base, datagen.Scale(n_ref=1200, n_search=800))
-            os.makedirs(in_dir, exist_ok=True)
-            # the file source watches plain files — move the part files in
-            for i, part in enumerate(sorted(glob.glob(
-                    os.path.join(base, "pages.parquet", "part-*.parquet")))):
-                shutil.move(part, os.path.join(in_dir, f"drop{i}.parquet"))
-            open(os.path.join(base, "_done"), "w").close()
+        in_dir, ref_dir = write_default_corpus("/tmp/am_stream_corpus")
 
     counts = run(spark, in_dir, ref_dir, out_dir, ckpt_dir)
     print(json.dumps(counts))

@@ -136,6 +136,61 @@ def test_repeated_waterfall_compiles_nothing(spark, sides):
                                                for r in runs]
 
 
+def test_repeated_small_run_compiles_nothing(spark, sides):
+    """A run of at most blocked.SMALL_RESIDUE_ROWS records collects each
+    unit's residue; run twice on the same side, the second run compiles
+    no class (a bare limit over the blockers' union compiled fresh
+    classes on every run)."""
+    ids = sides["search_min"].select("record_id").orderBy("record_id") \
+        .limit(100)
+    small = [sides[k].join(ids, "record_id", "left_semi")
+             for k in ("search_min", "search_full")]
+    runs = []
+    for _ in range(2):
+        metrics: dict = {}
+        P.run_waterfall(*small, sides["ref_min"], sides["ref_full"],
+                        sides["cfg"], metrics=metrics)
+        runs.append(metrics)
+    assert all(all(p["small_path"]) for p in runs[1]["passes"])
+    assert runs[1]["codegen_compiles"] == 0, [r["codegen_compiles"]
+                                               for r in runs]
+
+
+def _job_descriptions(sc) -> dict:
+    """{job id: description} of every job in the live status store (kept
+    with the UI disabled), once the listener bus has delivered them."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    out = {}
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        desc = job.description()
+        out[job.jobId()] = desc.get() if desc.isDefined() else None
+    return out
+
+
+def test_waterfall_jobs_carry_unit_phase_tags(spark, sides):
+    """Every job one run_waterfall call runs is described
+    `<unit>/<phase>`, and the caller's own description is back after."""
+    sc = spark.sparkContext
+    before = max(_job_descriptions(sc), default=-1)
+    sc.setJobDescription("caller")
+    try:
+        P.run_waterfall(sides["search_min"], sides["search_full"],
+                        sides["ref_min"], sides["ref_full"], sides["cfg"])
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    tags = {d for j, d in _job_descriptions(sc).items() if j > before}
+    units = [f"{s}_{lv}" for s, _ in P.SCORERS for lv in P.LEVELS]
+    allowed = {f"waterfall/{p}" for p in ("sides", "broadcast", "prep")} | {
+        f"{u}/{p}" for u in units for p in ("residue", "score")}
+    # the 700-record run takes every phase; the first unit has no residue
+    want = allowed - {"fuzzy_min/residue"}
+    assert tags == want, tags ^ want
+
+
 def test_pairwise_f1(results, fixtures, spark):
     """F1 over labeled pairs: prediction for (record, ref) = pipeline
     matched that record to that ref with full_match."""

@@ -134,11 +134,7 @@ def test_windowed_aggregation(spark, fx, tmp_path):
     assert all(r.lang == "en" for r in rows)
 
 
-def test_job_stream_two_drop_e2e(spark, fx, ref_sides, tmp_path):
-    """scripts/job_stream.py end-to-end over two drops: each AvailableNow
-    drain processes only new files (checkpointed), matches equal the batch
-    waterfall over the unique pages, change events fire for new urls and
-    content changes but not identical re-crawls."""
+def _job_stream():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -147,7 +143,29 @@ def test_job_stream_two_drop_e2e(spark, fx, ref_sides, tmp_path):
     )
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
+    return job
 
+
+def test_job_stream_default_corpus_has_two_drops(tmp_path):
+    """With no inputs set, scripts/job_stream.py streams a synthetic
+    corpus: two plain parquet drops holding all of its 800 pages."""
+    import pandas as pd
+
+    in_dir, ref_path = _job_stream().write_default_corpus(str(tmp_path))
+    drops = sorted(os.listdir(in_dir))
+    assert drops == ["drop0.parquet", "drop1.parquet"]
+    pages = pd.concat([pd.read_parquet(os.path.join(in_dir, d))
+                       for d in drops])
+    assert len(pages) == 800 and pages["url"].is_unique
+    assert len(pd.read_parquet(ref_path)) > 0
+
+
+def test_job_stream_two_drop_e2e(spark, fx, ref_sides, tmp_path):
+    """scripts/job_stream.py end-to-end over two drops: each AvailableNow
+    drain processes only new files (checkpointed), matches equal the batch
+    waterfall over the unique pages, change events fire for new urls and
+    content changes but not identical re-crawls."""
+    job = _job_stream()
     in_dir = str(tmp_path / "drops")
     ref_dir = str(tmp_path / "ref.parquet")
     out_dir = str(tmp_path / "out")
