@@ -204,12 +204,6 @@ def _move_flat_house_court_post(flat_removed: Column) -> Column:
     return F.when(cond, replacement).otherwise(flat_removed)
 
 
-def move_flat_house_court(col: Column) -> Column:
-    """tools/standardise.py:191-220 (column-expression form; prefer
-    standardise_address_df which materializes the intermediate)."""
-    return _move_flat_house_court_post(remove_flat_one_number_address(col))
-
-
 # ---------------------------------------------------------------------------
 # T12/T13 — comma spacing + number-range collapse (tools/standardise.py:144-149)
 # ---------------------------------------------------------------------------
@@ -426,20 +420,8 @@ def extract_room_no(col: Column) -> Column:
     the surrounding try/except swallows it, so room_number is always NaN.
     Preserved byte-identically (the verification predicate then compares
     ''=='', always true — tools/fuzzy_match.py:269).
-    ``extract_room_no_semantic`` keeps the evidently-intended behaviour.
     """
     return F.lit(None).cast("string")
-
-
-def extract_room_no_semantic(col: Column) -> Column:
-    """What tools/standardise.py:532-544 intends: word after 'room'
-    ('no.' removed literally, the '.' in the extract pattern eating the
-    removed token's gap)."""
-    guarded = F.when(
-        F.lower(col).rlike(r"\broom\b|\brooms\b"),
-        F.regexp_replace(col, r"no\.", ""),
-    )
-    return _extract_or_null(guarded, r"room. (\w+)")
 
 
 def extract_block_number(col: Column) -> Column:

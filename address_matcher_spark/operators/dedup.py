@@ -468,12 +468,6 @@ def simhash32_from_hashes(hashes: Column) -> Column:
     return out
 
 
-def simhash32(text: Column) -> Column:
-    """32-bit SimHash over an inline tokenisation — only for callers that
-    cannot project token_hashes first."""
-    return simhash32_from_hashes(token_hashes(text))
-
-
 def simhash_buckets(docs: DataFrame, prefix_bits: int = 8,
                     text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Docs grouped by SimHash high-bit prefix — the scale path for

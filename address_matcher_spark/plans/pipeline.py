@@ -48,7 +48,6 @@ class MatchConfig:
                                             # (see salt_target_pairs_for)
     broadcast_max_bytes: int = 256 * 1024 * 1024  # explicit-broadcast ceiling
     run_field_passes: bool = True
-    area_cofilter: bool = True              # F3 (tools/matcher_funcs.py:567-606)
     address_cols: tuple = ("address_line1", "address_line2", "town")
     postcode_col: str = "postcode"
 
@@ -153,25 +152,24 @@ def prepare_sides(
     F3 postcode-area co-filter (both directions) and F4 previously-matched
     exclusion when a prior results table is supplied.  Both run on the RAW
     frames so the heavy standardisation projections only touch surviving
-    rows (the semi-joins sit below the regex layer in the plan).
+    rows.  The co-filter's area collects run here, leaving `isin` filters:
+    a side's plan is scan → filter → projections, which ensure_parallel's
+    probe only plans and a side checkpoint runs once.
 
-    cofilter_ref=False keeps the FULL reference: required when the ref
-    sides are materialised for cross-run reuse (bucketed tables) — the
-    area co-filter depends on the current search corpus, and the ref
-    direction is perf-only (full_match needs close_postcode_match, finer
-    than area equality, so dropping other-area ref rows never changes a
-    result); each pass reads only the reference blocks its residue
-    holds instead — the salted plan's block stats join keeps only blocks
-    both sides hold, and the small plan filters the ref to the
+    cofilter_ref=False keeps the FULL reference (no ref collect): required
+    when the ref sides are materialised for cross-run reuse (bucketed
+    tables) — the area co-filter depends on the current search corpus, and
+    the ref direction is perf-only (full_match needs close_postcode_match,
+    finer than area equality, so dropping other-area ref rows never
+    changes a result); each pass reads only the reference blocks its
+    residue holds instead — the salted plan's block stats join keeps only
+    blocks both sides hold, and the small plan filters the ref to the
     residue's block keys (one bucket of a bucketed reference)."""
-    if cfg.area_cofilter:
-        search_kept, ref_kept, _ = cofilter.area_cofilter(
-            search_raw, ref_raw, cfg.postcode_col, "Postcode",
-            address_cols=cfg.address_cols,
-        )
-        search_raw = search_kept
-        if cofilter_ref:
-            ref_raw = ref_kept
+    args = (search_raw, ref_raw, cfg.postcode_col, "Postcode", cfg.address_cols)
+    if cofilter_ref:
+        search_raw, ref_raw, _ = cofilter.area_cofilter(*args)
+    else:
+        search_raw = cofilter.included(cofilter.label_area_exclusions(*args))
     if prior_results is not None:
         search_raw, _ = cofilter.exclude_previously_matched(
             search_raw, prior_results
@@ -331,16 +329,21 @@ def run_waterfall(
         # driver (~seconds per pass of pure planning).  Callers that already
         # checkpointed/cached the sides pass sides_materialized=True to skip
         # the redundant second scan+write (a store still commits them).
+        # The record count rides the search_min checkpoint (observe()).
         sc.setJobDescription("waterfall/sides")
         if store is not None or not sides_materialized:
-            search_min = keep(search_min, "side_search_min")
+            obs = Observation()
+            search_min = keep(search_min.observe(
+                obs, F.count(F.lit(1)).alias("rows")), "side_search_min")
+            total_records = int(obs.get["rows"])
             search_full = keep(search_full, "side_search_full")
             if not ref_materialized:
                 ref_min = keep(ref_min, "side_ref_min")
                 ref_full = keep(ref_full, "side_ref_full")
+        else:
+            total_records = search_min.count()
         metrics["sides_sec"] = round(_t() - _t0, 3)
         sides = {"min": (search_min, ref_min), "full": (search_full, ref_full)}
-        total_records = search_min.count()
         small_run = total_records <= blocked.SMALL_RESIDUE_ROWS
         # broadcast decision measured once in BYTES, not row count (X11): the
         # ref side is dimension-like; broadcast only while the serialized table

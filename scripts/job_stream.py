@@ -107,7 +107,14 @@ def main() -> None:
     spark = SparkSession.builder.config(
         "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
     ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    # AQE is off for stateful streaming queries, so without this every
+    # micro-batch shuffle runs Spark's default 200 tasks (and the state
+    # store keeps that count in its checkpoint)
+    key = "spark.sql.shuffle.partitions"
+    if not sc.getConf().contains(key):
+        spark.conf.set(key, str(sc.defaultParallelism))
 
     in_dir = os.environ.get("AM_STREAM_IN")
     ref_dir = os.environ.get("AM_REF_DIR")

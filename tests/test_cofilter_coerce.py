@@ -109,6 +109,79 @@ def test_prior_exclusion_and_incremental_rerun(spark, search_df, ref_df):
     assert ref.count() == 2  # SW25 block pruned (no surviving search rows)
 
 
+@pytest.fixture
+def parquet_sides(spark, search_df, ref_df, tmp_path):
+    """The fixtures as parquet scans: a LocalRelation lets the optimizer
+    fold the co-filter's aggregates away, which would hide their jobs."""
+    search = search_df.withColumn(
+        "url", F.concat(F.lit("record://"), F.col("record_id").cast("string")))
+    search.write.parquet(str(tmp_path / "search"))
+    ref_df.write.parquet(str(tmp_path / "ref"))
+    return (spark.read.parquet(str(tmp_path / "search")),
+            spark.read.parquet(str(tmp_path / "ref")))
+
+
+def _plan_nodes(df) -> list[str]:
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
+    return [line.lstrip(" :+-|").split(" ")[0] for line in tree.splitlines()]
+
+
+def test_prepared_sides_plan_no_join_or_aggregate(parquet_sides):
+    """The co-filter collects its area sets and leaves `isin` filters, so
+    neither prepared side's plan joins or aggregates (ensure_parallel's
+    round-robin repartition is allowed): nothing re-runs the co-filter."""
+    search, ref = P.prepare_sides(*parquet_sides, P.MatchConfig())
+    for side in (search, ref):
+        nodes = _plan_nodes(side)
+        assert not [n for n in nodes if n.startswith(("Join", "Aggregate"))], nodes
+    assert {r["record_id"] for r in search.collect()} == {1, 2, 4}
+    assert {r["ref_id"] for r in ref.collect()} == {10, 11}
+
+
+def test_side_checkpoint_runs_two_jobs(spark, parquet_sides):
+    """A localCheckpoint of each standardised side runs only its own scan,
+    round-robin repartition and projections: at most 2 jobs (the shuffle
+    map stage and the result stage), none re-running the co-filter."""
+    sc = spark.sparkContext
+    search, ref = P.prepare_sides(*parquet_sides, P.MatchConfig())
+    sides = {
+        "search_min": P.standardise_search(search, False),
+        "search_full": P.standardise_search(search, True),
+        "ref_min": P.standardise_reference(ref, False),
+        "ref_full": P.standardise_reference(ref, True),
+    }
+    jobs = {}
+    try:
+        for name, side in sides.items():
+            group = f"side-checkpoint-{name}"
+            sc.setJobGroup(group, group)
+            side.localCheckpoint()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(1 <= n <= 2 for n in jobs.values()), jobs
+
+
+def test_area_cofilter_empty_ref_blank_postcodes(spark):
+    """Adversarial: an empty reference and search rows whose postcodes are
+    null, empty or blank.  No area is found, so every row is labeled
+    'Postcode area not found' and both kept sides are empty."""
+    s = spark.createDataFrame(
+        [dict(record_id=i, address_line1="12 oak road", address_line2="",
+              town="LONDON", postcode=pc)
+         for i, pc in enumerate([None, "", "   ", "SW9 7QD"])],
+        "record_id long, address_line1 string, address_line2 string, "
+        "town string, postcode string",
+    )
+    ref = spark.createDataFrame([], "ref_id long, Postcode string")
+    cols = ("address_line1", "address_line2", "town")
+    kept, ref_kept, labeled = C.area_cofilter(s, ref, address_cols=cols)
+    labels = [r[C.EXCLUSION_COL] for r in labeled.collect()]
+    assert labels == [C.EXCL_AREA] * 4
+    assert kept.count() == 0 and ref_kept.count() == 0
+
+
 def test_join_prior_results_suffixes(spark, search_df):
     prior = spark.createDataFrame(
         [dict(record_id=1, postcode="OLD", fuzzy_score=99.0)]
