@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from address_matcher_spark.functions.cache import cached
+
 # ---------------------------------------------------------------------------
 # T1/T2 — UK postcode extract / remove (tools/standardise.py:621-641)
 # ---------------------------------------------------------------------------
@@ -317,6 +319,34 @@ def add_flat_start_letter(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
+@cached
+def _cascade(in_col: str, out_col: str, standardise: bool):
+    """(stages, fields) of standardise_address_df: the (column,
+    expression) of each stage projection, and the select list appending
+    the number fields to every column."""
+    tmp = f"__std_{out_col}"
+    if standardise:
+        # linear chains (each referencing its input once) are fused into a
+        # single Project; only the multi-reference when/otherwise cascades
+        # get their own materialisation step — fewer Projects keeps
+        # driver-side analysis time down without re-inflating the tree
+        prev = F.col(tmp)
+        stages = (
+            (tmp, apply_synonyms(replace_mistaken_dates(
+                F.lower(remove_postcode(F.trim(F.col(in_col))))))),
+            (tmp, remove_flat_one_number_address(prev)),
+            (tmp, collapse_number_ranges(
+                fix_comma_spacing(_move_flat_house_court_post(prev)))),
+            (tmp, replace_floor_flat(prev)),
+            (out_col, F.trim(add_flat_start_letter(prev))),
+        )
+    else:
+        stages = ((out_col, F.trim(remove_postcode(F.trim(F.col(in_col))))),)
+    fields = extract_number_fields(F.col(out_col))
+    return stages, (
+        F.col("*"), *[expr.alias(name) for name, expr in fields.items()])
+
+
 def standardise_address_df(df, in_col: str, out_col: str, standardise: bool):
     """The full/minimal standardisation cascade producing ``out_col`` plus
     the extracted number-field columns, as a DataFrame transformation.
@@ -331,38 +361,18 @@ def standardise_address_df(df, in_col: str, out_col: str, standardise: bool):
     multiplicatively — Catalyst's CollapseProject keeps multiply-referenced
     non-cheap aliases materialized, so each stage stays a shallow
     expression and the whole layer remains one codegen'd projection chain.
+
+    The stage expressions and the field select list are built once per
+    process (functions/cache.py), keyed on (in_col, out_col, standardise):
+    a second call builds nothing and only applies them, one projection
+    per stage.
     """
-    tmp = f"__std_{out_col}"
+    stages, fields = _cascade(in_col, out_col, standardise)
+    for name, expr in stages:
+        df = df.withColumn(name, expr)
     if standardise:
-        # linear chains (each referencing its input once) are fused into a
-        # single Project; only the multi-reference when/otherwise cascades
-        # get their own materialisation step — fewer Projects keeps
-        # driver-side analysis time down without re-inflating the tree
-        df = df.withColumn(
-            tmp,
-            apply_synonyms(
-                replace_mistaken_dates(
-                    F.lower(remove_postcode(F.trim(F.col(in_col))))
-                )
-            ),
-        )
-        df = df.withColumn(tmp, remove_flat_one_number_address(F.col(tmp)))
-        df = df.withColumn(
-            tmp,
-            collapse_number_ranges(
-                fix_comma_spacing(_move_flat_house_court_post(F.col(tmp)))
-            ),
-        )
-        df = df.withColumn(tmp, replace_floor_flat(F.col(tmp)))
-        df = df.withColumn(out_col, F.trim(add_flat_start_letter(F.col(tmp)))).drop(tmp)
-    else:
-        df = df.withColumn(
-            out_col, F.trim(remove_postcode(F.trim(F.col(in_col))))
-        )
-    fields = extract_number_fields(F.col(out_col))
-    return df.select(
-        "*", *[expr.alias(name) for name, expr in fields.items()]
-    )
+        df = df.drop(f"__std_{out_col}")
+    return df.select(*fields)
 
 
 # ---------------------------------------------------------------------------

@@ -45,16 +45,23 @@ from typing import Callable
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from address_matcher_spark.functions.cache import cached, columns
 from address_matcher_spark.operators import (
     _util, blocking, scoring, select, verify,
 )
 
 # at most this many residue rows take the small plan (see module doc)
 SMALL_RESIDUE_ROWS = 127
-_CAND_SCHEMA = (
-    "record_id long, ref_id long, fuzzy_score double, __blocker string"
-)
+# a StructType, not a DDL string: each UDF built over a DDL string parses
+# it in the JVM again
+_CAND_SCHEMA = T.StructType([
+    T.StructField("record_id", T.LongType()),
+    T.StructField("ref_id", T.LongType()),
+    T.StructField("fuzzy_score", T.DoubleType()),
+    T.StructField("__blocker", T.StringType()),
+])
 _KEYS = {"Postcode": "postcode_search", "Street": "street_key"}
 _BLOCK = ["__blocker", "__bk"]  # a block: the blocker and its key value
 _RECORD = ["record_id", "__blocker"]  # one attempt: a record in one blocker
@@ -64,25 +71,26 @@ _RECORD = ["record_id", "__blocker"]  # one attempt: a record in one blocker
 class Scorer:
     """What differs between the fuzzy and the field-wise pass.
 
-    prep_search:  search-side projection applied before blocking
-                  (predicted LPI fields for the field scorer).
     search_cols / ref_cols:  columns each side ships into the scorer
                   besides its id and the block key.
+    derive_search: () → {name: expression} for the search_cols derived
+                  from the standardised side rather than read from it
+                  (predicted LPI fields for the field scorer).
     score:        cfg → score(left, right), a pandas function from search
                   rows and ref rows (each carrying the block key as the
                   column __bk) to their (record_id, ref_id, fuzzy_score)
                   candidates; both candidate plans call it.
-    verify_limit: (cfg, blocker) → the D1 score threshold, where blocker
-                  is the column holding each row's blocker name.
+    verify_limit: (cfg, blocker) → the D1 score threshold of the blocker
+                  named `blocker`, a float.
     wratio_tiebreak: whether tied shortlists get the plain-ratio
                   tie-break (P2); the field pass carries a null score.
     """
 
-    prep_search: Callable[[DataFrame], DataFrame]
     search_cols: tuple[str, ...]
     ref_cols: tuple[str, ...]
+    derive_search: Callable[[], dict[str, Column]]
     score: Callable[..., Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame]]
-    verify_limit: Callable[..., float | Column]
+    verify_limit: Callable[..., float]
     wratio_tiebreak: bool
 
 
@@ -91,9 +99,24 @@ def prep_ref_for_block(ref_std: DataFrame, blocker: str) -> DataFrame:
     key to __bk, drop the other key, dedup identical standardised rows
     (X7 — join-key fan-out guard).  prep_ref unions them."""
     key = _KEYS[blocker]
-    r = ref_std.filter(F.col(key) != "").withColumnRenamed(key, "__bk")
+    r = ref_std.filter(_has_key(key)).withColumnRenamed(key, "__bk")
     r = r.drop(*(set(_KEYS.values()) - {key}))
     return r.dropDuplicates(["__bk", "reference_mod_address"])
+
+
+@cached
+def _has_key(key: str) -> Column:
+    return F.col(key) != ""
+
+
+@cached
+def _tag(blocker: str) -> Column:
+    return F.lit(blocker)
+
+
+@cached
+def _is_blocker(blocker: str) -> Column:
+    return F.col("__blocker") == blocker
 
 
 def _names(x) -> tuple[str, ...]:
@@ -112,7 +135,7 @@ def prep_ref(ref_std: DataFrame, blocker) -> DataFrame:
     lazy prep (bucketed reference, small run) lets each blocker's key
     filter reach its own branch's ref scan."""
     return _union(
-        prep_ref_for_block(ref_std, b).withColumn("__blocker", F.lit(b))
+        prep_ref_for_block(ref_std, b).withColumn("__blocker", _tag(b))
         for b in _names(blocker)
     )
 
@@ -172,14 +195,8 @@ def candidates(
     aggregation once per unit (equivalence in
     blocking.salt_for_cogroup_adaptive)."""
     blockers = _names(blocker)
-    base = scorer.prep_search(search_std)
-    s = _union(
-        base.filter(F.col(_KEYS[b]) != "").select(
-            "record_id", F.lit(b).alias("__blocker"),
-            F.col(_KEYS[b]).alias("__bk"), *scorer.search_cols,
-        )
-        for b in blockers
-    )
+    s = _union(search_std.filter(_has_key(_KEYS[b])).select(
+        *_search_branch(b, scorer)) for b in blockers)
     r = prep_ref(ref_std, blockers) if ref_prepped is None else ref_prepped
     score = _per_blocker(scorer.score(cfg))
 
@@ -195,12 +212,12 @@ def candidates(
             # pushes below its dedup into the scan: on the reference
             # bucketed by postcode it reads the residue's buckets only
             rk = r.filter(functools.reduce(operator.or_, [
-                (F.col("__blocker") == b) & F.col("__bk").isin(
+                _is_blocker(b) & F.col("__bk").isin(
                     sorted(set(left.loc[left["__blocker"] == b, "__bk"])))
                 for b in blockers
             ]))
             cand = (
-                rk.select("ref_id", *_BLOCK, *scorer.ref_cols).coalesce(1)
+                rk.select(*_ref_branch(scorer.ref_cols)).coalesce(1)
                 .mapInPandas(functools.partial(_score_all, score, left),
                              _CAND_SCHEMA)
             )
@@ -218,7 +235,7 @@ def candidates(
     # semi-join.
     spark = s.sparkSession
     s_salted, r_salted, extra = blocking.salt_for_cogroup_adaptive(
-        s, r.select("ref_id", *_BLOCK, *scorer.ref_cols),
+        s, r.select(*_ref_branch(scorer.ref_cols)),
         _BLOCK, blocking.salt_target_pairs_for(spark, cfg),
         ref_hist=ref_hist,
     )
@@ -240,13 +257,40 @@ def candidates(
     s_salted, r_salted, keys = blocking.pack_groups(
         s_salted, r_salted, _BLOCK, extra, n_groups
     )
-    s_salted = s_salted.repartition(npart, *[F.col(k) for k in keys])
-    r_salted = r_salted.repartition(npart, *[F.col(k) for k in keys])
+    keys = columns(tuple(keys))
+    s_salted = s_salted.repartition(npart, *keys)
+    r_salted = r_salted.repartition(npart, *keys)
     cand = (
         s_salted.groupBy(*keys).cogroup(r_salted.groupBy(*keys))
         .applyInPandas(score, _CAND_SCHEMA)
     )
     return select.keep_max_score(cand, _RECORD), None
+
+
+@cached
+def _search_branch(blocker: str, scorer: Scorer) -> tuple:
+    """One blocker's search-side select list: the record, its blocker
+    tag and block key, the scorer's columns."""
+    derived = scorer.derive_search()
+    return (F.col("record_id"), F.lit(blocker).alias("__blocker"),
+            F.col(_KEYS[blocker]).alias("__bk"),
+            *(derived[c].alias(c) if c in derived else F.col(c)
+              for c in scorer.search_cols))
+
+
+def _ref_branch(ref_cols: tuple) -> tuple:
+    return columns(("ref_id", *_BLOCK, *ref_cols))
+
+
+@cached
+def _tail(blockers: tuple, names: tuple) -> tuple:
+    """blocked_pass' fixed tail columns: the field pass's null wratio
+    and the match_method naming each row's pass."""
+    row_blocker = F.col("__blocker")
+    method = F.lit(names[-1])
+    for b, name in zip(blockers[:-1], names[:-1]):
+        method = F.when(row_blocker == b, name).otherwise(method)
+    return F.lit(None).cast("double"), method
 
 
 def blocked_pass(
@@ -301,10 +345,11 @@ def blocked_pass(
         shortlist = shortlist.join(
             F.broadcast(ref_back) if broadcast_ref else ref_back, "ref_id"
         )
-    row_blocker = F.col("__blocker")
+    blockers, names = _names(blocker), _names(pass_name)
+    no_wratio, method = _tail(blockers, names)
     shortlist = verify.add_decisions(
-        shortlist, row_blocker,
-        scorer.verify_limit(cfg, row_blocker),
+        shortlist, blockers,
+        tuple(scorer.verify_limit(cfg, b) for b in blockers),
         cfg.no_number_fuzzy_match_limit,
     )
     if scorer.wratio_tiebreak:
@@ -315,12 +360,6 @@ def blocked_pass(
             # the one-partition layout so best_match needs no exchange
             shortlist = shortlist.coalesce(1)
     else:
-        shortlist = shortlist.withColumn(
-            "wratio_score", F.lit(None).cast("double")
-        )
-    blockers, names = _names(blocker), _names(pass_name)
-    method = F.lit(names[-1])
-    for b, name in zip(blockers[:-1], names[:-1]):
-        method = F.when(row_blocker == b, name).otherwise(method)
+        shortlist = shortlist.withColumn("wratio_score", no_wratio)
     best = select.best_match(shortlist, _RECORD)
     return best.withColumn("match_method", method).drop("__blocker")

@@ -19,8 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from address_matcher_spark.functions.cache import cached, columns
 
 
 def prefilter_ref(ref: DataFrame, search: DataFrame, key: str) -> DataFrame:
@@ -86,46 +88,53 @@ def salt_for_cogroup_adaptive(
     # lacks vanish in the inner join with the search histogram, so
     # `stats` — and therefore both salted outputs — hold only blocks
     # present on both sides.
-    keys = [key] if isinstance(key, str) else key
-    sh = search.groupBy(*keys).count().withColumnRenamed("count", "__sc")
+    keys = (key,) if isinstance(key, str) else tuple(key)
+    sh = search.groupBy(*columns(keys)).count() \
+        .withColumnRenamed("count", "__sc")
     rh = (ref_hist.withColumnRenamed("count", "__rc")
           if ref_hist is not None
-          else ref.groupBy(*keys).count().withColumnRenamed("count", "__rc"))
-    n = F.ceil(F.col("__sc") * F.col("__rc") / F.lit(target_pairs))
-    a = F.ceil(F.sqrt(n * F.col("__sc") / F.col("__rc")))
-    a = F.greatest(F.least(a, F.lit(max_splits), F.col("__sc")), F.lit(1))
-    b = F.greatest(F.least(F.ceil(n / a), F.lit(max_splits), F.col("__rc")), F.lit(1))
+          else ref.groupBy(*columns(keys)).count()
+          .withColumnRenamed("count", "__rc"))
+    na, nb, s_cols, r_cols = _salt_cols(target_pairs, max_splits,
+                                        search_id_col, ref_id_col)
     stats = (
         sh.join(rh, key)
-        .withColumn("__na", a.cast("int"))
-        .withColumn("__nb", b.cast("int"))
-        .select(*keys, "__na", "__nb")
+        .withColumn("__na", na)
+        .withColumn("__nb", nb)
+        .select(*columns((*keys, "__na", "__nb")))
     )
     s = (
         search.join(F.broadcast(stats), key)
-        .withColumn(
-            "__si",
-            F.pmod(F.xxhash64(F.col(search_id_col)), F.col("__na")).cast("int"),
-        )
-        .withColumn(
-            "__sj",
-            F.explode(F.sequence(F.lit(0), (F.col("__nb") - 1).cast("int"))),
-        )
+        .withColumn("__si", s_cols[0]).withColumn("__sj", s_cols[1])
         .drop("__na", "__nb")
     )
     r = (
         ref.join(F.broadcast(stats), key)
-        .withColumn(
-            "__sj",
-            F.pmod(F.xxhash64(F.col(ref_id_col)), F.col("__nb")).cast("int"),
-        )
-        .withColumn(
-            "__si",
-            F.explode(F.sequence(F.lit(0), (F.col("__na") - 1).cast("int"))),
-        )
+        .withColumn("__sj", r_cols[0]).withColumn("__si", r_cols[1])
         .drop("__na", "__nb")
     )
     return s, r, ["__si", "__sj"]
+
+
+@cached
+def _salt_cols(target_pairs: int, max_splits: int, search_id_col: str,
+               ref_id_col: str) -> tuple:
+    """salt_for_cogroup_adaptive's columns: the per-block split counts
+    (__na, __nb), then each side's (own shard, replicas) pair."""
+    n = F.ceil(F.col("__sc") * F.col("__rc") / F.lit(target_pairs))
+    a = F.ceil(F.sqrt(n * F.col("__sc") / F.col("__rc")))
+    a = F.greatest(F.least(a, F.lit(max_splits), F.col("__sc")), F.lit(1))
+    b = F.greatest(F.least(F.ceil(n / a), F.lit(max_splits), F.col("__rc")), F.lit(1))
+
+    def shard(id_col: str, n_col: str) -> Column:
+        return F.pmod(F.xxhash64(F.col(id_col)), F.col(n_col)).cast("int")
+
+    def replicas(n_col: str) -> Column:
+        return F.explode(F.sequence(F.lit(0), (F.col(n_col) - 1).cast("int")))
+
+    return (a.cast("int"), b.cast("int"),
+            (shard(search_id_col, "__na"), replicas("__nb")),
+            (shard(ref_id_col, "__nb"), replicas("__na")))
 
 
 def pack_groups(
@@ -155,12 +164,18 @@ def pack_groups(
     salting: their salt shards spread over (bucket, si, sj) keys exactly
     as before.
     """
-    gb = F.pmod(F.xxhash64(*keys), F.lit(n_groups)).cast("int")
+    # n_groups follows the data, so only the hash is cached
+    gb = F.pmod(_block_hash(tuple(keys)), F.lit(n_groups)).cast("int")
     return (
         search.withColumn("__gb", gb),
         ref.withColumn("__gb", gb),
         ["__gb", *extra],
     )
+
+
+@cached
+def _block_hash(keys: tuple) -> Column:
+    return F.xxhash64(*keys)
 
 
 def block_slices(left_blocks: pd.Series, right_blocks: pd.Series):

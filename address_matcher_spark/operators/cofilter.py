@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from address_matcher_spark.functions.cache import cached
+
 INCLUDED = "Included in search"
 EXCL_AREA = "Postcode area not found"
 EXCL_LEN0 = "Address length 0"
@@ -53,17 +55,37 @@ def joined_address_length(address_cols) -> Column:
     return F.length(F.regexp_replace(F.concat(*parts), ws, ""))
 
 
+@cached
+def _area_of(pc: str) -> Column:
+    return postcode_area(F.col(pc))
+
+
+@cached
+def _empty_address(address_cols: tuple) -> Column:
+    return joined_address_length(address_cols) == 0
+
+
+@cached
+def _is_included() -> Column:
+    return F.col(EXCLUSION_COL) == INCLUDED
+
+
+@cached
+def _area_evidence(pc: str) -> tuple:
+    return _area_of(pc).alias("area"), F.length("area") > 3
+
+
 def included(labeled: DataFrame) -> DataFrame:
     """The rows a labeling step left in the search, EXCLUSION_COL dropped."""
-    return labeled.filter(F.col(EXCLUSION_COL) == INCLUDED).drop(EXCLUSION_COL)
+    return labeled.filter(_is_included()).drop(EXCLUSION_COL)
 
 
 def _areas(df: DataFrame, pc: str) -> list[str]:
     """The distinct postcode areas of df[pc] longer than 3 characters
     (shorter ones don't count as ref evidence, tools/matcher_funcs.py:574),
     collected to the driver by one aggregate query."""
-    area = postcode_area(F.col(pc)).alias("area")
-    rows = df.select(area).filter(F.length("area") > 3).distinct().collect()
+    area, long_enough = _area_evidence(pc)
+    rows = df.select(area).filter(long_enough).distinct().collect()
     return [r.area for r in rows]
 
 
@@ -80,12 +102,13 @@ def label_area_exclusions(
     zero-length joined addresses are labeled 'Address length 0', which is
     applied AFTER the area label in the reference and therefore takes
     precedence (tools/matcher_funcs.py:578-580)."""
-    found = postcode_area(F.col(search_pc)).isin(_areas(ref, ref_pc))
+    # the area set is data: this isin, and the label over it, are built
+    # on every call
+    found = _area_of(search_pc).isin(_areas(ref, ref_pc))
     label = F.when(found, F.lit(INCLUDED)).otherwise(F.lit(EXCL_AREA))
     if address_cols:
-        label = F.when(
-            joined_address_length(address_cols) == 0, F.lit(EXCL_LEN0)
-        ).otherwise(label)
+        label = F.when(_empty_address(tuple(address_cols)),
+                       F.lit(EXCL_LEN0)).otherwise(label)
     return search.withColumn(EXCLUSION_COL, label)
 
 
@@ -105,7 +128,7 @@ def area_cofilter(
     labeled = label_area_exclusions(search, ref, search_pc, ref_pc, address_cols)
     kept = included(labeled)
     areas = _areas(kept, search_pc)
-    ref_kept = ref.filter(postcode_area(F.col(ref_pc)).isin(areas))
+    ref_kept = ref.filter(_area_of(ref_pc).isin(areas))
     return kept, ref_kept, labeled
 
 

@@ -23,6 +23,7 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from address_matcher_spark.functions.cache import cached
 from address_matcher_spark.operators import blocked, blocking
 
 # tools/constants.py:238-268
@@ -48,31 +49,37 @@ WEIGHTS.update({
 WEIGHT_SUM = sum(WEIGHTS.values())
 
 
-def predict_lpi_fields(search_std: DataFrame) -> DataFrame:
-    """Deterministic regex 'parser': standardisation outputs → predicted
-    LPI fields (lower-cased; the reference side is lower-cased to match)."""
+@cached
+def _predicted_fields() -> dict:
     blank = F.lit("")
-    return (
-        search_std
-        .withColumn("p_Organisation", blank)
-        .withColumn("p_SaoText", blank)
-        .withColumn("p_SaoStartNumber", F.coalesce(F.col("flat_number_search"), blank))
-        .withColumn("p_SaoStartSuffix", blank)
-        .withColumn("p_SaoEndNumber", blank)
-        .withColumn("p_SaoEndSuffix", blank)
-        .withColumn("p_PaoText", blank)
-        .withColumn("p_PaoStartNumber", F.coalesce(F.col("property_number_search"), blank))
-        .withColumn("p_PaoStartSuffix", blank)
-        .withColumn("p_PaoEndNumber", blank)
-        .withColumn("p_PaoEndSuffix", blank)
-        .withColumn("p_Street", F.lower(F.col("street_key")))
-        .withColumn("p_PostTown", blank)
+    return {
+        "p_Organisation": blank,
+        "p_SaoText": blank,
+        "p_SaoStartNumber": F.coalesce(F.col("flat_number_search"), blank),
+        "p_SaoStartSuffix": blank,
+        "p_SaoEndNumber": blank,
+        "p_SaoEndSuffix": blank,
+        "p_PaoText": blank,
+        "p_PaoStartNumber": F.coalesce(F.col("property_number_search"),
+                                       blank),
+        "p_PaoStartSuffix": blank,
+        "p_PaoEndNumber": blank,
+        "p_PaoEndSuffix": blank,
+        "p_Street": F.lower(F.col("street_key")),
+        "p_PostTown": blank,
         # as-written (spaces kept): the reference's recordlinkage pass
         # levenshteins the RAW field strings against the LPI Postcode,
         # which carries its space (tools/recordlinkage_funcs.py:84-96) —
         # despacing one side would tax every score by the space edit
-        .withColumn("p_Postcode", F.lower(F.trim(F.coalesce(F.col("postcode"), F.lit("")))))
-    )
+        "p_Postcode": F.lower(F.trim(F.coalesce(F.col("postcode"), blank))),
+    }
+
+
+def predict_lpi_fields(search_std: DataFrame) -> DataFrame:
+    """Deterministic regex 'parser': standardisation outputs → predicted
+    LPI fields (lower-cased; the reference side is lower-cased to match),
+    applied in one projection."""
+    return search_std.withColumns(_predicted_fields())
 
 
 def field_scorer(block_col: str = "__bk"):
@@ -246,15 +253,15 @@ def field_scorer(block_col: str = "__bk"):
 _USED = [c for c in MATCHING_VARIABLES if WEIGHTS[c] != 0.0]
 
 FIELD = blocked.Scorer(
-    prep_search=predict_lpi_fields,
     search_cols=tuple(f"p_{c}" for c in _USED),
     ref_cols=tuple(REF_COL.get(c, c) for c in _USED),
+    derive_search=_predicted_fields,
     score=lambda cfg: field_scorer(),
     # D8: the street-blocked pass uses the raised 99.5 cutoff
     # (tools/recordlinkage_funcs.py:264-267)
-    verify_limit=lambda cfg, blocker: F.when(
-        blocker == "Street", cfg.score_cut_off_street
-    ).otherwise(cfg.score_cut_off),
+    verify_limit=lambda cfg, blocker: (
+        cfg.score_cut_off_street if blocker == "Street" else cfg.score_cut_off
+    ),
     wratio_tiebreak=False,
 )
 

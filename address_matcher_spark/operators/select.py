@@ -12,18 +12,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from address_matcher_spark.functions.cache import cached
+
+
+def _key(cols) -> tuple:
+    # a cache key of one column name or a list of them
+    return (cols,) if isinstance(cols, str) else tuple(cols)
+
+
+@cached
+def _max_score(group: tuple, score_col: str):
+    mx = F.max(score_col).over(Window.partitionBy(*group))
+    return mx, F.col(score_col) == F.col("__mx")
+
+
+@cached
+def _top_row(group: tuple, tiebreak_col: str):
+    w = Window.partitionBy(*group).orderBy(
+        F.desc("full_match"),
+        F.desc("full_number_match"),
+        F.desc("fuzzy_score"),
+        F.desc_nulls_last("wratio_score"),
+        F.asc(tiebreak_col),
+    )
+    return F.row_number().over(w), F.col("__rn") == 1
+
 
 def keep_max_score(pairs: DataFrame, group_col: str | list[str],
                    score_col: str = "fuzzy_score") -> DataFrame:
     """J6/A1: keep every candidate tying the per-group max score
     (tools/fuzzy_match.py:239-243) — prunes before the expensive verify/
     tie-break stage without a self-join."""
-    w = Window.partitionBy(group_col)
-    return (
-        pairs.withColumn("__mx", F.max(score_col).over(w))
-        .filter(F.col(score_col) == F.col("__mx"))
-        .drop("__mx")
-    )
+    mx, is_max = _max_score(_key(group_col), score_col)
+    return pairs.withColumn("__mx", mx).filter(is_max).drop("__mx")
 
 
 def best_match(shortlist: DataFrame, group_col: str | list[str] = "record_id",
@@ -32,38 +53,31 @@ def best_match(shortlist: DataFrame, group_col: str | list[str] = "record_id",
     (tools/fuzzy_match.py:313-318,384-386): full_match desc,
     full_number_match desc, fuzzy_score desc, wratio_score desc, then a
     deterministic id tie-break."""
-    w = Window.partitionBy(group_col).orderBy(
-        F.desc("full_match"),
-        F.desc("full_number_match"),
-        F.desc("fuzzy_score"),
-        F.desc_nulls_last("wratio_score"),
-        F.asc(tiebreak_col),
-    )
-    return (
-        shortlist.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    rn, first = _top_row(_key(group_col), tiebreak_col)
+    return shortlist.withColumn("__rn", rn).filter(first).drop("__rn")
 
 
 def combine_passes(results: list[DataFrame], key: str = "record_id") -> DataFrame:
     """W2/W3: waterfall combine — union per-pass outputs, keep one row per
     record preferring full_match=true then the earliest pass
     (tools/matcher_funcs.py:1489-1523)."""
+    priority, rn, first = _first_pass(_key(key), len(results))
     tagged = [
-        df.withColumn("pass_priority", F.lit(i)) for i, df in enumerate(results)
+        df.withColumn("pass_priority", p) for p, df in zip(priority, results)
     ]
     allr = tagged[0]
     for df in tagged[1:]:
         allr = allr.unionByName(df, allowMissingColumns=True)
-    w = Window.partitionBy(key).orderBy(
+    return allr.withColumn("__rn", rn).filter(first).drop("__rn")
+
+
+@cached
+def _first_pass(key: tuple, n: int):
+    w = Window.partitionBy(*key).orderBy(
         F.desc("full_match"), F.asc("pass_priority")
     )
-    return (
-        allr.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return (tuple(F.lit(i) for i in range(n)), F.row_number().over(w),
+            F.col("__rn") == 1)
 
 
 def add_wratio_tiebreak(shortlist: DataFrame, ratio_udf,
@@ -79,13 +93,17 @@ def add_wratio_tiebreak(shortlist: DataFrame, ratio_udf,
     record additionally only splits ties between distinct records that
     share identical address text, which cannot change any per-record
     selection.)"""
+    ties, wratio = _wratio(ratio_udf, tuple(key))
+    return (shortlist.withColumn("__ties", ties)
+            .withColumn("wratio_score", wratio).drop("__ties"))
+
+
+@cached
+def _wratio(ratio_udf, key: tuple):
     w = Window.partitionBy(*key, "search_mod_address", "full_number_match",
                            "room_number_search", "fuzzy_score")
-    flagged = shortlist.withColumn("__ties", F.count(F.lit(1)).over(w))
-    return flagged.withColumn(
-        "wratio_score",
-        F.when(
-            F.col("full_number_match") & (F.col("__ties") > 1),
-            ratio_udf(F.col("search_mod_address"), F.col("reference_mod_address")),
-        ),
-    ).drop("__ties")
+    wratio = F.when(
+        F.col("full_number_match") & (F.col("__ties") > 1),
+        ratio_udf(F.col("search_mod_address"), F.col("reference_mod_address")),
+    )
+    return F.count(F.lit(1)).over(w), wratio

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from address_matcher_spark.functions import extract as X
 from address_matcher_spark.functions import standardise as S
+from address_matcher_spark.functions.cache import cached
 from address_matcher_spark.operators import (
     _util, blocked, cofilter, fieldmatch, scoring, select, verify,
 )
@@ -82,15 +83,12 @@ def search_from_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-def prepare_search(df: DataFrame, cfg: MatchConfig) -> DataFrame:
-    """T3/T4 + F2/F5/F6 + T7: clean/join address cols, exclusion flags,
-    blocking key (tools/preparation.py:53-118, tools/standardise.py:19-36).
-
-    The standardisation layer is ~150 regex ops per row; ensure_parallel
-    keeps a small input (one parquet split) off a single core."""
-    df = _util.ensure_parallel(df)
+@cached
+def _search_prep(address_cols: tuple, postcode_col: str):
+    """prepare_search's expressions, one group per projection (each group
+    reads only the columns before it)."""
     cleaned = []
-    for c in cfg.address_cols:
+    for c in address_cols:
         col = F.coalesce(F.col(c).cast("string"), F.lit(""))
         col = F.regexp_replace(col, r"nan", "")
         col = F.regexp_replace(col, r"\s{2,}", " ")
@@ -99,46 +97,58 @@ def prepare_search(df: DataFrame, cfg: MatchConfig) -> DataFrame:
     full_address = F.trim(
         F.regexp_replace(F.concat_ws(" ", *cleaned), r"\s{2,}", " ")
     )
-    out = (
-        df.withColumn("full_address", full_address)
-        .withColumn("postcode", F.coalesce(F.col(cfg.postcode_col).cast("string"), F.lit("")))
-        .filter(F.length(F.trim(F.col("full_address"))) > 0)  # F2
-        .withColumn("excluded", S.exclusion_flag(F.col("full_address")))
-        .withColumn("full_address_search", S.full_address_search(F.col("full_address")))
-        .withColumn(
-            "postcode_search",
-            F.when(
-                F.col("excluded") == "Excluded - non-postal address", F.lit("")
-            ).otherwise(S.postcode_search_key(F.col("postcode"))),
-        )
-        .withColumn(
-            "street_key",
-            F.when(
-                F.col("excluded") == "Excluded - non-postal address", F.lit("")
-            ).otherwise(S.extract_street_name(F.col("full_address_search"))),
-        )
+    non_postal = F.col("excluded") == "Excluded - non-postal address"
+    return (
+        {"full_address": full_address,
+         "postcode": F.coalesce(F.col(postcode_col).cast("string"), F.lit(""))},
+        F.length(F.trim(F.col("full_address"))) > 0,  # F2
+        {"excluded": S.exclusion_flag(F.col("full_address")),
+         "full_address_search": S.full_address_search(F.col("full_address"))},
+        {"postcode_search": F.when(non_postal, F.lit("")).otherwise(
+            S.postcode_search_key(F.col("postcode"))),
+         "street_key": F.when(non_postal, F.lit("")).otherwise(
+            S.extract_street_name(F.col("full_address_search")))},
     )
-    return out
 
 
-def prepare_reference(df: DataFrame) -> DataFrame:
-    """LPI columns → fulladdress (T5/T6) + blocking keys
-    (tools/preparation.py:172-237)."""
+def prepare_search(df: DataFrame, cfg: MatchConfig) -> DataFrame:
+    """T3/T4 + F2/F5/F6 + T7: clean/join address cols, exclusion flags,
+    blocking key (tools/preparation.py:53-118, tools/standardise.py:19-36).
+
+    The standardisation layer is ~150 regex ops per row; ensure_parallel
+    keeps a small input (one parquet split) off a single core."""
+    cleaned, non_empty, flags, keys = _search_prep(
+        tuple(cfg.address_cols), cfg.postcode_col)
     df = _util.ensure_parallel(df)
+    return (df.withColumns(cleaned).filter(non_empty)
+            .withColumns(flags).withColumns(keys))
+
+
+@cached
+def _ref_prep():
+    """prepare_reference's expressions: fulladdress, then the keys."""
     scrubbed = {}
     for c in S._LPI_COLS:
         col = F.coalesce(F.col(c).cast("string"), F.lit(""))
         col = F.regexp_replace(col, r"nan", "")
         col = F.regexp_replace(col, r"\.0", "")
         scrubbed[c] = col
-    full = S.clean_fulladdress(S.create_full_address(scrubbed))
     return (
-        df.filter(F.col("Postcode").isNotNull())
-        .withColumn("fulladdress", full)
-        .withColumn("full_address_search", S.full_address_search(F.col("fulladdress")))
-        .withColumn("postcode_search", S.postcode_search_key(F.col("Postcode")))
-        .withColumn("street_key", F.upper(F.coalesce(F.col("Street"), F.lit(""))))
+        F.col("Postcode").isNotNull(),
+        S.clean_fulladdress(S.create_full_address(scrubbed)),
+        {"full_address_search": S.full_address_search(F.col("fulladdress")),
+         "postcode_search": S.postcode_search_key(F.col("Postcode")),
+         "street_key": F.upper(F.coalesce(F.col("Street"), F.lit("")))},
     )
+
+
+def prepare_reference(df: DataFrame) -> DataFrame:
+    """LPI columns → fulladdress (T5/T6) + blocking keys
+    (tools/preparation.py:172-237)."""
+    has_postcode, full, keys = _ref_prep()
+    df = _util.ensure_parallel(df)
+    return (df.filter(has_postcode).withColumn("fulladdress", full)
+            .withColumns(keys))
 
 
 def prepare_sides(
@@ -177,35 +187,40 @@ def prepare_sides(
     return prepare_search(search_raw, cfg), prepare_reference(ref_raw)
 
 
-def standardise_search(df: DataFrame, standardise_flag: bool) -> DataFrame:
-    out = S.standardise_address_df(
-        df, "full_address_search", "search_mod_address", standardise_flag
-    )
-    for f in verify.FIELDS:
-        out = out.withColumnRenamed(f, f"{f}_search")
-    return out.select(
-        "record_id", "url", "full_address", "postcode", "postcode_search",
-        "street_key", "excluded", "search_mod_address", *SEARCH_FIELDS,
-    )
-
-
-def standardise_reference(df: DataFrame, standardise_flag: bool) -> DataFrame:
-    out = S.standardise_address_df(
-        df, "full_address_search", "reference_mod_address", standardise_flag
-    )
-    for f in verify.FIELDS:
-        out = out.withColumnRenamed(f, f"{f}_reference")
+@cached
+def _side_cols(side: str) -> tuple:
+    """The select list of a standardised side: its fields suffixed with
+    `side` ("search" or "reference")."""
+    fields = [F.col(f).alias(f"{f}_{side}") for f in verify.FIELDS]
+    if side == "search":
+        return (*map(F.col, ("record_id", "url", "full_address", "postcode",
+                             "postcode_search", "street_key", "excluded",
+                             "search_mod_address")), *fields)
     # LPI source columns ride along for the field-wise pass (J5 compares
     # them directly; strings only, cheap relative to the pair fan-out)
     # The original ref postcode is renamed to a CASE-DISTINCT name: search
     # rows carry `postcode`, and under Spark's default caseSensitive=false
     # `Postcode` vs `postcode` on the joined pair frame is AMBIGUOUS_REFERENCE.
     lpi = [c for c in S._LPI_COLS if c != "Postcode"]
-    return out.select(
-        "ref_id", "UPRN", "fulladdress",
-        F.col("Postcode").alias("postcode_ref"), "postcode_search",
-        "street_key", "reference_mod_address", *REF_FIELDS, *lpi,
+    return (*map(F.col, ("ref_id", "UPRN", "fulladdress")),
+            F.col("Postcode").alias("postcode_ref"),
+            *map(F.col, ("postcode_search", "street_key",
+                         "reference_mod_address")),
+            *fields, *map(F.col, lpi))
+
+
+def standardise_search(df: DataFrame, standardise_flag: bool) -> DataFrame:
+    out = S.standardise_address_df(
+        df, "full_address_search", "search_mod_address", standardise_flag
     )
+    return out.select(*_side_cols("search"))
+
+
+def standardise_reference(df: DataFrame, standardise_flag: bool) -> DataFrame:
+    out = S.standardise_address_df(
+        df, "full_address_search", "reference_mod_address", standardise_flag
+    )
+    return out.select(*_side_cols("reference"))
 
 
 # ---------------------------------------------------------------------------
@@ -214,9 +229,9 @@ def standardise_reference(df: DataFrame, standardise_flag: bool) -> DataFrame:
 
 
 FUZZY = blocked.Scorer(
-    prep_search=lambda s: s,
     search_cols=("search_mod_address",),
     ref_cols=("reference_mod_address",),
+    derive_search=dict,
     # P1 token_set_ratio, with the D1 threshold pushed into the kernel:
     # only pairs at or above fuzzy_match_limit come back
     score=lambda cfg: scoring.token_set_scorer(cfg.fuzzy_match_limit),
@@ -248,6 +263,41 @@ RESULT_COLS = [
     *[f"{f}_match" for f in verify.FIELDS],
     *SEARCH_FIELDS, *REF_FIELDS,
 ]
+
+
+@cached
+def _row_count():
+    """The observe() aggregate counting a frame's rows as `rows`."""
+    return F.count(F.lit(1)).alias("rows")
+
+
+@cached
+def _level_tags(levels: tuple) -> tuple:
+    """Per level of the ref prep union: its tag column, its row count
+    (one observe) and the filter selecting its slice."""
+    tag = F.col("__level")
+    return tuple((F.lit(lv), F.count(F.when(tag == lv, 1)).alias(lv),
+                  tag == lv) for lv in levels)
+
+
+@cached
+def _unit_cols(names: tuple) -> tuple:
+    """A unit's RESULT_COLS select list, its per-pass full-match counts
+    (one observe), each pass's row filter and the full-match filter."""
+    full = F.col("full_match")
+    is_pass = tuple(F.col("match_method") == n for n in names)
+    wins = tuple(F.count(F.when(full & p, 1)).alias(n)
+                 for n, p in zip(names, is_pass))
+    return tuple(map(F.col, RESULT_COLS)), wins, is_pass, full
+
+
+def _matched_all(wins: list[int], residue_rows: int) -> bool:
+    """Whether a unit full-matched every record of its residue, from its
+    per-pass full-match counts.  Exact: best_match leaves at most one row
+    per (record, blocker) and every winner is a residue record, so one
+    blocker's count reaching the residue's row count means each residue
+    record has a full match (and no record_id repeats)."""
+    return max(wins) == residue_rows
 
 
 def run_waterfall(
@@ -301,11 +351,19 @@ def run_waterfall(
     the records no earlier pass full-matched, counting them in the same
     job, and that count (`residue_rows`) decides the early exit, picks
     the candidate plan (the small plan at most blocked.SMALL_RESIDUE_ROWS
-    records) and sizes the salted plan.  A run of at most that many
-    records takes the small plan in every unit, so it neither measures
-    the broadcast decision (a full reference scan the small plan never
-    reads) nor materialises the reference preps (each unit reads only
-    its residue's blocks)."""
+    records) and sizes the salted plan.  A unit that full-matches its
+    whole residue (its observed per-pass counts say so exactly) exits
+    before the next residue job.  The two search sides must therefore
+    hold the same records, as standardise_search of one prepared frame
+    does.  A run of at most SMALL_RESIDUE_ROWS records takes the small
+    plan in every unit, so it neither measures the broadcast decision (a
+    full reference scan the small plan never reads) nor materialises the
+    reference preps (each unit reads only its residue's blocks).
+
+    Every fixed expression the call builds (the observe aggregates, the
+    RESULT_COLS select, each pass's filter, and the operators' own) is
+    built once per process (functions/cache.py); a call builds only what
+    depends on its data."""
     cfg = cfg or MatchConfig()
     metrics = {} if metrics is None else metrics
     sc = search_min.sparkSession.sparkContext
@@ -333,8 +391,8 @@ def run_waterfall(
         sc.setJobDescription("waterfall/sides")
         if store is not None or not sides_materialized:
             obs = Observation()
-            search_min = keep(search_min.observe(
-                obs, F.count(F.lit(1)).alias("rows")), "side_search_min")
+            search_min = keep(search_min.observe(obs, _row_count()),
+                              "side_search_min")
             total_records = int(obs.get["rows"])
             search_full = keep(search_full, "side_search_full")
             if not ref_materialized:
@@ -377,20 +435,19 @@ def run_waterfall(
         tp = _t()
         if not ref_materialized and not small_run:
             sc.setJobDescription("waterfall/prep")
-            tag = F.col("__level")
+            tags = dict(zip(LEVELS, _level_tags(LEVELS)))
             obs = Observation()
             both = functools.reduce(DataFrame.unionByName, [
                 blocked.prep_ref(sides[lv][1], blockers)
-                .withColumn("__level", F.lit(lv)) for lv in LEVELS
+                .withColumn("__level", tags[lv][0]) for lv in LEVELS
             ])
-            both = keep(both.observe(obs, *[
-                F.count(F.when(tag == lv, 1)).alias(lv) for lv in LEVELS
-            ]), "ref_prep")
+            both = keep(both.observe(obs, *[c for _, c, _ in tags.values()]),
+                        "ref_prep")
             hist = both.groupBy("__level", "__blocker", "__bk").count()
             hist = hist.localCheckpoint()
-            preps = {lv: (both.filter(tag == lv).drop("__level"),
+            preps = {lv: (both.filter(tags[lv][2]).drop("__level"),
                           int(obs.get[lv]),
-                          hist.filter(tag == lv).drop("__level"))
+                          hist.filter(tags[lv][2]).drop("__level"))
                      for lv in LEVELS}
         metrics["prep_sec"] = round(_t() - tp, 3)
 
@@ -413,6 +470,10 @@ def run_waterfall(
         # units, on the unit's exact residue — the side minus the records
         # earlier units full-matched, materialised and counted in one job.
         # It is a localCheckpoint in store mode too: nothing resumes from it.
+        # A unit whose observe shows every residue record full-matched
+        # (_matched_all) ends the loop before the next residue job: both
+        # levels' search sides hold the same records (two standardisations
+        # of one prepared frame), so that residue would be empty.
         passes: list[DataFrame] = []
         matched_union: DataFrame | None = None
         residue_rows = total_records
@@ -428,7 +489,7 @@ def run_waterfall(
                 obs = Observation()
                 residue = side.join(
                     matched_union, "record_id", "left_anti"
-                ).observe(obs, F.count(F.lit(1)).alias("rows"))
+                ).observe(obs, _row_count())
                 residue = residue.localCheckpoint()
                 residue_rows = int(obs.get["rows"])
                 if residue_rows == 0:
@@ -443,16 +504,13 @@ def run_waterfall(
                 scorer, residue, sides[level][1], blockers, cfg, names,
                 bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
             )
+            result_cols, win_counts, is_pass, full = _unit_cols(names)
             obs = Observation()
-            out = keep(out.select(*RESULT_COLS).observe(obs, *[
-                F.count(F.when(F.col("full_match")
-                               & (F.col("match_method") == n), 1)).alias(n)
-                for n in names
-            ]), f"pass_{sname}_{level}")
+            out = keep(out.select(*result_cols).observe(obs, *win_counts),
+                       f"pass_{sname}_{level}")
             wins = [int(obs.get[n]) for n in names]
-            passes.extend(out.filter(F.col("match_method") == n)
-                          for n in names)
-            winners = out.filter(F.col("full_match")).select("record_id")
+            passes.extend(out.filter(p) for p in is_pass)
+            winners = out.filter(full).select("record_id")
             metrics["passes"].append({
                 "pass": "+".join(names),
                 "residue_rows": int(residue_rows),
@@ -463,6 +521,8 @@ def run_waterfall(
                 ] * len(names),
                 "seconds": round(_t() - tpass, 3),
             })
+            if _matched_all(wins, residue_rows):
+                break  # no record is left for the next unit
             matched_union = winners if matched_union is None else (
                 matched_union.unionByName(winners)
             )

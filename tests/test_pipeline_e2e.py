@@ -191,6 +191,40 @@ def test_waterfall_jobs_carry_unit_phase_tags(spark, sides):
     assert tags == want, tags ^ want
 
 
+def test_full_unit_exits_without_residue_job(spark, sides, waterfall,
+                                             monkeypatch):
+    """A one-record run that unit 1 full-matches ends after unit 1: its
+    observed full-match count already says no record is left, so no
+    `fuzzy_full/residue` job runs.  The rows equal those of a run forced
+    through that residue job (which then finds it empty)."""
+    res, _ = waterfall
+    rid = int(res.loc[res["full_match"]
+                      & (res["match_method"] == "fuzzy_min_pc"),
+                      "record_id"].min())
+    one = [sides[k].filter(F.col("record_id") == rid).localCheckpoint()
+           for k in ("search_min", "search_full")]
+    sc = spark.sparkContext
+
+    def run():
+        before = max(_job_descriptions(sc), default=-1)
+        metrics: dict = {}
+        out = P.run_waterfall(*one, sides["ref_min"], sides["ref_full"],
+                              sides["cfg"], metrics=metrics).toPandas()
+        tags = {d for j, d in _job_descriptions(sc).items() if j > before}
+        for unit in metrics["passes"]:
+            del unit["seconds"]
+        return out, tags, metrics["passes"]
+
+    out, tags, passes = run()
+    monkeypatch.setattr(P, "_matched_all", lambda wins, rows: False)
+    forced, forced_tags, forced_passes = run()
+    assert "fuzzy_full/residue" not in tags, tags
+    assert "fuzzy_full/residue" in forced_tags, forced_tags
+    assert passes == forced_passes and len(passes) == 1
+    assert len(out) == 1 and out["full_match"].all()
+    pd.testing.assert_frame_equal(out, forced)
+
+
 def test_pairwise_f1(results, fixtures, spark):
     """F1 over labeled pairs: prediction for (record, ref) = pipeline
     matched that record to that ref with full_match."""
