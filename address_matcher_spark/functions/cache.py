@@ -12,7 +12,9 @@ and sessions.  ``cached`` memoises a builder of such Columns on its
 positional arguments: column names, flags, thresholds, blocker tuples,
 the scorer.  They must be hashable by value, so a Column (which has no
 value equality) is never a key; expressions that depend on the data —
-an ``isin`` over collected values, an Observation — stay per call.
+an ``isin`` over collected values, an Observation — stay per call, or,
+where the data is a frame the caller keeps (a standing reference),
+``cached_on_frame`` memoises them on that frame object.
 
 The memo is pinned to the py4j gateway its Columns live in: called under
 another gateway, a builder starts from an empty memo, so a Column never
@@ -24,25 +26,56 @@ must not mutate it (builders return tuples, and dicts only for
 from __future__ import annotations
 
 import functools
+import weakref
 
 from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 
-def cached(builder):
-    """Memoise ``builder(*args)`` per JVM gateway (see module doc)."""
-    memo: dict = {}
+def _pinned(memo):
+    """``memo``, emptied whenever the live py4j gateway is not the one
+    its entries were built under."""
     owner: list = [None]
 
-    @functools.wraps(builder)
-    def build(*args):
+    def current():
         gateway = SparkContext._gateway
         if gateway is not owner[0]:
             memo.clear()
             owner[0] = gateway
-        if args not in memo:
-            memo[args] = builder(*args)
-        return memo[args]
+        return memo
+
+    return current
+
+
+def cached(builder):
+    """Memoise ``builder(*args)`` per JVM gateway (see module doc)."""
+    memo = _pinned({})
+
+    @functools.wraps(builder)
+    def build(*args):
+        built = memo()
+        if args not in built:
+            built[args] = builder(*args)
+        return built[args]
+
+    return build
+
+
+def cached_on_frame(builder):
+    """Memoise ``builder(df, *args)`` on the DataFrame object ``df``
+    itself, for values that depend on its rows (a collected set, a
+    Column over it).  The contract: a frame's rows are fixed while it
+    lives.  The memo holds the frame weakly, so an entry goes with its
+    frame, and it is pinned to the gateway like ``cached``'s; a caller
+    that builds a new frame (every batch call does) builds afresh."""
+    memo = _pinned(weakref.WeakKeyDictionary())
+
+    @functools.wraps(builder)
+    def build(df, *args):
+        built = memo().setdefault(df, {})
+        if args not in built:
+            built[args] = builder(df, *args)
+        return built[args]
 
     return build
 

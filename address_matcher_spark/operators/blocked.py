@@ -16,23 +16,28 @@ non-empty key, tagged in the column __blocker, and every step keys on
               (prep_ref) → one of two plans, both calling the scorer's
               own pandas score(left, right) per blocker → per-record max:
     small     residue of at most SMALL_RESIDUE_ROWS records: collect it
-              (bounded), keep the ref rows whose block key it holds
-              (`__bk IN (...)` per blocker — one bucket of a reference
-              bucketed by postcode), score them in ONE mapInPandas task
+              (bounded), collect ONCE the ref rows whose block key it
+              holds (`__bk IN (...)` per blocker — one bucket of a
+              reference bucketed by postcode; small_sides), score them
+              in the driver and hand Spark the candidates and those ref
+              rows as local relations: no Python worker runs
     salted    per-block grid salting (keeps only blocks both sides
               hold) → hash packing → numbered repartition → cogrouped
               Arrow cross-score
   tail        join-back to both sides (small: broadcast sides bounded
               by the residue; salted: the measured broadcast decision)
               → D1-D7 decisions (the row's blocker's rules) → optional
-              wratio tie-break → W1 best
+              wratio tie-break, from the plain ratio the scorer returned
+              with its tied candidates (__ratio) → W1 best
 
 Why 127: _util.scoring_npart gives a residue below 128 rows ONE scoring
 partition already, so the salted plan spends a salting-stats job, two
 shuffles and full reference scans to feed a single task.  Not
 partitioning at all is the faster plan there (SIGMOD'21, "To Partition,
 or Not to Partition"); the residue-size A/B behind the bound is in
-docs/PLANS.md ("One-record pass: the small candidate plan").
+docs/PLANS.md ("One-record pass: the small candidate plan").  The ref
+rows it collects are those the plan used to broadcast, so the driver
+holds nothing the earlier plan did not.
 """
 
 from __future__ import annotations
@@ -43,13 +48,14 @@ from dataclasses import dataclass
 from typing import Callable
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from address_matcher_spark.functions.cache import cached, columns
 from address_matcher_spark.operators import (
-    _util, blocking, scoring, select, verify,
+    _util, blocking, select, verify,
 )
 
 # at most this many residue rows take the small plan (see module doc)
@@ -61,7 +67,9 @@ _CAND_SCHEMA = T.StructType([
     T.StructField("ref_id", T.LongType()),
     T.StructField("fuzzy_score", T.DoubleType()),
     T.StructField("__blocker", T.StringType()),
+    T.StructField("__ratio", T.DoubleType()),
 ])
+_CAND_COLS = _CAND_SCHEMA.fieldNames()
 _KEYS = {"Postcode": "postcode_search", "Street": "street_key"}
 _BLOCK = ["__blocker", "__bk"]  # a block: the blocker and its key value
 _RECORD = ["record_id", "__blocker"]  # one attempt: a record in one blocker
@@ -79,11 +87,15 @@ class Scorer:
     score:        cfg → score(left, right), a pandas function from search
                   rows and ref rows (each carrying the block key as the
                   column __bk) to their (record_id, ref_id, fuzzy_score)
-                  candidates; both candidate plans call it.
+                  candidates, plus __ratio, the plain ratio (P2) of each
+                  candidate tying its record's best score in the call,
+                  where the tail's tie-break reads one; both candidate
+                  plans call it.
     verify_limit: (cfg, blocker) → the D1 score threshold of the blocker
                   named `blocker`, a float.
     wratio_tiebreak: whether tied shortlists get the plain-ratio
-                  tie-break (P2); the field pass carries a null score.
+                  tie-break (P2) from __ratio; the field pass carries a
+                  null score.
     """
 
     search_cols: tuple[str, ...]
@@ -144,24 +156,54 @@ def _per_blocker(score):
     """The scorer over rows of several blockers: each blocker's rows are
     scored apart and their candidates tagged with it, so rows of
     different blockers never cross, even where a postcode key equals a
-    street key.  No rows give a frame without columns, the empty result
-    Spark accepts for any schema."""
+    street key.  The result has the columns of _CAND_SCHEMA, in order: a
+    scorer returning no __ratio (the field scorer) gets a null one."""
     def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         parts = [
             score(rows, right[right["__blocker"] == b]).assign(__blocker=b)
             for b, rows in left.groupby("__blocker", sort=False)
         ]
-        return pd.concat(parts, ignore_index=True) if parts else (
-            pd.DataFrame())
+        if not parts:
+            return pd.DataFrame(columns=_CAND_COLS)
+        return pd.concat(parts, ignore_index=True).reindex(columns=_CAND_COLS)
     return run
 
 
-def _score_all(score, left: pd.DataFrame, batches):
-    """mapInPandas body of the small plan: the whole block-filtered ref
-    (one partition) against the collected residue."""
-    right = list(batches)
-    if right:
-        yield score(left, pd.concat(right, ignore_index=True))
+def _search_side(scorer: Scorer, search_std: DataFrame,
+                 blockers: tuple) -> DataFrame:
+    return _union(search_std.filter(_has_key(_KEYS[b])).select(
+        *_search_branch(b, scorer)) for b in blockers)
+
+
+def small_sides(
+    scorer: Scorer,
+    search_std: DataFrame,
+    ref_prepped: DataFrame,
+    blocker: str | tuple[str, ...],
+) -> tuple[pd.DataFrame, DataFrame] | None:
+    """The small plan's two inputs: the residue's search rows, collected
+    (None when more than SMALL_RESIDUE_ROWS per blocker come back), and
+    the frame the plan collects next, the ref prep (prep_ref) filtered to
+    the block keys those rows hold.  Each blocker's key filter lands on
+    its own union branch and pushes below its dedup into the scan: on a
+    reference bucketed by postcode the Postcode branch reads the
+    residue's buckets only."""
+    blockers = _names(blocker)
+    bound = len(blockers) * SMALL_RESIDUE_ROWS
+    # coalesce(1) first: a bare limit is pushed into every union branch
+    # as a LocalLimit, whose generated code names its counter uniquely,
+    # so the class cache never hit and every request compiled fresh
+    # classes
+    left = _search_side(scorer, search_std, blockers).coalesce(1) \
+        .limit(bound + 1).toPandas()
+    if len(left) > bound:
+        return None
+    rk = ref_prepped.filter(functools.reduce(operator.or_, [
+        _is_blocker(b) & F.col("__bk").isin(
+            sorted(set(left.loc[left["__blocker"] == b, "__bk"])))
+        for b in blockers
+    ]))
+    return left, rk
 
 
 def candidates(
@@ -176,10 +218,10 @@ def candidates(
     ref_hist: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Candidate stage: every search record's max-score ref candidates
-    (ties kept) within its block of each blocker, as (record_id,
-    __blocker, ref_id, fuzzy_score); and the block-filtered ref prep the
-    small plan scored (None when the salted plan ran).  blocker: one
-    name or a tuple of them.
+    (ties kept) within its block of each blocker, as (record_id, ref_id,
+    fuzzy_score, __blocker, __ratio); and the block-filtered ref prep
+    rows the small plan scored, as a local relation (None when the
+    salted plan ran).  blocker: one name or a tuple of them.
 
     residue_rows: the search records left; at most SMALL_RESIDUE_ROWS
     selects the small plan, and it sizes the salted plan.  run_waterfall
@@ -195,33 +237,24 @@ def candidates(
     aggregation once per unit (equivalence in
     blocking.salt_for_cogroup_adaptive)."""
     blockers = _names(blocker)
-    s = _union(search_std.filter(_has_key(_KEYS[b])).select(
-        *_search_branch(b, scorer)) for b in blockers)
     r = prep_ref(ref_std, blockers) if ref_prepped is None else ref_prepped
     score = _per_blocker(scorer.score(cfg))
 
+    small = None
     if residue_rows is not None and residue_rows <= SMALL_RESIDUE_ROWS:
-        bound = len(blockers) * SMALL_RESIDUE_ROWS
-        # coalesce(1) first: a bare limit is pushed into every union
-        # branch as a LocalLimit, whose generated code names its counter
-        # uniquely, so the class cache never hit and every request
-        # compiled fresh classes
-        left = s.coalesce(1).limit(bound + 1).toPandas()
-        if len(left) <= bound:
-            # each blocker's key filter lands on its own union branch and
-            # pushes below its dedup into the scan: on the reference
-            # bucketed by postcode it reads the residue's buckets only
-            rk = r.filter(functools.reduce(operator.or_, [
-                _is_blocker(b) & F.col("__bk").isin(
-                    sorted(set(left.loc[left["__blocker"] == b, "__bk"])))
-                for b in blockers
-            ]))
-            cand = (
-                rk.select(*_ref_branch(scorer.ref_cols)).coalesce(1)
-                .mapInPandas(functools.partial(_score_all, score, left),
-                             _CAND_SCHEMA)
-            )
-            return select.keep_max_score(cand, _RECORD), rk
+        small = small_sides(scorer, search_std, r, blockers)
+    if small is not None:
+        # one read of the ref rows (one dedup, so one survivor per
+        # duplicate), scored here; both local relations stay in the plan
+        left, rk = small
+        spark = search_std.sparkSession
+        ref_tbl = rk.toArrow()
+        right = ref_tbl.select(_ref_names(scorer.ref_cols)).to_pandas()
+        cand = pa.Table.from_pandas(score(left, right), preserve_index=False)
+        # coalesce(1): one partition, so the tail's windows need no exchange
+        cand = spark.createDataFrame(cand, _CAND_SCHEMA).coalesce(1)
+        return (select.keep_max_score(cand, _RECORD),
+                spark.createDataFrame(ref_tbl, rk.schema))
 
     # Scoring is the reference's cdist re-expressed for Spark: cogroup
     # both sides by (block, salt) and cross-score INSIDE an Arrow UDF.
@@ -233,6 +266,7 @@ def candidates(
     # sides to the per-block stats of blocks present on BOTH sides, so
     # ref blocks nobody searches never ship (J3/X3) without a separate
     # semi-join.
+    s = _search_side(scorer, search_std, blockers)
     spark = s.sparkSession
     s_salted, r_salted, extra = blocking.salt_for_cogroup_adaptive(
         s, r.select(*_ref_branch(scorer.ref_cols)),
@@ -278,19 +312,22 @@ def _search_branch(blocker: str, scorer: Scorer) -> tuple:
               for c in scorer.search_cols))
 
 
+def _ref_names(ref_cols: tuple) -> list[str]:
+    return ["ref_id", *_BLOCK, *ref_cols]
+
+
 def _ref_branch(ref_cols: tuple) -> tuple:
-    return columns(("ref_id", *_BLOCK, *ref_cols))
+    return columns(tuple(_ref_names(ref_cols)))
 
 
 @cached
-def _tail(blockers: tuple, names: tuple) -> tuple:
-    """blocked_pass' fixed tail columns: the field pass's null wratio
-    and the match_method naming each row's pass."""
+def _method(blockers: tuple, names: tuple) -> Column:
+    """The match_method naming each row's pass."""
     row_blocker = F.col("__blocker")
     method = F.lit(names[-1])
     for b, name in zip(blockers[:-1], names[:-1]):
         method = F.when(row_blocker == b, name).otherwise(method)
-    return F.lit(None).cast("double"), method
+    return method
 
 
 def blocked_pass(
@@ -346,20 +383,16 @@ def blocked_pass(
             F.broadcast(ref_back) if broadcast_ref else ref_back, "ref_id"
         )
     blockers, names = _names(blocker), _names(pass_name)
-    no_wratio, method = _tail(blockers, names)
     shortlist = verify.add_decisions(
         shortlist, blockers,
         tuple(scorer.verify_limit(cfg, b) for b in blockers),
         cfg.no_number_fuzzy_match_limit,
     )
     if scorer.wratio_tiebreak:
-        shortlist = select.add_wratio_tiebreak(shortlist, scoring.ratio_udf,
-                                               _RECORD)
-        if ref_small is not None:
-            # the Python tie-break reports no output partitioning; restore
-            # the one-partition layout so best_match needs no exchange
-            shortlist = shortlist.coalesce(1)
+        shortlist = select.add_wratio_tiebreak(shortlist, _RECORD)
     else:
-        shortlist = shortlist.withColumn("wratio_score", no_wratio)
+        # the field scorer returns no plain ratio: a null wratio_score
+        shortlist = shortlist.withColumnRenamed("__ratio", "wratio_score")
     best = select.best_match(shortlist, _RECORD)
-    return best.withColumn("match_method", method).drop("__blocker")
+    return (best.withColumn("match_method", _method(blockers, names))
+            .drop("__blocker"))

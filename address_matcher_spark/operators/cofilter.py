@@ -8,7 +8,8 @@ Reference semantics:
 
 Scale notes (100 TB): the postcode-area domain is bounded (about 12k UK
 postcode sectors however big the corpus), so each co-filter direction
-collects its area set once (one aggregate query) and filters the other side
+collects its area set once (one aggregate query; the reference's once per
+reference frame, label_area_exclusions) and filters the other side
 with `isin`: no join, no shuffle of either fact table, and every later
 reader of a filtered side runs only its own scan.  `isin` costs one py4j
 call per area on the driver: 0.02 s for 100 areas, 0.2 s for 1,000 and
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from address_matcher_spark.functions.cache import cached
+from address_matcher_spark.functions.cache import cached, cached_on_frame
 
 INCLUDED = "Included in search"
 EXCL_AREA = "Postcode area not found"
@@ -101,15 +102,27 @@ def label_area_exclusions(
     reference's collected area set.  When address_cols is given,
     zero-length joined addresses are labeled 'Address length 0', which is
     applied AFTER the area label in the reference and therefore takes
-    precedence (tools/matcher_funcs.py:578-580)."""
-    # the area set is data: this isin, and the label over it, are built
-    # on every call
+    precedence (tools/matcher_funcs.py:578-580).
+
+    The reference's area set and the label Column over it are memoised
+    on the `ref` frame object (functions/cache.cached_on_frame), so a
+    frame's rows must stay fixed while it lives: a lookup service that
+    passes the same reference frame with every request collects its
+    areas once, and each later call runs no job."""
+    label = _area_label(ref, search_pc, ref_pc,
+                        None if address_cols is None else tuple(address_cols))
+    return search.withColumn(EXCLUSION_COL, label)
+
+
+@cached_on_frame
+def _area_label(ref: DataFrame, search_pc: str, ref_pc: str,
+                address_cols: tuple | None) -> Column:
     found = _area_of(search_pc).isin(_areas(ref, ref_pc))
     label = F.when(found, F.lit(INCLUDED)).otherwise(F.lit(EXCL_AREA))
     if address_cols:
-        label = F.when(_empty_address(tuple(address_cols)),
+        label = F.when(_empty_address(address_cols),
                        F.lit(EXCL_LEN0)).otherwise(label)
-    return search.withColumn(EXCLUSION_COL, label)
+    return label
 
 
 def area_cofilter(

@@ -1,9 +1,12 @@
-"""Pairwise scoring operators — the only Python in the hot path, as
-Arrow-batched vectorized pandas UDFs (never per-row Python UDFs).
+"""Pairwise scoring operators: the Python kernels of the waterfall, run
+on whole blocks — in cogrouped Arrow pandas UDFs on the salted plan, in
+the driver on the small plan (operators/blocked.py) — never as per-row
+Python UDFs.
 
 Reproduces the reference's scorer surface:
   P1 token_set_ratio with score_cutoff (tools/fuzzy_match.py:88-94)
-  P2 plain ratio tie-breaker (tools/fuzzy_match.py:296-308)
+  P2 plain ratio tie-breaker (tools/fuzzy_match.py:296-308), returned by
+     the P1 scorer with its tied candidates
   P3 Jaro-Winkler per-field similarity (tools/recordlinkage_funcs.py:62-66)
   P4 Levenshtein — built-in Spark SQL ``levenshtein`` (no UDF needed)
   P5 exact compare — plain column equality
@@ -38,7 +41,13 @@ def token_set_scorer(cutoff: float = FUZZY_MATCH_LIMIT,
     rows (ref_id, reference_mod_address, block_col).  It scores the full
     cross product of every block present on both sides
     (tools/fuzzy_match.py:88-94) and returns (record_id, ref_id,
-    fuzzy_score) for the pairs >= cutoff.
+    fuzzy_score, __ratio) for the pairs >= cutoff.
+
+    __ratio is P2's plain ratio (fuzz.ratio, tools/fuzzy_match.py:298)
+    of each pair tying its record's best score in this call, else null.
+    A pair tying the record's global best ties the best of every call
+    that sees it, so the shortlist keep_max_score leaves has every ratio
+    the wratio tie-break (select.add_wratio_tiebreak) reads.
 
     Tokenisation happens once per row and only pairs >= cutoff come back
     — for a 5k x 6k block that is ~30M in-memory comparisons but only
@@ -62,16 +71,16 @@ def token_set_scorer(cutoff: float = FUZZY_MATCH_LIMIT,
         empty = pd.DataFrame(
             {"record_id": pd.Series([], dtype="int64"),
              "ref_id": pd.Series([], dtype="int64"),
-             "fuzzy_score": pd.Series([], dtype="float64")}
+             "fuzzy_score": pd.Series([], dtype="float64"),
+             "__ratio": pd.Series([], dtype="float64")}
         )
         if left.empty or right.empty:
             return empty
-        lids = left["record_id"].to_numpy()
-        rids = right["ref_id"].to_numpy()
-        ltoks = [("" if s is None else s).split()
-                 for s in left["search_mod_address"]]
-        rtoks = [("" if s is None else s).split()
-                 for s in right["reference_mod_address"]]
+        ltexts = left["search_mod_address"].fillna("").to_numpy(dtype=object)
+        rtexts = right["reference_mod_address"].fillna("").to_numpy(
+            dtype=object)
+        ltoks = [s.split() for s in ltexts]
+        rtoks = [s.split() for s in rtexts]
         tk = time.perf_counter() if prof_dir else 0.0
         pairs = 0
         parts = []
@@ -81,12 +90,21 @@ def token_set_scorer(cutoff: float = FUZZY_MATCH_LIMIT,
                 [ltoks[i] for i in li], [rtoks[j] for j in ri], cutoff
             )
             if len(il):
-                parts.append((lids[li][il], rids[ri][jr], sc))
-        out = pd.DataFrame({
-            "record_id": np.concatenate([p[0] for p in parts]),
-            "ref_id": np.concatenate([p[1] for p in parts]),
-            "fuzzy_score": np.concatenate([p[2] for p in parts]),
-        }) if parts else empty
+                parts.append((li[il], ri[jr], sc))
+        out = empty
+        if parts:
+            lpos = np.concatenate([p[0] for p in parts])
+            rpos = np.concatenate([p[1] for p in parts])
+            out = pd.DataFrame({
+                "record_id": left["record_id"].to_numpy()[lpos],
+                "ref_id": right["ref_id"].to_numpy()[rpos],
+                "fuzzy_score": np.concatenate([p[2] for p in parts]),
+            })
+            best = out.groupby("record_id")["fuzzy_score"].transform("max")
+            tied = (out["fuzzy_score"] == best).to_numpy()
+            ratio = np.full(len(out), np.nan)
+            ratio[tied] = K.ratio_batch(ltexts[lpos[tied]], rtexts[rpos[tied]])
+            out["__ratio"] = ratio
         if prof_dir:
             # per-call profile rows, summed per operation by perfbench's
             # traced run (probes.scorer_profile): (start, call wall s,
@@ -103,18 +121,6 @@ def token_set_scorer(cutoff: float = FUZZY_MATCH_LIMIT,
         return out
 
     return score
-
-
-@F.pandas_udf(DoubleType())
-def ratio_udf(left: pd.Series, right: pd.Series) -> pd.Series:
-    """P2: plain Indel ratio (the reference's misnamed 'wratio' tie-break
-    uses fuzz.ratio — tools/fuzzy_match.py:298)."""
-    return pd.Series(
-        K.ratio_batch(
-            left.fillna("").to_numpy(dtype=object),
-            right.fillna("").to_numpy(dtype=object),
-        )
-    )
 
 
 @F.pandas_udf(DoubleType())

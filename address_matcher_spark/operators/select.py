@@ -80,11 +80,14 @@ def _first_pass(key: tuple, n: int):
             F.col("__rn") == 1)
 
 
-def add_wratio_tiebreak(shortlist: DataFrame, ratio_udf,
-                        key=("record_id",)) -> DataFrame:
-    """P2/X6: compute the plain-ratio tie-break ONLY for groups that are
-    actually tied with full_number_match=true (tools/fuzzy_match.py:296-308)
-    — the expensive UDF runs on the tiny tied subset.
+def add_wratio_tiebreak(shortlist: DataFrame, key=("record_id",)) -> DataFrame:
+    """P2/X6: the plain-ratio tie-break, set ONLY for groups that are
+    actually tied with full_number_match=true (tools/fuzzy_match.py:296-308).
+    The ratio itself comes with the candidates: the scorer returns it as
+    __ratio for every candidate tying its record's best score within a
+    scoring call, a superset of the rows kept here (a candidate tying the
+    global best ties the best of any call that saw it), so the tail runs
+    no Python.
 
     The group keys lead with the record key (the keep_max_score/
     best_match partitioning) so this window's required clustering is
@@ -93,17 +96,15 @@ def add_wratio_tiebreak(shortlist: DataFrame, ratio_udf,
     record additionally only splits ties between distinct records that
     share identical address text, which cannot change any per-record
     selection.)"""
-    ties, wratio = _wratio(ratio_udf, tuple(key))
+    ties, wratio = _wratio(tuple(key))
     return (shortlist.withColumn("__ties", ties)
-            .withColumn("wratio_score", wratio).drop("__ties"))
+            .withColumn("wratio_score", wratio).drop("__ties", "__ratio"))
 
 
 @cached
-def _wratio(ratio_udf, key: tuple):
+def _wratio(key: tuple):
     w = Window.partitionBy(*key, "search_mod_address", "full_number_match",
                            "room_number_search", "fuzzy_score")
     wratio = F.when(
-        F.col("full_number_match") & (F.col("__ties") > 1),
-        ratio_udf(F.col("search_mod_address"), F.col("reference_mod_address")),
-    )
+        F.col("full_number_match") & (F.col("__ties") > 1), F.col("__ratio"))
     return F.count(F.lit(1)).over(w), wratio

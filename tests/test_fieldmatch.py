@@ -10,7 +10,8 @@ Both at the default salting and at a forced multi-way split, and through
 the small-residue plan (and its fallback when the residue estimate
 under-counts); for one blocker and for both in one plan, where each
 candidate carries its blocker and the expectation is the union of the
-single-blocker ones."""
+single-blocker ones.  Each fuzzy candidate also carries the plain ratio
+of its pair (__ratio, P2's tie-break input)."""
 
 from __future__ import annotations
 
@@ -112,7 +113,7 @@ SCORERS = {
 
 # case → (salt_target_pairs, residue_rows).  "small" scores a subset of
 # at most blocked.SMALL_RESIDUE_ROWS records with its row count as the
-# residue estimate, so the small (mapInPandas) plan runs; "underestimated"
+# residue estimate, so the small (driver-scored) plan runs; "underestimated"
 # states a residue of 1 for the whole fixture, so the bounded collect
 # finds too many rows and falls back to the salted cogroup.
 CASES = {
@@ -157,11 +158,22 @@ def test_candidates_parity(sides, scorer, blocker, case):
     def key(r, b):
         return (b, r["record_id"], r["ref_id"], r["fuzzy_score"])
 
+    rows = cand.collect()
     got = {key(r, r["__blocker"] if blocker == "both" else blocker)
-           for r in cand.collect()}
+           for r in rows}
     want = {key(r, b) for b in blockers
             for r in expected(smin, rmin, b, cfg).collect()}
     assert got == want and len(got) > 0
+    # P2's input: the fuzzy scorer's plain ratio of every max-tie pair
+    # (the field scorer has none)
+    if scorer == "fuzzy":
+        s_addr = dict(smin.select("record_id", "search_mod_address").collect())
+        r_addr = dict(rmin.select("ref_id", "reference_mod_address").collect())
+        assert all(r["__ratio"] == K.ratio(s_addr[r["record_id"]] or "",
+                                           r_addr[r["ref_id"]] or "")
+                   for r in rows)
+    else:
+        assert all(r["__ratio"] is None for r in rows)
 
 
 def _scorer_rows(id_col, text_col, rows):

@@ -20,6 +20,10 @@ from address_matcher_spark.plans import pipeline as P
 UNIT_BUILD_CALLS = 400
 # a full standardisation build: five stage projections and one select
 STANDARDISE_BUILD_CALLS = 150
+# a lookup's prepare_sides on a reference whose area set is memoised
+# (76 measured on local[4]; rebuilding the area label instead adds one
+# `isin` element per reference area)
+PREPARE_SIDES_CALLS = 100
 
 
 @pytest.fixture
@@ -113,3 +117,26 @@ def test_build_on_new_session_same_rows(spark, raw, prepared):
         assert _rows(there) == _rows(P.standardise_search(prepared[0], flag))
         assert (_rows(P.standardise_reference(r, flag))
                 == _rows(P.standardise_reference(prepared[1], flag)))
+
+
+def test_second_prepare_sides_on_same_ref_runs_no_job(spark, raw, py4j_calls):
+    """A lookup's side preparation (cofilter_ref=False) against the same
+    reference frame again: the reference's area set and its label are
+    memoised on that frame (cofilter.label_area_exclusions), so the call
+    runs no job and only applies them."""
+    search, ref = raw
+    one = search.limit(1)
+    cfg = P.MatchConfig()
+    first, _ = P.prepare_sides(one, ref, cfg, cofilter_ref=False)
+    sc = spark.sparkContext
+    sc.setJobGroup("prepare-sides-again", "prepare-sides-again")
+    try:
+        (second, _), calls = py4j_calls(P.prepare_sides, one, ref, cfg,
+                                        None, False)
+        jobs = sc.statusTracker().getJobIdsForGroup("prepare-sides-again")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert calls <= PREPARE_SIDES_CALLS, calls
+    assert _rows(second) == _rows(first)

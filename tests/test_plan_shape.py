@@ -267,13 +267,19 @@ def test_line_boilerplate_shuffles_hash_keys_not_strings(spark):
         )
 
 
+_PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                 "FlatMapCoGroupsInPandas")
+
+
 def test_small_residue_pass_reads_one_bucket(spark, tiny_sides, tmp_path):
     """A residue of at most blocked.SMALL_RESIDUE_ROWS records takes the
-    small candidate plan: no salting, packing or cogroup — one
-    mapInPandas over the ref rows of the residue's blocks, which on a
-    reference bucketed by postcode is ONE bucket, and a tail whose
-    windows reuse the one-partition shortlist (broadcast join-backs
-    only)."""
+    small candidate plan: no salting, packing, cogroup or Python node —
+    the candidates are scored in the driver and come from a local
+    relation, and the ref rows of the residue's blocks, which the plan
+    collects once (blocked.small_sides), are on a reference bucketed by
+    postcode ONE bucket; a tail whose windows reuse the one-partition
+    shortlist (broadcast join-backs only)."""
+    from address_matcher_spark.operators import blocked
     from address_matcher_spark.sources.bucketing import ensure_bucketed_ref
 
     smin, rmin, cfg = tiny_sides
@@ -283,25 +289,31 @@ def test_small_residue_pass_reads_one_bucket(spark, tiny_sides, tmp_path):
     out = P.fuzzy_pass(one, ref, "Postcode", cfg, "plan_test",
                        residue_rows=1)
     plan = _plan(out)
-    assert "MapInPandas" in plan
-    assert "FlatMapCoGroupsInPandas" not in plan
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
     assert "REPARTITION_BY_NUM" not in plan
-    assert plan.count("MapInPandas") == 1
-    scans = [ln for ln in plan.splitlines()
+    assert "FileScan" not in plan, plan  # both ref reads are local rows
+    logical = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation [record_id#" in logical, logical
+    _, rk = blocked.small_sides(P.FUZZY, one, blocked.prep_ref(ref, "Postcode"),
+                                "Postcode")
+    scans = [ln for ln in _plan(rk).splitlines()
              if "FileScan" in ln and "plan_small_ref_b" in ln]
     assert scans and all("SelectedBucketsCount: 1 out of 4" in ln
-                         for ln in scans), plan
+                         for ln in scans), _plan(rk)
     # the two broadcasts only: the tail's windows reuse the one partition
     assert plan.count("Exchange") <= 2, plan
     assert out.count() == 1
-    # the waterfall unit's plan, both blockers at once: still one
-    # mapInPandas, and each blocker's key filter reaches its own branch,
-    # so the postcode-keyed scan still reads one bucket
-    plan = _plan(P.fuzzy_pass(one, ref, ("Postcode", "Street"), cfg,
-                              ("plan_pc", "plan_st"), residue_rows=1))
-    assert plan.count("MapInPandas") == 1
-    assert "FlatMapCoGroupsInPandas" not in plan
-    pc_scans = [ln for ln in plan.splitlines() if "FileScan" in ln
+    # the waterfall unit's plan, both blockers at once: still no Python
+    # node, and each blocker's key filter reaches its own branch, so the
+    # postcode-keyed scan of the collected frame still reads one bucket
+    both = ("Postcode", "Street")
+    plan = _plan(P.fuzzy_pass(one, ref, both, cfg, ("plan_pc", "plan_st"),
+                              residue_rows=1))
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
+    assert plan.count("Exchange") <= 2, plan
+    _, rk = blocked.small_sides(P.FUZZY, one, blocked.prep_ref(ref, both),
+                                both)
+    pc_scans = [ln for ln in _plan(rk).splitlines() if "FileScan" in ln
                 and "postcode_search" in ln.partition("PushedFilters")[2]]
     assert pc_scans and all("SelectedBucketsCount: 1 out of 4" in ln
-                            for ln in pc_scans), plan
+                            for ln in pc_scans), _plan(rk)
