@@ -45,9 +45,11 @@ def match_addresses(
 
     prior_results: a previous run's `results` — full matches are excluded
     from this run (F4) and their columns survive in results_on_orig (J10).
-    store: commit each waterfall stage (standardised sides, both levels'
-    ref preps as one commit, one checkpoint per unit) to it as parquet
-    with lineage metadata; nothing resumes from those commits."""
+    store: commit each waterfall stage (the two standardised search
+    sides, both levels' block-keyed ref preps as one commit — the
+    standardised reference is not committed on its own — and one
+    checkpoint per unit) to it as parquet with lineage metadata; nothing
+    resumes from those commits."""
     cfg = cfg or P.MatchConfig()
     if "url" not in search_df.columns:
         # the pipeline carries a url provenance column (graft input shape);

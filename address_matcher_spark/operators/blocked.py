@@ -24,11 +24,13 @@ non-empty key, tagged in the column __blocker, and every step keys on
     salted    per-block grid salting (keeps only blocks both sides
               hold) → hash packing → numbered repartition → cogrouped
               Arrow cross-score
-  tail        join-back to both sides (small: broadcast sides bounded
-              by the residue; salted: the measured broadcast decision)
-              → D1-D7 decisions (the row's blocker's rules) → optional
-              wratio tie-break, from the plain ratio the scorer returned
-              with its tied candidates (__ratio) → W1 best
+  tail        join-back to the search side and to the ref rows the
+              scorer read, on (ref_id, __blocker) (small: the collected
+              rows, both sides broadcast; salted: the prep, broadcast
+              by the measured decision) → D1-D7 decisions (the row's
+              blocker's rules) → optional wratio tie-break, from the
+              plain ratio the scorer returned with its tied candidates
+              (__ratio) → W1 best
 
 Why 127: _util.scoring_npart gives a residue below 128 rows ONE scoring
 partition already, so the salted plan spends a salting-stats job, two
@@ -49,7 +51,7 @@ from typing import Callable
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,11 +111,27 @@ class Scorer:
 def prep_ref_for_block(ref_std: DataFrame, blocker: str) -> DataFrame:
     """Block-keyed reference variant: filter empty keys, rename the block
     key to __bk, drop the other key, dedup identical standardised rows
-    (X7 — join-key fan-out guard).  prep_ref unions them."""
+    (X7 — join-key fan-out guard), keeping the least ref_id of each
+    (__bk, reference_mod_address) group: every read of a lazy prep keeps
+    the same rows.  prep_ref unions them."""
     key = _KEYS[blocker]
     r = ref_std.filter(_has_key(key)).withColumnRenamed(key, "__bk")
     r = r.drop(*(set(_KEYS.values()) - {key}))
-    return r.dropDuplicates(["__bk", "reference_mod_address"])
+    return _least_ref_id(r, ("__bk", "reference_mod_address"))
+
+
+def _least_ref_id(r: DataFrame, group: tuple) -> DataFrame:
+    """The survivor rule: the row of least ref_id of each group."""
+    rank, first = _rank_by_ref_id(group)
+    return r.withColumn("__rank", rank).filter(first).drop("__rank")
+
+
+@cached
+def _rank_by_ref_id(group: tuple) -> tuple:
+    # Spark plans rank 1 as a per-group limit, which runs before the
+    # shuffle as dropDuplicates' partial aggregate did
+    by_ref_id = Window.partitionBy(*group).orderBy("ref_id")
+    return F.row_number().over(by_ref_id), F.col("__rank") == 1
 
 
 @cached
@@ -150,6 +168,28 @@ def prep_ref(ref_std: DataFrame, blocker) -> DataFrame:
         prep_ref_for_block(ref_std, b).withColumn("__blocker", _tag(b))
         for b in _names(blocker)
     )
+
+
+def prep_ref_once(ref_std: DataFrame, blockers: tuple) -> DataFrame:
+    """prep_ref's rows from ONE read of ref_std: each row is emitted once
+    per blocker whose key it holds (an explode), then deduplicated within
+    its blocker.  run_waterfall materialises it: over a lazy ref side,
+    prep_ref's union would standardise each row once per blocker.  A
+    lazy prep keeps the union, whose per-branch key filter reaches the
+    scan."""
+    keep = tuple(c for c in ref_std.columns if c not in _KEYS.values())
+    keyed = ref_std.select(*columns(keep), _blocker_keys(blockers))
+    keyed = keyed.select(*columns((*keep, "__k.__blocker", "__k.__bk")))
+    return _least_ref_id(keyed.filter(_has_key("__bk")),
+                         ("__blocker", "__bk", "reference_mod_address"))
+
+
+@cached
+def _blocker_keys(blockers: tuple) -> Column:
+    """One (__blocker, __bk) struct per blocker, exploded as __k."""
+    return F.explode(F.array(*[
+        F.struct(F.lit(b).alias("__blocker"), F.col(_KEYS[b]).alias("__bk"))
+        for b in blockers])).alias("__k")
 
 
 def _per_blocker(score):
@@ -216,12 +256,14 @@ def candidates(
     ref_prepped: DataFrame | None = None,
     ref_rows: int | None = None,
     ref_hist: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame, bool]:
     """Candidate stage: every search record's max-score ref candidates
     (ties kept) within its block of each blocker, as (record_id, ref_id,
-    fuzzy_score, __blocker, __ratio); and the block-filtered ref prep
-    rows the small plan scored, as a local relation (None when the
-    salted plan ran).  blocker: one name or a tuple of them.
+    fuzzy_score, __blocker, __ratio); the ref prep rows the scorer read,
+    which the tail joins the candidates back to on (ref_id, __blocker);
+    and whether the small plan ran.  The small plan's ref rows are the
+    block-filtered prep it collected, as a local relation; the salted
+    plan's are the prep itself.  blocker: one name or a tuple of them.
 
     residue_rows: the search records left; at most SMALL_RESIDUE_ROWS
     selects the small plan, and it sizes the salted plan.  run_waterfall
@@ -254,7 +296,7 @@ def candidates(
         # coalesce(1): one partition, so the tail's windows need no exchange
         cand = spark.createDataFrame(cand, _CAND_SCHEMA).coalesce(1)
         return (select.keep_max_score(cand, _RECORD),
-                spark.createDataFrame(ref_tbl, rk.schema))
+                spark.createDataFrame(ref_tbl, rk.schema), True)
 
     # Scoring is the reference's cdist re-expressed for Spark: cogroup
     # both sides by (block, salt) and cross-score INSIDE an Arrow UDF.
@@ -298,7 +340,7 @@ def candidates(
         s_salted.groupBy(*keys).cogroup(r_salted.groupBy(*keys))
         .applyInPandas(score, _CAND_SCHEMA)
     )
-    return select.keep_max_score(cand, _RECORD), None
+    return select.keep_max_score(cand, _RECORD), r, False
 
 
 @cached
@@ -351,37 +393,31 @@ def blocked_pass(
     tools/recordlinkage_funcs.py:219-221).  blocker / pass_name: one
     name each, or a tuple of blockers and the tuple of their pass names.
 
+    One join-back for both candidate plans, to the ref rows the scorer
+    read, on (ref_id, __blocker).  The small plan's sides are bounded by
+    its residue, so both broadcast and the one-partition shortlist keeps
+    its partitioning: the windows below need no exchange.
+
     broadcast_ref: the salted plan's ref join-back decision.
-    run_waterfall threads its once-measured decision in; a DIRECT caller
-    falls back to a fresh byte measurement — never an unconditional
-    broadcast (a multi-GB ref side would OOM the executors).  The small
-    plan never reads it."""
-    shortlist, ref_small = candidates(
+    run_waterfall passes the one its ref prep job measured; a DIRECT
+    caller passing None gets a fresh byte measurement of the prep
+    (should_broadcast), never an unconditional broadcast (a multi-GB ref
+    side would OOM the executors).  The small plan never reads it."""
+    shortlist, ref_read, small = candidates(
         scorer, search_std, ref_std, blocker, cfg, residue_rows,
         ref_prepped, ref_rows, ref_hist,
     )
-    # join the (now tiny) shortlist back to both sides for verification
     search_back = search_std.drop(*_KEYS.values())
-    if ref_small is not None:
-        # small plan: both sides are bounded by the residue (its rows, the
-        # ref rows of its blocks), so both broadcast and the one-partition
-        # shortlist keeps its partitioning — the windows below need no
-        # exchange.  The ref prep minus its key holds ref_std's columns,
-        # a row per blocker, so it joins back on both.
-        shortlist = shortlist.join(F.broadcast(search_back), "record_id")
-        shortlist = shortlist.join(F.broadcast(ref_small.drop("__bk")),
-                                   ["ref_id", "__blocker"])
-    else:
-        # the ref side is dimension-like → broadcast when it fits (else a
-        # shuffled equi-join on ref_id)
-        if broadcast_ref is None:
-            broadcast_ref = _util.should_broadcast(
-                ref_std, cfg.broadcast_max_bytes)
-        ref_back = ref_std.drop(*_KEYS.values())
-        shortlist = shortlist.join(search_back, "record_id")
-        shortlist = shortlist.join(
-            F.broadcast(ref_back) if broadcast_ref else ref_back, "ref_id"
-        )
+    # the prep minus its key holds ref_std's columns, a row per blocker
+    ref_back = ref_read.drop("__bk")
+    if not small and broadcast_ref is None:
+        broadcast_ref = _util.should_broadcast(
+            ref_back, cfg.broadcast_max_bytes)
+    shortlist = shortlist.join(
+        F.broadcast(search_back) if small else search_back, "record_id")
+    shortlist = shortlist.join(
+        F.broadcast(ref_back) if small or broadcast_ref else ref_back,
+        ["ref_id", "__blocker"])
     blockers, names = _names(blocker), _names(pass_name)
     shortlist = verify.add_decisions(
         shortlist, blockers,

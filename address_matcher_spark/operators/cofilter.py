@@ -153,26 +153,18 @@ def exclude_previously_matched(
 ) -> tuple[DataFrame, DataFrame]:
     """F4/J11 (tools/matcher_funcs.py:527-556): drop search rows whose key
     appears as a full match in a prior results table.  Returns
-    (todo, labeled) where labeled carries EXCLUSION_COL = 'Previously
-    matched' / 'Included in search' for bookkeeping parity with the
-    reference's pre_filter_search_df."""
-    matched = (
-        prior_results.filter(F.col(match_col))
-        .select(F.col(key))
-        .distinct()
-        .withColumn("__prior", F.lit(True))
-    )
-    labeled = (
-        search.join(matched, key, "left")
-        .withColumn(
-            EXCLUSION_COL,
-            F.when(F.col("__prior").isNotNull(), F.lit(EXCL_PRIOR)).otherwise(
-                F.lit(INCLUDED)
-            ),
-        )
-        .drop("__prior")
-    )
-    return included(labeled), labeled
+    (todo, labeled): todo is one left_anti join on the prior full-match
+    keys (a key repeated in the prior table needs no distinct(): an anti
+    or semi join never fans out); labeled carries EXCLUSION_COL =
+    'Previously matched' / 'Included in search' for bookkeeping parity
+    with the reference's pre_filter_search_df, as todo plus the semi-join
+    of the excluded rows."""
+    matched = prior_results.filter(F.col(match_col)).select(key)
+    todo = search.join(matched, key, "left_anti")
+    labeled = todo.withColumn(EXCLUSION_COL, F.lit(INCLUDED)).unionByName(
+        search.join(matched, key, "left_semi")
+        .withColumn(EXCLUSION_COL, F.lit(EXCL_PRIOR)))
+    return todo, labeled
 
 
 def join_prior_results(

@@ -44,9 +44,6 @@ class MatchConfig:
     no_number_fuzzy_match_limit: float = 100.0  # tools/constants.py:235
     score_cut_off: float = 98.7             # tools/constants.py:231
     score_cut_off_street: float = 99.5      # tools/constants.py:233
-    salt_target_pairs: int | None = None    # cogroup cross-score salting;
-                                            # None → the measured default
-                                            # (see salt_target_pairs_for)
     broadcast_max_bytes: int = 256 * 1024 * 1024  # explicit-broadcast ceiling
     run_field_passes: bool = True
     address_cols: tuple = ("address_line1", "address_line2", "town")
@@ -272,11 +269,14 @@ def _row_count():
 
 
 @cached
-def _level_tags(levels: tuple) -> tuple:
-    """Per level of the ref prep union: its tag column, its row count
-    (one observe) and the filter selecting its slice."""
+def _level_tags(levels: tuple, back_cols: tuple) -> tuple:
+    """Per level of the ref prep union: its observe() aggregates (its
+    row count, and the summed row_bytes of the rows a salted unit joins
+    back to, over back_cols) and the filter selecting its slice."""
     tag = F.col("__level")
-    return tuple((F.lit(lv), F.count(F.when(tag == lv, 1)).alias(lv),
+    size = _util.row_bytes(back_cols)
+    return tuple(((F.count(F.when(tag == lv, 1)).alias(lv),
+                   F.sum(F.when(tag == lv, size)).alias(f"{lv}_bytes")),
                   tag == lv) for lv in levels)
 
 
@@ -314,16 +314,24 @@ def run_waterfall(
     """O3/O4/O5: the full waterfall.  Returns one row per matched-or-
     attempted search record (best candidate + decisions + method).
 
+    The reference is read only through its block-keyed prep: one job
+    standardises both ref sides, preps both levels and materialises them
+    as one frame (store key `ref_prep`), and its observe() measures the
+    salted plan's broadcast decision against cfg.broadcast_max_bytes.
+
     ref_materialized=True: the ref sides are already durable — e.g.
     BUCKETED tables (sources/bucketing.ensure_bucketed_ref), whose scan
     carries a HashPartitioning that a store.write/localCheckpoint would
     destroy (every per-pass ref dedup/histogram would shuffle again).
+    Their preps stay lazy, with no measured size: a salted unit's
+    join-back carries no broadcast hint, and Spark picks the join.
 
     metrics: pass a dict to collect per-stage run counters — wall seconds,
     residue rows, matched counts (per unit and per pass) and the
-    candidate plan per pass (`small_path`), the broadcast decision (None
-    when not measured), the seconds of the ref prep job (`prep_sec`) and
-    the classes Janino compiled during the call (`codegen_compiles`).
+    candidate plan per pass (`small_path`), the broadcast decision
+    (`broadcast_ref`, None when no prep job measured it), the seconds of
+    the ref prep job (`prep_sec`) and the classes Janino compiled during
+    the call (`codegen_compiles`).
     They are kept in process only, for ops dashboards and for profiling
     where waterfall time goes; a store.write records none of them.
     `codegen_compiles` reads Spark's JVM-wide compile counter, so it also
@@ -337,9 +345,9 @@ def run_waterfall(
     first unit (store key `ref_prep`).
 
     Job tags: every job the call runs carries the Spark job description
-    (`spark.job.description`) `<unit>/<phase>`: `waterfall/sides`,
-    `waterfall/broadcast` and `waterfall/prep`, then per unit
-    `<scorer>_<level>/residue` and `<scorer>_<level>/score` (the
+    (`spark.job.description`) `<unit>/<phase>`: `waterfall/sides` and
+    `waterfall/prep`, then per unit `<scorer>_<level>/residue` and
+    `<scorer>_<level>/score` (the
     blocked_pass build and its checkpoint).  An event log read by
     scripts/stage_report.py turns them into a per-phase stage table.
     run_waterfall starts no thread, so every job it runs inherits the
@@ -356,9 +364,11 @@ def run_waterfall(
     before the next residue job.  The two search sides must therefore
     hold the same records, as standardise_search of one prepared frame
     does.  A run of at most SMALL_RESIDUE_ROWS records takes the small
-    plan in every unit, so it neither measures the broadcast decision (a
-    full reference scan the small plan never reads) nor materialises the
-    reference preps (each unit reads only its residue's blocks).
+    plan in every unit.  It still materialises the prep when the
+    reference is not materialised: a lazy prep over the standardisation
+    cascade is planned and run again by every unit (a 48-record batch
+    call: 7.1–9.0 s of waterfall against 5.5–7.6 s with the prep
+    materialised, docs/PLANS.md).
 
     Every fixed expression the call builds (the observe aggregates, the
     RESULT_COLS select, each pass's filter, and the operators' own) is
@@ -380,14 +390,15 @@ def run_waterfall(
             return (store.write(df, key) if store is not None
                     else df.localCheckpoint())
 
-        # The four standing datasets are reused by every pass
-        # (tools/matcher_funcs.py:752-772).  Materialise them AND cut their
-        # lineage: the standardisation layer is hundreds of expressions, and
-        # without truncation every pass re-analyzes that whole tree on the
-        # driver (~seconds per pass of pure planning).  Callers that already
-        # checkpointed/cached the sides pass sides_materialized=True to skip
-        # the redundant second scan+write (a store still commits them).
-        # The record count rides the search_min checkpoint (observe()).
+        # The search sides are reused by every unit.  Materialise them AND
+        # cut their lineage: the standardisation layer is hundreds of
+        # expressions, and without truncation every unit re-analyzes that
+        # whole tree on the driver (~seconds per unit of pure planning).
+        # Callers that already checkpointed/cached the sides pass
+        # sides_materialized=True to skip the redundant second scan+write
+        # (a store still commits them).  The record count rides the
+        # search_min checkpoint (observe()).  The ref sides are read only
+        # through their prep, below.
         sc.setJobDescription("waterfall/sides")
         if store is not None or not sides_materialized:
             obs = Observation()
@@ -395,61 +406,53 @@ def run_waterfall(
                               "side_search_min")
             total_records = int(obs.get["rows"])
             search_full = keep(search_full, "side_search_full")
-            if not ref_materialized:
-                ref_min = keep(ref_min, "side_ref_min")
-                ref_full = keep(ref_full, "side_ref_full")
         else:
             total_records = search_min.count()
         metrics["sides_sec"] = round(_t() - _t0, 3)
         sides = {"min": (search_min, ref_min), "full": (search_full, ref_full)}
-        small_run = total_records <= blocked.SMALL_RESIDUE_ROWS
-        # broadcast decision measured once in BYTES, not row count (X11): the
-        # ref side is dimension-like; broadcast only while the serialized table
-        # fits an executor comfortably.  Only the salted plan reads it.
-        bc_ref, measure_sec = None, 0
-        if not small_run:
-            sc.setJobDescription("waterfall/broadcast")
-            _t1 = _t()
-            bc_ref = should_broadcast(ref_min, cfg.broadcast_max_bytes)
-            measure_sec = round(_t() - _t1, 3)
-        metrics["broadcast_measure_sec"] = measure_sec
-        metrics["broadcast_ref"] = bc_ref
         metrics["passes"] = []
-        # One ref prep per level (blocked.prep_ref), shared by both scorers'
-        # units.  Both levels' preps are ONE job: tagged with their __level,
-        # unioned (Spark runs the two branches in parallel), counted per
-        # level by observe() — the count sizes the pack-bucket memory guard
-        # from the REF side too (_util.pack_group_count) — and materialised
-        # once (store key `ref_prep`), plus one (__level, __blocker, __bk)
-        # histogram every unit's salting stats reuse.  The prep is read by
-        # its histogram and by every unit of its level, and Catalyst
-        # recomputes shared subtrees; a local checkpoint beat .cache() for a
-        # frame read ~3× (docs/PLANS.md, round 6).  Not materialised when the
-        # ref is already a durable bucketed table (persisting would destroy
-        # the bucketed scan's exchange-free HashPartitioning) or the run is
-        # small (every unit then filters the lazy prep to its residue's
-        # blocks, and the filter reaches the ref scan): a lazy prep runs no
-        # job and is built when a unit of its level first needs it.
+        # One ref prep per level, shared by both scorers' units: the
+        # reference's standing datasets, prepared once
+        # (tools/matcher_funcs.py:752-772).  ONE job standardises the
+        # reference (each row once per level, blocked.prep_ref_once), tags
+        # each level's prep with its __level and materialises the union
+        # (store key `ref_prep`), plus one (__level, __blocker, __bk)
+        # histogram every unit's salting stats reuse.  Its observe()
+        # counts each level's rows (pack_group_count's ref-side memory
+        # guard) and sums the bytes of the rows a salted unit joins back
+        # to: the broadcast decision (X11, bytes not rows), at no extra
+        # job.  A local checkpoint beat .cache() for a frame read ~3×
+        # (docs/PLANS.md, round 6).  A bucketed ref keeps a lazy prep
+        # (persisting would destroy its scan's exchange-free
+        # HashPartitioning; a small unit's block filter reaches the
+        # scan): no job, and no measured size, so a salted join-back over
+        # it gets no broadcast hint and Spark picks the join.
         blockers = tuple(b for _, b in BLOCKERS)
         preps: dict = {}
+        bc_ref = None
         tp = _t()
-        if not ref_materialized and not small_run:
+        if not ref_materialized:
             sc.setJobDescription("waterfall/prep")
-            tags = dict(zip(LEVELS, _level_tags(LEVELS)))
-            obs = Observation()
             both = functools.reduce(DataFrame.unionByName, [
-                blocked.prep_ref(sides[lv][1], blockers)
-                .withColumn("__level", tags[lv][0]) for lv in LEVELS
+                blocked.prep_ref_once(sides[lv][1], blockers)
+                .withColumn("__level", F.lit(lv)) for lv in LEVELS
             ])
-            both = keep(both.observe(obs, *[c for _, c, _ in tags.values()]),
-                        "ref_prep")
+            back = tuple(c for c in both.columns
+                         if c not in ("__bk", "__level"))
+            tags = dict(zip(LEVELS, _level_tags(LEVELS, back)))
+            obs = Observation()
+            both = keep(both.observe(obs, *[c for cs, _ in tags.values()
+                                            for c in cs]), "ref_prep")
+            bc_ref = max(int(obs.get[f"{lv}_bytes"] or 0)
+                         for lv in LEVELS) <= cfg.broadcast_max_bytes
             hist = both.groupBy("__level", "__blocker", "__bk").count()
             hist = hist.localCheckpoint()
-            preps = {lv: (both.filter(tags[lv][2]).drop("__level"),
+            preps = {lv: (both.filter(tags[lv][1]).drop("__level"),
                           int(obs.get[lv]),
-                          hist.filter(tags[lv][2]).drop("__level"))
+                          hist.filter(tags[lv][1]).drop("__level"))
                      for lv in LEVELS}
         metrics["prep_sec"] = round(_t() - tp, 3)
+        metrics["broadcast_ref"] = bc_ref
 
         scorers = SCORERS if cfg.run_field_passes else SCORERS[:1]
         units = [(sname, scorer, level)
@@ -502,7 +505,7 @@ def run_waterfall(
             sc.setJobDescription(f"{sname}_{level}/score")
             out = blocked.blocked_pass(
                 scorer, residue, sides[level][1], blockers, cfg, names,
-                bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
+                bool(bc_ref), residue_rows, ref_prepped, ref_rows, ref_hist,
             )
             result_cols, win_counts, is_pass, full = _unit_cols(names)
             obs = Observation()

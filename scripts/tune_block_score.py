@@ -4,7 +4,7 @@ The cross-score kernel's per-pair cost dropped ~10x (round-5 exact
 matrix char bound), which shifts the optimum for BOTH stage knobs that
 were measured against the old kernel:
 
-  * salt_target_pairs — pairs per cogroup salt group (was adaptive
+  * blocking.SALT_TARGET_PAIRS — pairs per cogroup salt group (was adaptive
     2M/dp clamped [32k, 250k], sized to the old kernel's DRAM
     footprint);
   * the scoring-stage over-decomposition multiplier in
@@ -40,7 +40,7 @@ def main() -> None:
         combos = [(62_500, 32), (250_000, 8), (250_000, 2), (1_000_000, 1)]
 
     import bench as B
-    from address_matcher_spark.operators import _util
+    from address_matcher_spark.operators import _util, blocking
     from address_matcher_spark.plans import pipeline as P
     from address_matcher_spark.session import get_spark
 
@@ -57,7 +57,7 @@ def main() -> None:
     orig_npart = _util.scoring_npart
 
     def leg(salt_target, mult) -> float:
-        cfg.salt_target_pairs = salt_target
+        blocking.SALT_TARGET_PAIRS = salt_target
 
         def npart(spark_, residue_rows=None):
             dp = spark_.sparkContext.defaultParallelism

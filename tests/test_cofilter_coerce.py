@@ -163,6 +163,44 @@ def test_side_checkpoint_runs_two_jobs(spark, parquet_sides):
     assert all(1 <= n <= 2 for n in jobs.values()), jobs
 
 
+def _checkpoint_jobs(sc, df, group: str) -> int:
+    """The number of jobs a localCheckpoint of df runs."""
+    try:
+        sc.setJobGroup(group, group)
+        df.localCheckpoint()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_prior_exclusion_is_one_anti_join(spark, parquet_sides, tmp_path):
+    """F4 with a prior results table (one id twice, one non-full match):
+    the kept search rows are one left_anti join on the prior full-match
+    ids, with no aggregate in the plan, so a standardised side's
+    checkpoint runs at most one job more than without prior results
+    (the ids' side of the join), and keeps the same rows."""
+    sc = spark.sparkContext
+    spark.createDataFrame(
+        [dict(record_id=1, full_match=True), dict(record_id=1, full_match=True),
+         dict(record_id=2, full_match=False)]
+    ).write.parquet(str(tmp_path / "prior"))
+    prior = spark.read.parquet(str(tmp_path / "prior"))
+    cfg = P.MatchConfig()
+    search, _ = P.prepare_sides(*parquet_sides, cfg, prior_results=prior)
+    nodes = _plan_nodes(search)
+    assert not [n for n in nodes if n.startswith("Aggregate")], nodes
+    assert [n for n in nodes if n.startswith("Join")] == ["Join"], nodes
+    base, _ = P.prepare_sides(*parquet_sides, cfg)
+    jobs = [_checkpoint_jobs(sc, P.standardise_search(side, False), group)
+            for side, group in ((base, "no-prior"), (search, "prior"))]
+    assert jobs[1] <= jobs[0] + 1, jobs
+    assert {r["record_id"] for r in search.collect()} == {2, 4}
+    _, labeled = C.exclude_previously_matched(base, prior)
+    assert sorted(labeled.select("record_id", C.EXCLUSION_COL).collect()) == [
+        (1, C.EXCL_PRIOR), (2, C.INCLUDED), (4, C.INCLUDED)]
+
+
 def test_area_cofilter_empty_ref_blank_postcodes(spark):
     """Adversarial: an empty reference and search rows whose postcodes are
     null, empty or blank.  No area is found, so every row is labeled

@@ -22,7 +22,7 @@ from pyspark.sql.types import DoubleType
 
 from address_matcher_spark import datagen
 from address_matcher_spark import kernels as K
-from address_matcher_spark.operators import blocked, scoring, select
+from address_matcher_spark.operators import blocked, blocking, scoring, select
 from address_matcher_spark.operators import fieldmatch as FM
 from address_matcher_spark.plans import pipeline as P
 
@@ -111,11 +111,12 @@ SCORERS = {
 }
 
 
-# case → (salt_target_pairs, residue_rows).  "small" scores a subset of
-# at most blocked.SMALL_RESIDUE_ROWS records with its row count as the
-# residue estimate, so the small (driver-scored) plan runs; "underestimated"
-# states a residue of 1 for the whole fixture, so the bounded collect
-# finds too many rows and falls back to the salted cogroup.
+# case → (blocking.SALT_TARGET_PAIRS, residue_rows); None keeps the
+# default.  "small" scores a subset of at most blocked.SMALL_RESIDUE_ROWS
+# records with its row count as the residue estimate, so the small
+# (driver-scored) plan runs; "underestimated" states a residue of 1 for
+# the whole fixture, so the bounded collect finds too many rows and
+# falls back to the salted cogroup.
 CASES = {
     "default": (None, None),
     "salted": (50, None),
@@ -136,8 +137,8 @@ BLOCKERS = {
 @pytest.mark.parametrize("case", list(CASES))
 @pytest.mark.parametrize("blocker", list(BLOCKERS))
 @pytest.mark.parametrize("scorer", sorted(SCORERS))
-def test_candidates_parity(sides, scorer, blocker, case):
-    """salt_target_pairs=50 forces every block above 50 pairs into a
+def test_candidates_parity(sides, scorer, blocker, case, monkeypatch):
+    """A salt target of 50 pairs forces every block above 50 pairs into a
     multi-way grid split: the per-group maxima plus the keep_max_score
     window must still give the global per-record max.  Both candidate
     plans must give the same candidates as the explicit block join."""
@@ -147,11 +148,15 @@ def test_candidates_parity(sides, scorer, blocker, case):
         smin = smin.filter(F.pmod(F.col("record_id"), 3) == 0).localCheckpoint()
         residue_rows = smin.count()
         assert 0 < residue_rows <= blocked.SMALL_RESIDUE_ROWS
-    cfg = P.MatchConfig(salt_target_pairs=salt_target_pairs)
+    if salt_target_pairs is not None:
+        monkeypatch.setattr(blocking, "SALT_TARGET_PAIRS", salt_target_pairs)
+    cfg = P.MatchConfig()
     spec, expected = SCORERS[scorer]
     blockers = BLOCKERS[blocker]
     arg = blocker if len(blockers) == 1 else blockers
-    cand, _ = blocked.candidates(spec, smin, rmin, arg, cfg, residue_rows)
+    cand, _, small = blocked.candidates(spec, smin, rmin, arg, cfg,
+                                        residue_rows)
+    assert small == (case == "small")
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert ("FlatMapCoGroupsInPandas" in plan) == (case != "small")
 

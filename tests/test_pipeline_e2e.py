@@ -17,6 +17,7 @@ from address_matcher_spark.operators import blocked
 from address_matcher_spark.operators import fieldmatch as FM
 from address_matcher_spark.plans import pipeline as P
 from address_matcher_spark.session import CODEGEN_CACHE_ENTRIES
+from address_matcher_spark.sources.checkpoint import CheckpointStore
 
 
 @pytest.fixture(scope="module")
@@ -185,7 +186,7 @@ def test_waterfall_jobs_carry_unit_phase_tags(spark, sides):
         sc.setJobDescription(None)
     tags = {d for j, d in _job_descriptions(sc).items() if j > before}
     units = [f"{s}_{lv}" for s, _ in P.SCORERS for lv in P.LEVELS]
-    allowed = {f"waterfall/{p}" for p in ("sides", "broadcast", "prep")} | {
+    allowed = {f"waterfall/{p}" for p in ("sides", "prep")} | {
         f"{u}/{p}" for u in units for p in ("residue", "score")}
     # the 700-record run takes every phase; the first unit has no residue
     want = allowed - {"fuzzy_min/residue"}
@@ -434,8 +435,8 @@ def test_waterfall_one_record_without_block_keys(sides):
                           sides["cfg"], metrics=metrics).toPandas()
     assert len(res) == 0
     assert set(P.RESULT_COLS) <= set(res.columns)
-    assert metrics["broadcast_ref"] is None
-    assert metrics["broadcast_measure_sec"] == 0
+    # the prep job measures it at no extra job; no small unit reads it
+    assert metrics["broadcast_ref"] is True
     assert all(all(p["small_path"]) for p in metrics["passes"])
 
 
@@ -486,6 +487,81 @@ def test_small_unit_reads_duplicate_ref_rows_once(sides, one_record):
         assert g["fuzzy_score"] == b["fuzzy_score"]
         assert g["ref_id"] == b["ref_id"] or (
             b["ref_id"] == rid and g["ref_id"] == twin), (got, base)
+
+
+def _with_smaller_twin(ref, rid: int, twin: int):
+    """ref with a copy of row `rid` under the smaller id `twin` appended
+    last: a duplicate (street_key, reference_mod_address) group whose
+    least ref_id is not the row met first."""
+    return ref.unionByName(
+        ref.filter(F.col("ref_id") == rid).withColumn("ref_id", F.lit(twin)))
+
+
+@pytest.mark.parametrize("plan", ["small", "salted", "waterfall"])
+def test_duplicate_ref_rows_keep_least_ref_id(spark, sides, one_record,
+                                              plan, tmp_path, monkeypatch):
+    """The prep's dedup keeps the least ref_id of a duplicate group, in
+    the small plan, the salted plan (a direct blocked_pass, whose scorer
+    and join-back read the lazy prep apart) and run_waterfall's
+    materialised prep: the record's Street row names the twin, with the
+    score it had, and no row names the twin's duplicate."""
+    one, base = one_record
+    rid = next(r["ref_id"] for r in base if r["match_method"] == "unit_st")
+    twin = rid - 10**12
+    rmin, rfull = (_with_smaller_twin(sides[k], rid, twin)
+                   for k in ("ref_min", "ref_full"))
+    cfg = sides["cfg"]
+    if plan == "waterfall":
+        # > SMALL_RESIDUE_ROWS records, so the prep job runs; stop after
+        # unit 1 and read its commit
+        rec = one.first()["record_id"]
+        keep = ((F.pmod(F.col("record_id"), 3) == 0)
+                | (F.col("record_id") == rec))
+        searches = [sides[k].filter(keep)
+                    for k in ("search_min", "search_full")]
+        monkeypatch.setattr(P, "_matched_all", lambda wins, rows: True)
+        store = CheckpointStore(str(tmp_path / "ckpt"), "dup")
+        metrics: dict = {}
+        P.run_waterfall(*searches, rmin, rfull, cfg, store=store,
+                        metrics=metrics)
+        rows = metrics["passes"][0]["residue_rows"]
+        assert rows > blocked.SMALL_RESIDUE_ROWS
+        prep = store.read(spark, "ref_prep").filter(
+            F.col("ref_id").isin(rid, twin)).collect()
+        assert {r["ref_id"] for r in prep} == {twin}
+        assert {(r["__level"], r["__blocker"]) for r in prep} >= {
+            (lv, "Street") for lv in P.LEVELS}
+        unit = store.read(spark, "pass_fuzzy_min").filter(
+            F.col("record_id") == rec)
+        got = sorted(unit.select("record_id", "ref_id", "match_method",
+                                 "fuzzy_score").collect(),
+                     key=lambda r: r["match_method"])
+        names = {"fuzzy_min_pc": "unit_pc", "fuzzy_min_st": "unit_st"}
+        got = [(r["ref_id"], names[r["match_method"]], r["fuzzy_score"])
+               for r in got]
+    else:
+        out = blocked.blocked_pass(P.FUZZY, one, rmin, _UNIT[0], cfg,
+                                   _UNIT[1],
+                                   residue_rows=1 if plan == "small" else None)
+        got = sorted(((r["ref_id"], r["match_method"], r["fuzzy_score"])
+                      for r in out.collect()), key=lambda r: r[1])
+    want = [(twin if r["ref_id"] == rid else r["ref_id"], r["match_method"],
+             r["fuzzy_score"]) for r in base]
+    assert got == want, (got, want)
+
+
+def test_prep_ref_once_equals_union(sides, one_record):
+    """The materialised prep's one-read form keeps the rows of the
+    per-blocker union, duplicate groups included."""
+    rid = next(r["ref_id"] for r in one_record[1]
+               if r["match_method"] == "unit_st")
+    ref = _with_smaller_twin(sides["ref_min"], rid, rid - 10**12)
+    blockers = ("Postcode", "Street")
+    union = blocked.prep_ref(ref, blockers)
+    once = blocked.prep_ref_once(ref, blockers)
+    assert sorted(once.columns) == sorted(union.columns)
+    assert sorted(once.select(*union.columns).collect()) == sorted(
+        union.collect())
 
 
 @pytest.mark.parametrize("scorer", [P.FUZZY, FM.FIELD], ids=["fuzzy", "field"])
