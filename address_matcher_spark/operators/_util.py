@@ -29,8 +29,9 @@ def row_bytes(names: tuple) -> Column:
     """A row's estimated serialized size over the columns `names`: each
     field's string form in bytes plus 16 (UnsafeRow field overhead and
     object headers, roughly).  Summed, it sizes a broadcast:
-    should_broadcast sums it in its own job, and run_waterfall's ref prep
-    job sums it per level in its observe()."""
+    should_broadcast sums it in its own job; run_waterfall's ref prep
+    job (per level) and blocked.candidates' prep checkpoint sum it in
+    their observe()."""
     return functools.reduce(operator.add, [
         F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
         + F.lit(16) for c in names
@@ -41,22 +42,37 @@ def should_broadcast(df: DataFrame, max_bytes: int) -> bool:
     """True when df's summed row_bytes fit under the explicit-broadcast
     ceiling; anything larger is left to a shuffled equi-join (AQE may
     still convert it if its own byte stats allow).  One aggregate job
-    over the whole frame.  run_waterfall takes the same sum from the ref
-    prep job it already runs, so only a direct blocked_pass caller that
-    passes no decision runs this."""
+    over the whole frame.  run_waterfall and blocked_pass take the same
+    sum from the job that materialises the ref prep, so neither runs
+    this; it serves a caller deciding before a pass (bench.py)."""
     est = df.agg(F.sum(row_bytes(tuple(df.columns)))).first()[0]
     return int(est or 0) <= max_bytes
 
 
 def scoring_npart(spark, residue_rows: int | None = None) -> int:
     """Partition count for the cogrouped scoring stage of both scorers
-    (blocked.candidates): flat defaultParallelism.  Since the round-5
-    kernel, per-task fixed costs dominate and mirrored A/B
-    (scripts/tune_block_score.py) found one partition per core best at
-    every width tried (sf0.1, local[32]: mult1 4.7 s, mult8 5.5 s,
-    mult32 10.0 s; history in docs/PLANS.md, "Round 5 (cont.)").  A
-    unit that knows its residue gets ~1 salt group per 64 search rows,
-    clamped to [1, dp] (batch_skewed seed 1, local[4]: levels 3-4 hold
+    (blocked.candidates): flat defaultParallelism, RE-MEASURED after the
+    round-5 exact matrix char bound made the fuzzy kernel ~10× faster per
+    pair.
+
+    History: with the old kernel the stage was kernel-dominated and the
+    last-wave straggler tail (∝ 1/(npart/dp) waves) was ~10% of the
+    wall, so measured over-decomposition (up to 32×) paid.  The fast
+    kernel inverts the trade: per-task fixed costs (Arrow batch setup,
+    Python worker round-trip, scheduling) now dominate, and mirrored
+    A/B (scripts/tune_block_score.py) finds mult 1 best at EVERY width
+    and corpus size tried — sf0.1 58.7M pairs local[32]: mult1 4.7s /
+    mult2 4.6s / mult8 5.5s / mult32 10.0s; local[8]: mult1 4.06s best;
+    324M pairs local[32]: mult1 6.9s vs mult4 7.9s vs mult16 9.1s
+    (47M pairs/s).  Salt-group imbalance no longer needs scheduler help:
+    the groups' pair sums even out over ~235 groups/32 tasks, and the
+    pairs the tail used to wait on now score 10× faster.
+
+    Residue-scaled path (later waterfall passes): small residues still
+    deserve fewer tasks than cores — ~1 salt group per 64 search rows,
+    clamped to [1, dp].  run_waterfall passes each unit's exact residue
+    count, so a late level holding a few hundred rows gets a few
+    partitions (perfbench batch_skewed seed 1, local[4]: levels 3-4 hold
     359/357 rows, 4 partitions)."""
     dp = spark.sparkContext.defaultParallelism
     if residue_rows is None:
@@ -67,15 +83,25 @@ def scoring_npart(spark, residue_rows: int | None = None) -> int:
 def pack_group_count(spark, npart: int, side_rows: int | None = None,
                      rows_cap: int = 100_000,
                      ref_rows: int | None = None) -> int:
-    """Bucket count for blocking.pack_groups: 4 per scoring partition,
-    enough for the scheduler to balance, since every bucket is one
-    Arrow/pandas UDF dispatch (~ms of fixed cost) that packing exists to
-    amortise.  Scale guard: the cogroup materialises BOTH sides of a
-    group in the Python worker at once, so the count rises until
-    neither side (the larger of side_rows and ref_rows) averages more
-    than rows_cap rows per bucket.  Heavy blocks' salted cells are
-    bounded by the salting pair target instead.  At bench scale the
-    guard never binds."""
+    """Bucket count for blocking.pack_groups: enough buckets for the
+    scheduler to balance (4 per scoring partition) but no more — every
+    bucket is one Arrow/pandas UDF dispatch (~ms of fixed cost), which is
+    exactly what packing exists to amortise.
+
+    Scale guard: the cogrouped applyInPandas materialises BOTH sides of
+    one group in the Python worker at once, so the count is raised until
+    neither side expects more than ~rows_cap rows per bucket on average —
+    sized from the MAX of the two sides, since the reference side is
+    usually the larger one (sizing from the search residue alone left
+    ref-side bucket memory unbounded).  The packed (unsalted-block)
+    component of a bucket carries ~side_total/n_groups rows from each
+    side, which is what this bounds; heavy blocks' salted cells land on
+    distinct (bucket, si, sj) keys and are independently bounded by the
+    grid-salting pair target (blocking.salt_for_cogroup_adaptive), so
+    replication inflates the salt axes, not the packed axis.  At bench
+    scale the guard never binds (45k rows / 128 buckets); at 100 TB it
+    keeps worker memory flat as npart stays pinned to cluster cores
+    while data grows."""
     g = npart * 4
     bound = max(int(side_rows or 0), int(ref_rows or 0))
     if bound:

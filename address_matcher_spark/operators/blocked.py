@@ -26,11 +26,11 @@ non-empty key, tagged in the column __blocker, and every step keys on
               Arrow cross-score
   tail        join-back to the search side and to the ref rows the
               scorer read, on (ref_id, __blocker) (small: the collected
-              rows, both sides broadcast; salted: the prep, broadcast
-              by the measured decision) → D1-D7 decisions (the row's
-              blocker's rules) → optional wratio tie-break, from the
-              plain ratio the scorer returned with its tied candidates
-              (__ratio) → W1 best
+              rows, both sides broadcast; salted: the materialised prep,
+              by its measured broadcast decision) → D1-D7 decisions (the
+              row's blocker's rules) → optional wratio tie-break, from
+              the plain ratio the scorer returned with its tied
+              candidates (__ratio) → W1 best
 
 Why 127: _util.scoring_npart gives a residue below 128 rows ONE scoring
 partition already, so the salted plan spends a salting-stats job, two
@@ -51,7 +51,7 @@ from typing import Callable
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -117,20 +117,16 @@ def prep_ref_for_block(ref_std: DataFrame, blocker: str) -> DataFrame:
     key = _KEYS[blocker]
     r = ref_std.filter(_has_key(key)).withColumnRenamed(key, "__bk")
     r = r.drop(*(set(_KEYS.values()) - {key}))
-    return _least_ref_id(r, ("__bk", "reference_mod_address"))
-
-
-def _least_ref_id(r: DataFrame, group: tuple) -> DataFrame:
-    """The survivor rule: the row of least ref_id of each group."""
-    rank, first = _rank_by_ref_id(group)
+    rank, first = _least_ref_id()
     return r.withColumn("__rank", rank).filter(first).drop("__rank")
 
 
 @cached
-def _rank_by_ref_id(group: tuple) -> tuple:
+def _least_ref_id() -> tuple:
     # Spark plans rank 1 as a per-group limit, which runs before the
     # shuffle as dropDuplicates' partial aggregate did
-    by_ref_id = Window.partitionBy(*group).orderBy("ref_id")
+    by_ref_id = Window.partitionBy("__bk", "reference_mod_address") \
+        .orderBy("ref_id")
     return F.row_number().over(by_ref_id), F.col("__rank") == 1
 
 
@@ -162,34 +158,13 @@ def prep_ref(ref_std: DataFrame, blocker) -> DataFrame:
     each, tagged with its __blocker and unioned.  run_waterfall
     materialises both levels' preps in one job (each tagged with its
     __level) and threads each level's into every unit of that level; a
-    lazy prep (bucketed reference, small run) lets each blocker's key
-    filter reach its own branch's ref scan."""
+    lazy prep (bucketed reference) lets each blocker's key filter reach
+    its own branch's ref scan, and the salted plan materialises it
+    itself (candidates)."""
     return _union(
         prep_ref_for_block(ref_std, b).withColumn("__blocker", _tag(b))
         for b in _names(blocker)
     )
-
-
-def prep_ref_once(ref_std: DataFrame, blockers: tuple) -> DataFrame:
-    """prep_ref's rows from ONE read of ref_std: each row is emitted once
-    per blocker whose key it holds (an explode), then deduplicated within
-    its blocker.  run_waterfall materialises it: over a lazy ref side,
-    prep_ref's union would standardise each row once per blocker.  A
-    lazy prep keeps the union, whose per-branch key filter reaches the
-    scan."""
-    keep = tuple(c for c in ref_std.columns if c not in _KEYS.values())
-    keyed = ref_std.select(*columns(keep), _blocker_keys(blockers))
-    keyed = keyed.select(*columns((*keep, "__k.__blocker", "__k.__bk")))
-    return _least_ref_id(keyed.filter(_has_key("__bk")),
-                         ("__blocker", "__bk", "reference_mod_address"))
-
-
-@cached
-def _blocker_keys(blockers: tuple) -> Column:
-    """One (__blocker, __bk) struct per blocker, exploded as __k."""
-    return F.explode(F.array(*[
-        F.struct(F.lit(b).alias("__blocker"), F.col(_KEYS[b]).alias("__bk"))
-        for b in blockers])).alias("__k")
 
 
 def _per_blocker(score):
@@ -256,14 +231,16 @@ def candidates(
     ref_prepped: DataFrame | None = None,
     ref_rows: int | None = None,
     ref_hist: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, bool]:
+) -> tuple[DataFrame, DataFrame, bool, bool | None]:
     """Candidate stage: every search record's max-score ref candidates
     (ties kept) within its block of each blocker, as (record_id, ref_id,
     fuzzy_score, __blocker, __ratio); the ref prep rows the scorer read,
     which the tail joins the candidates back to on (ref_id, __blocker);
-    and whether the small plan ran.  The small plan's ref rows are the
-    block-filtered prep it collected, as a local relation; the salted
-    plan's are the prep itself.  blocker: one name or a tuple of them.
+    whether the small plan ran; and whether those ref rows fit a
+    broadcast (None: not measured).  The small plan's ref rows are the
+    block-filtered prep it collected, as a local relation, so they fit.
+    The salted plan's are the prep itself.  blocker: one name or a tuple
+    of them.
 
     residue_rows: the search records left; at most SMALL_RESIDUE_ROWS
     selects the small plan, and it sizes the salted plan.  run_waterfall
@@ -277,7 +254,12 @@ def candidates(
     histogram — run_waterfall builds each once per level and reuses them
     across units, so the salting stats job stops recomputing the ref
     aggregation once per unit (equivalence in
-    blocking.salt_for_cogroup_adaptive)."""
+    blocking.salt_for_cogroup_adaptive).  Without ref_prepped the salted
+    plan materialises the prep it builds, as the salting stats, the
+    scorer and the tail each read it: one job, whose observe() also
+    counts it (ref_rows) and sums the row_bytes of the rows the tail
+    joins back to against cfg.broadcast_max_bytes.  A given ref_prepped
+    is not measured."""
     blockers = _names(blocker)
     r = prep_ref(ref_std, blockers) if ref_prepped is None else ref_prepped
     score = _per_blocker(scorer.score(cfg))
@@ -296,7 +278,7 @@ def candidates(
         # coalesce(1): one partition, so the tail's windows need no exchange
         cand = spark.createDataFrame(cand, _CAND_SCHEMA).coalesce(1)
         return (select.keep_max_score(cand, _RECORD),
-                spark.createDataFrame(ref_tbl, rk.schema), True)
+                spark.createDataFrame(ref_tbl, rk.schema), True, True)
 
     # Scoring is the reference's cdist re-expressed for Spark: cogroup
     # both sides by (block, salt) and cross-score INSIDE an Arrow UDF.
@@ -308,6 +290,13 @@ def candidates(
     # sides to the per-block stats of blocks present on BOTH sides, so
     # ref blocks nobody searches never ship (J3/X3) without a separate
     # semi-join.
+    fits = None
+    if ref_prepped is None:
+        obs = Observation()
+        back = tuple(c for c in r.columns if c != "__bk")
+        r = r.observe(obs, *_prep_size(back)).localCheckpoint()
+        ref_rows = int(obs.get["rows"])
+        fits = int(obs.get["bytes"] or 0) <= cfg.broadcast_max_bytes
     s = _search_side(scorer, search_std, blockers)
     spark = s.sparkSession
     s_salted, r_salted, extra = blocking.salt_for_cogroup_adaptive(
@@ -340,7 +329,15 @@ def candidates(
         s_salted.groupBy(*keys).cogroup(r_salted.groupBy(*keys))
         .applyInPandas(score, _CAND_SCHEMA)
     )
-    return select.keep_max_score(cand, _RECORD), r, False
+    return select.keep_max_score(cand, _RECORD), r, False, fits
+
+
+@cached
+def _prep_size(back: tuple) -> tuple:
+    """A prep's observe() aggregates: its rows, and the summed row_bytes
+    of the columns `back` the tail joins back to."""
+    return (F.count(F.lit(1)).alias("rows"),
+            F.sum(_util.row_bytes(back)).alias("bytes"))
 
 
 @cached
@@ -399,24 +396,25 @@ def blocked_pass(
     its partitioning: the windows below need no exchange.
 
     broadcast_ref: the salted plan's ref join-back decision.
-    run_waterfall passes the one its ref prep job measured; a DIRECT
-    caller passing None gets a fresh byte measurement of the prep
-    (should_broadcast), never an unconditional broadcast (a multi-GB ref
-    side would OOM the executors).  The small plan never reads it."""
-    shortlist, ref_read, small = candidates(
+    run_waterfall passes the one its ref prep job measured.  None: the
+    decision candidates measured when it materialised the prep itself (a
+    direct caller's, or a bucketed reference's); a ref_prepped passed
+    without one gets no hint and Spark picks the join, never an
+    unconditional broadcast (a multi-GB ref side would OOM the
+    executors).  The small plan never reads it."""
+    shortlist, ref_read, small, fits = candidates(
         scorer, search_std, ref_std, blocker, cfg, residue_rows,
         ref_prepped, ref_rows, ref_hist,
     )
+    if small or broadcast_ref is None:
+        broadcast_ref = fits
     search_back = search_std.drop(*_KEYS.values())
     # the prep minus its key holds ref_std's columns, a row per blocker
     ref_back = ref_read.drop("__bk")
-    if not small and broadcast_ref is None:
-        broadcast_ref = _util.should_broadcast(
-            ref_back, cfg.broadcast_max_bytes)
     shortlist = shortlist.join(
         F.broadcast(search_back) if small else search_back, "record_id")
     shortlist = shortlist.join(
-        F.broadcast(ref_back) if small or broadcast_ref else ref_back,
+        F.broadcast(ref_back) if broadcast_ref else ref_back,
         ["ref_id", "__blocker"])
     blockers, names = _names(blocker), _names(pass_name)
     shortlist = verify.add_decisions(

@@ -36,12 +36,25 @@ SALT_TARGET_PAIRS = 250_000
 
 def salt_target_pairs_for(spark, cfg) -> int:
     """Target cross-product size per salt group for the cogrouped scorer:
-    SALT_TARGET_PAIRS, a flat 250k (the arguments are unused; the
-    signature stays for callers that size salting as the product does).
-    Mirrored A/B after the round-5 kernel (scripts/tune_block_score.py)
-    measured the target flat within noise from 62.5k to 1M at local[8]
-    and local[32], 250k the consistent best; it also keeps the grid
-    salting's replication small (docs/PLANS.md, "Round 5 (cont.)")."""
+    SALT_TARGET_PAIRS, a flat 250k, RE-MEASURED after the round-5 exact
+    matrix char bound.  The arguments are unused; the signature stays for
+    callers that size salting as the product does.
+
+    History: the round-4 kernel streamed ~24 MB of float64 matrices per
+    250k-pair group and profiling showed DRAM saturation at 32
+    concurrent workers, so the default was concurrency-adaptive
+    (~2M/parallelism, clamped [32k, 250k]) to keep grids cache-resident
+    at high width.  The round-5 kernel halves the matrix bytes (int32
+    decision matrices) and skips the LCS/string stage entirely, so the
+    bandwidth term shrank below the per-group fixed costs (frozenset
+    build, inverted index, Arrow slices) that FAVOUR bigger groups:
+    mirrored A/B at mult-1 decomposition (scripts/tune_block_score.py)
+    measures the target flat within noise from 62.5k to 1M at both
+    local[8] and local[32], with 250k the consistent best at both
+    widths and at 324M pairs (47M pairs/s).  250k also keeps the
+    grid salting's replication small (salt_for_cogroup_adaptive splits
+    a heavy block into ~pairs/target groups, and each side is replicated
+    across that group grid)."""
     return SALT_TARGET_PAIRS
 
 

@@ -323,13 +323,14 @@ def run_waterfall(
     BUCKETED tables (sources/bucketing.ensure_bucketed_ref), whose scan
     carries a HashPartitioning that a store.write/localCheckpoint would
     destroy (every per-pass ref dedup/histogram would shuffle again).
-    Their preps stay lazy, with no measured size: a salted unit's
-    join-back carries no broadcast hint, and Spark picks the join.
+    Their preps stay lazy: a salted unit materialises its level's prep
+    itself and measures its broadcast decision in that job
+    (blocked.candidates).
 
     metrics: pass a dict to collect per-stage run counters — wall seconds,
     residue rows, matched counts (per unit and per pass) and the
     candidate plan per pass (`small_path`), the broadcast decision
-    (`broadcast_ref`, None when no prep job measured it), the seconds of
+    (`broadcast_ref`, None when the prep job did not run), the seconds of
     the ref prep job (`prep_sec`) and the classes Janino compiled during
     the call (`codegen_compiles`).
     They are kept in process only, for ops dashboards and for profiling
@@ -414,8 +415,8 @@ def run_waterfall(
         # One ref prep per level, shared by both scorers' units: the
         # reference's standing datasets, prepared once
         # (tools/matcher_funcs.py:752-772).  ONE job standardises the
-        # reference (each row once per level, blocked.prep_ref_once), tags
-        # each level's prep with its __level and materialises the union
+        # reference, preps each level (blocked.prep_ref), tags each
+        # level's prep with its __level and materialises the union
         # (store key `ref_prep`), plus one (__level, __blocker, __bk)
         # histogram every unit's salting stats reuse.  Its observe()
         # counts each level's rows (pack_group_count's ref-side memory
@@ -425,8 +426,8 @@ def run_waterfall(
         # (docs/PLANS.md, round 6).  A bucketed ref keeps a lazy prep
         # (persisting would destroy its scan's exchange-free
         # HashPartitioning; a small unit's block filter reaches the
-        # scan): no job, and no measured size, so a salted join-back over
-        # it gets no broadcast hint and Spark picks the join.
+        # scan): no job here, and a salted unit materialises and measures
+        # it itself (blocked.candidates).
         blockers = tuple(b for _, b in BLOCKERS)
         preps: dict = {}
         bc_ref = None
@@ -434,7 +435,7 @@ def run_waterfall(
         if not ref_materialized:
             sc.setJobDescription("waterfall/prep")
             both = functools.reduce(DataFrame.unionByName, [
-                blocked.prep_ref_once(sides[lv][1], blockers)
+                blocked.prep_ref(sides[lv][1], blockers)
                 .withColumn("__level", F.lit(lv)) for lv in LEVELS
             ])
             back = tuple(c for c in both.columns
@@ -505,7 +506,7 @@ def run_waterfall(
             sc.setJobDescription(f"{sname}_{level}/score")
             out = blocked.blocked_pass(
                 scorer, residue, sides[level][1], blockers, cfg, names,
-                bool(bc_ref), residue_rows, ref_prepped, ref_rows, ref_hist,
+                bc_ref, residue_rows, ref_prepped, ref_rows, ref_hist,
             )
             result_cols, win_counts, is_pass, full = _unit_cols(names)
             obs = Observation()

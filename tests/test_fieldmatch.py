@@ -154,7 +154,7 @@ def test_candidates_parity(sides, scorer, blocker, case, monkeypatch):
     spec, expected = SCORERS[scorer]
     blockers = BLOCKERS[blocker]
     arg = blocker if len(blockers) == 1 else blockers
-    cand, _, small = blocked.candidates(spec, smin, rmin, arg, cfg,
+    cand, _, small, _ = blocked.candidates(spec, smin, rmin, arg, cfg,
                                         residue_rows)
     assert small == (case == "small")
     plan = cand._jdf.queryExecution().executedPlan().toString()

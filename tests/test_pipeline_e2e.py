@@ -4,6 +4,7 @@ byte-identity, and the matched/unmatched split."""
 
 from __future__ import annotations
 
+import dataclasses
 import re
 import threading
 
@@ -501,9 +502,9 @@ def _with_smaller_twin(ref, rid: int, twin: int):
 def test_duplicate_ref_rows_keep_least_ref_id(spark, sides, one_record,
                                               plan, tmp_path, monkeypatch):
     """The prep's dedup keeps the least ref_id of a duplicate group, in
-    the small plan, the salted plan (a direct blocked_pass, whose scorer
-    and join-back read the lazy prep apart) and run_waterfall's
-    materialised prep: the record's Street row names the twin, with the
+    the small plan, the salted plan (a direct blocked_pass, which
+    materialises the prep it builds) and run_waterfall's materialised
+    prep: the record's Street row names the twin, with the
     score it had, and no row names the twin's duplicate."""
     one, base = one_record
     rid = next(r["ref_id"] for r in base if r["match_method"] == "unit_st")
@@ -550,18 +551,34 @@ def test_duplicate_ref_rows_keep_least_ref_id(spark, sides, one_record,
     assert got == want, (got, want)
 
 
-def test_prep_ref_once_equals_union(sides, one_record):
-    """The materialised prep's one-read form keeps the rows of the
-    per-blocker union, duplicate groups included."""
-    rid = next(r["ref_id"] for r in one_record[1]
-               if r["match_method"] == "unit_st")
-    ref = _with_smaller_twin(sides["ref_min"], rid, rid - 10**12)
-    blockers = ("Postcode", "Street")
-    union = blocked.prep_ref(ref, blockers)
-    once = blocked.prep_ref_once(ref, blockers)
-    assert sorted(once.columns) == sorted(union.columns)
-    assert sorted(once.select(*union.columns).collect()) == sorted(
-        union.collect())
+_PREP_WINDOW = re.compile(
+    r"windowspecdefinition\(__bk#\d+, reference_mod_address#")
+
+
+def test_salted_pass_materialises_its_own_prep(sides):
+    """A direct salted blocked_pass over a lazy prep materialises it once:
+    neither the scorer nor the join-back recomputes its dedup window.
+    The same job measures the join-back's broadcast decision: with no
+    decision passed, the pass broadcasts the ref rows when they fit
+    cfg.broadcast_max_bytes and not otherwise."""
+    cfg = sides["cfg"]
+
+    def plan(cfg, broadcast_ref=None, ref_prepped=None):
+        out = blocked.blocked_pass(
+            P.FUZZY, sides["search_min"], sides["ref_min"], _UNIT[0], cfg,
+            _UNIT[1], broadcast_ref, ref_prepped=ref_prepped)
+        return out._jdf.queryExecution().optimizedPlan().toString()
+
+    lazy = blocked.prep_ref(sides["ref_min"], _UNIT[0])
+    assert _PREP_WINDOW.search(plan(cfg, False, lazy))
+    measured = plan(cfg)
+    assert not _PREP_WINDOW.search(measured), measured
+    hints = {bc: plan(cfg, bc).count("strategy=broadcast")
+             for bc in (False, True)}
+    assert hints[True] == hints[False] + 1
+    assert measured.count("strategy=broadcast") == hints[True]
+    too_big = dataclasses.replace(cfg, broadcast_max_bytes=0)
+    assert plan(too_big).count("strategy=broadcast") == hints[False]
 
 
 @pytest.mark.parametrize("scorer", [P.FUZZY, FM.FIELD], ids=["fuzzy", "field"])
