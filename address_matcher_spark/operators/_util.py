@@ -17,7 +17,23 @@ def ensure_parallel(df: DataFrame) -> DataFrame:
     shingle explodes) a small parquet scan is otherwise 1-2 tasks however
     many cores exist; AQE can't fix it because it sizes stages by input
     BYTES, and these stages are cheap in bytes but hot in CPU.  A no-op on
-    real multi-split inputs, so it costs nothing at 100 TB."""
+    real multi-split inputs, so it costs nothing at 100 TB.
+
+    A request-sized local input is left alone: when df's optimized plan is
+    one LocalRelation of at most blocked.SMALL_RESIDUE_ROWS rows (a
+    pandas createDataFrame, filtered and projected), the rows are already
+    in the driver and a run that small takes the driver-scored plan in
+    every waterfall unit, so partitioning buys nothing.  Unpartitioned,
+    Spark's ConvertToLocalRelation evaluates the projections stacked on
+    it (co-filter, standardisation) in the optimizer: a checkpoint of
+    them is one job, with no shuffle and no generated code.  Both checks
+    read the plan; neither runs a job."""
+    from address_matcher_spark.operators.blocked import SMALL_RESIDUE_ROWS
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if (plan.getClass().getSimpleName() == "LocalRelation"
+            and plan.data().size() <= SMALL_RESIDUE_ROWS):
+        return df
     want = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < want:
         return df.repartition(want)

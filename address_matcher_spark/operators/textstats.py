@@ -114,12 +114,10 @@ def rolling_min_fingerprint(text: Column, gram: int = 5) -> Column:
 
 def document_stats(docs: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id") -> DataFrame:
-    # compute-heavy per row (one md5 per char 5-gram): round-robin the scan
-    # when it has fewer splits than the cluster has slots, else the whole
-    # projection runs on a single parquet split's task
-    want = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < want:
-        docs = docs.repartition(want)
+    # compute-heavy per row (one md5 per char 5-gram): spread the scan
+    # over the cluster's slots, else the whole projection runs on a single
+    # parquet split's task
+    docs = ensure_parallel(docs)
     t = F.col(text_col)
     # STAGED: the normalised text is projected once and referenced 3×
     # in the second stage (md5 fingerprint, the per-position gram lambda,

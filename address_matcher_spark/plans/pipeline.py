@@ -113,7 +113,10 @@ def prepare_search(df: DataFrame, cfg: MatchConfig) -> DataFrame:
     blocking key (tools/preparation.py:53-118, tools/standardise.py:19-36).
 
     The standardisation layer is ~150 regex ops per row; ensure_parallel
-    keeps a small input (one parquet split) off a single core."""
+    keeps a small scan (one parquet split) off a single core.  A
+    request-sized local input (a LocalRelation of at most
+    blocked.SMALL_RESIDUE_ROWS rows) stays unpartitioned, so the optimizer
+    folds these projections into it and a checkpoint runs no shuffle."""
     cleaned, non_empty, flags, keys = _search_prep(
         tuple(cfg.address_cols), cfg.postcode_col)
     df = _util.ensure_parallel(df)
@@ -160,8 +163,10 @@ def prepare_sides(
     exclusion when a prior results table is supplied.  Both run on the RAW
     frames so the heavy standardisation projections only touch surviving
     rows.  The co-filter's area collects run here, leaving `isin` filters:
-    a side's plan is scan → filter → projections, which ensure_parallel's
-    probe only plans and a side checkpoint runs once.
+    a side's plan is scan → filter → projections, which ensure_parallel
+    only plans (it reads the optimized plan and the partition count) and
+    a side checkpoint runs once.  Over a request's local rows the whole
+    side folds to one LocalRelation.
 
     cofilter_ref=False keeps the FULL reference (no ref collect): required
     when the ref sides are materialised for cross-run reuse (bucketed

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -199,6 +200,80 @@ def test_prior_exclusion_is_one_anti_join(spark, parquet_sides, tmp_path):
     _, labeled = C.exclude_previously_matched(base, prior)
     assert sorted(labeled.select("record_id", C.EXCLUSION_COL).collect()) == [
         (1, C.EXCL_PRIOR), (2, C.INCLUDED), (4, C.INCLUDED)]
+
+
+def _request(spark, search_df, ids=(1,)):
+    """Search rows as a lookup request builds them: a pandas frame, which
+    createDataFrame turns into a LocalRelation."""
+    pdf = search_df.toPandas()
+    pdf["url"] = "record://" + pdf["record_id"].astype(str)
+    return spark.createDataFrame(pdf[pdf["record_id"].isin(ids)])
+
+
+def test_request_side_folds_to_one_local_relation(spark, search_df, ref_df):
+    """A one-row request is left unpartitioned, so the optimizer folds
+    the co-filter and the whole standardisation cascade into one
+    LocalRelation: no Exchange, and its checkpoint is one job."""
+    s, _ = P.prepare_sides(_request(spark, search_df), ref_df,
+                           P.MatchConfig(), cofilter_ref=False)
+    side = P.standardise_search(s, True)
+    assert _plan_nodes(side) == ["LocalRelation"]
+    assert "Exchange" not in side._jdf.queryExecution().executedPlan().toString()
+    assert _checkpoint_jobs(spark.sparkContext, side, "folded-request") == 1
+    assert [r["record_id"] for r in side.collect()] == [1]
+
+
+def test_larger_or_scanned_inputs_stay_partitioned(spark, tmp_path,
+                                                   monkeypatch):
+    """Above SMALL_RESIDUE_ROWS, or read from a file, an input keeps the
+    partition-count rule.  A local scan already splits its rows over up
+    to defaultParallelism partitions, so the row bound only shows where
+    the cluster has more slots than the relation has rows: with 256
+    slots, 128 local rows plan RoundRobinPartitioning(256) and 127 stay
+    one LocalRelation.  A single-split parquet input plans a round-robin
+    repartition to defaultParallelism."""
+    from pyspark import SparkContext
+
+    from address_matcher_spark.operators import _util, blocked
+
+    rows = blocked.SMALL_RESIDUE_ROWS + 1
+
+    def local(n):
+        return spark.createDataFrame(pd.DataFrame({"a": range(n)}))
+
+    def executed(df):
+        return _util.ensure_parallel(df)._jdf.queryExecution() \
+            .executedPlan().toString()
+
+    dp = spark.sparkContext.defaultParallelism
+    local(rows).coalesce(1).write.parquet(str(tmp_path / "one_split"))
+    scan = spark.read.parquet(str(tmp_path / "one_split"))
+    assert scan.rdd.getNumPartitions() == 1
+    assert f"RoundRobinPartitioning({dp})" in executed(scan)
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda sc: 256))
+    assert "RoundRobinPartitioning(256)" in executed(local(rows))
+    assert _plan_nodes(_util.ensure_parallel(local(rows - 1))) == [
+        "LocalRelation"]
+
+
+@pytest.mark.parametrize("level", [False, True])
+def test_folded_and_partitioned_sides_equal(spark, search_df, ref_df,
+                                            tmp_path, level):
+    """The same request rows standardised as a folded LocalRelation and
+    as a partitioned parquet scan give the same side at both levels."""
+    cfg = P.MatchConfig()
+    local = _request(spark, search_df, ids=(1, 2, 3, 4))
+    local.write.parquet(str(tmp_path / "request"))
+    scan = spark.read.parquet(str(tmp_path / "request"))
+    sides = []
+    for raw in (local, scan):
+        s, _ = P.prepare_sides(raw, ref_df, cfg, cofilter_ref=False)
+        sides.append(P.standardise_search(s, level))
+    assert _plan_nodes(sides[0]) == ["LocalRelation"]
+    assert "LocalRelation" not in _plan_nodes(sides[1])
+    folded, partitioned = (sorted(map(tuple, s.collect())) for s in sides)
+    assert folded == partitioned and len(folded) == 3
 
 
 def test_area_cofilter_empty_ref_blank_postcodes(spark):
